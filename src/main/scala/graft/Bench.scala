@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): run every registry query against
   * SPARK_GRAFT_SF_DIR, print ONE JSON line with per-query seconds.
   *
@@ -19,32 +17,9 @@ object Bench {
     val only: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     def queries = SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    // dev knobs: SPARK_GRAFT_AQE=false measures the no-AQE posture;
-    // SPARK_GRAFT_EXTRA_CONF="k=v;k=v" A/B-tests arbitrary SQL confs
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the Janino compile cache defaults to 100 classes; a 100+-query
-      // suite evicts EVERY query's codegen units between rounds, so each
-      // measured run re-pays ~50-150 ms of compilation — that thrash was
-      // ~30% of suite wall time (measured 36.9 s → 25.6 s back-to-back).
-      // Static conf: must be set before the session exists.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.trim.nonEmpty => builder.config(k.trim, v)
-        case Array(s) if s.trim.isEmpty     => // empty segment (trailing ';')
-        case _ => sys.error(
-          s"SPARK_GRAFT_EXTRA_CONF segment '$kv' is not key=value")
-      }
-    })
-    val spark = builder.getOrCreate()
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(math.min(32, Runtime.getRuntime.availableProcessors()))
+    val spark = Session.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     // scan each base table once (steady-state posture, identical every

@@ -100,6 +100,26 @@ object MonitorDsl {
       }
   }
 
+  /** A monitor expression ready for a plan: its reductions (sorted), one
+    * aggregate column per reduction over `(ts, value)` named
+    * [[redCol]], and the `passed` column over those aggregates. */
+  final case class Compiled(reductions: Seq[String], aggs: Seq[Column], passed: Column)
+
+  /** The one compile step every monitor path (run, backtest, streaming)
+    * shares; each caller adds only its own grouping keys. Rejects a bad
+    * expression, and one that references no reduction (its `passed`
+    * would be a constant), with a named IllegalArgumentException. */
+  def compileMonitor(spec: graft.model.MonitorSpec): Compiled = {
+    val what = s"monitor ${spec.id} '${spec.name}'"
+    val ast = parse(spec.monitorExpr).fold(
+      err => throw new IllegalArgumentException(s"$what: bad expr: $err"), identity)
+    val reds = reductions(ast).toSeq.sorted
+    require(reds.nonEmpty, s"$what: expression '${spec.monitorExpr}' " +
+      "references no reduction (sum/mean/min/max/count/median/stddev/last/first/pNN)")
+    Compiled(reds, reds.map(r => reductionAgg(r, col("value"), col("ts")).as(redCol(r))),
+      compile(ast))
+  }
+
   /** The aggregate expression for one reduction name, over `valueCol`.
     * `tsCol` orders first/last. */
   def reductionAgg(name: String, valueCol: Column, tsCol: Column): Column = name match {

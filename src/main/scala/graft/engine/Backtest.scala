@@ -41,12 +41,7 @@ object Backtest {
     val clipped = source.scan(new Timestamp(from.getTime - winS * 1000L), until)
     val series = Planner.seriesOf(clipped, spec)
 
-    val ast = MonitorDsl.parse(spec.monitorExpr).fold(
-      err => throw new IllegalArgumentException(
-        s"monitor ${spec.id} '${spec.name}': bad expr: $err"),
-      identity)
-    val reds = MonitorDsl.reductions(ast).toSeq.sorted
-    require(reds.nonEmpty, s"monitor ${spec.id}: no reductions in '${spec.monitorExpr}'")
+    val m = MonitorDsl.compileMonitor(spec)
 
     // grid ends whose window [end-win, end] contains ts:
     //   max(ts, from) ≤ end ≤ min(ts + win, until), end ≡ from (mod step)
@@ -69,11 +64,9 @@ object Backtest {
       .filter(col("ts") <= timestamp_seconds(col("_wend")) &&
         col("ts") >= timestamp_seconds(col("_wend") - lit(winS)))
 
-    val aggs = reds.map(r =>
-      MonitorDsl.reductionAgg(r, col("value"), col("ts")).as(MonitorDsl.redCol(r)))
     exploded.groupBy(col("_wend"), col("_target"), col("metric"))
-      .agg(aggs.head, aggs.tail: _*)
-      .withColumn("passed", MonitorDsl.compile(ast))
+      .agg(m.aggs.head, m.aggs.tail: _*)
+      .withColumn("passed", m.passed)
       .withColumn("job_id", lit(spec.id))
       .withColumn("window_end", timestamp_seconds(col("_wend")))
       .drop("_wend", "_target")

@@ -73,21 +73,11 @@ object Planner {
     val series = seriesOf(clipWindow(source, spec, now), spec)
 
     // L3: aggregate exactly the reductions the monitor expression uses.
-    val ast = MonitorDsl.parse(spec.monitorExpr).fold(
-      err => throw new IllegalArgumentException(
-        s"monitor ${spec.id} '${spec.name}': bad expr: $err"),
-      identity)
-    val reds = MonitorDsl.reductions(ast).toSeq.sorted
-    require(reds.nonEmpty,
-      s"monitor ${spec.id} '${spec.name}': expression '${spec.monitorExpr}' " +
-        "references no reduction (sum/mean/min/max/count/median/stddev/last/first/pNN)")
-    val aggs = reds.map(r =>
-      MonitorDsl.reductionAgg(r, col("value"), col("ts")).as(MonitorDsl.redCol(r))) ++ extraAggs
-    val reduced = series.groupBy(col("_target"), col("metric"))
+    val m = MonitorDsl.compileMonitor(spec)
+    val aggs = m.aggs ++ extraAggs
+    series.groupBy(col("_target"), col("metric"))
       .agg(aggs.head, aggs.tail: _*)
-
-    reduced
-      .withColumn("passed", MonitorDsl.compile(ast))
+      .withColumn("passed", m.passed)
       .withColumn("job_id", lit(spec.id))
       .withColumn("window_end", lit(until))
       .drop("_target")

@@ -219,44 +219,25 @@ object Scheduler {
           .map { case (id, vs) => id -> Runner.jobStatus(vs) }))
 
   /** Full E1 loop (reference stages 1-5): run → persist → throttle →
-    * deliver. The throttle clock lives in the same parquet state table
-    * the streaming runner uses ([[graft.state.AlertThrottle
-    * .loadStateTable]]), so a job alerted by either path stays throttled
-    * on both. State I/O is serialized driver-side (monitor-count rows —
-    * the lock guards a metadata table, never data-scale work). */
+    * deliver. Throttle and delivery run through [[graft.state
+    * .AlertThrottle.cycle]], the one cycle the streaming runner also
+    * uses, over one state table, so a job alerted by either path stays
+    * throttled on both. A cohort tick runs ONE cycle for all its events:
+    * one state-table read and overwrite per tick, not one per spec. */
   def forSourceWithAlerts(spark: SparkSession, source: MetricSource,
       jobDataPath: String, jobErrorsPath: String,
       alertStatePath: String, deliveryPath: String,
       sinks: Seq[graft.state.AlertSink],
       parallelism: Int = 4): Scheduler = {
-    import graft.state.{AlertDispatcher, AlertThrottle}
-    // ONE load→replay→save cycle for a whole cohort of events, under
-    // the JVM-GLOBAL state-table lock (AlertThrottle.stateTableLock —
-    // the streaming runner shares the same table, and a per-instance
-    // lock could not stop the two paths interleaving and losing
-    // whichever update saved first). Batching also matters on its own:
-    // the per-spec form did a full parquet read+overwrite of the state
-    // table once PER SPEC per tick — a 500-monitor cohort paid 1000
-    // serialized state-I/O jobs where one replay over all K events has
-    // identical semantics (AlertThrottle.replay already folds per job).
+    import graft.state.AlertThrottle
     def throttleAndDeliverAll(specsWithStatus: Seq[(MonitorSpec, String)],
         fireAt: Timestamp): Unit = {
       val events = specsWithStatus.map { case (spec, status) =>
         AlertThrottle.RunEvent(spec.id, fireAt,
           failed = status != JobStatus.Success, spec.errorTimeoutMinutes)
       }
-      if (events.nonEmpty) {
-        val byId = specsWithStatus.map { case (sp, _) => sp.id -> sp }.toMap
-        AlertThrottle.stateTableLock.synchronized {
-          val init = AlertThrottle.loadStateTable(spark, alertStatePath)
-          val (alerts, newState) = AlertThrottle.replay(events, init)
-          if (alerts.nonEmpty) {
-            val deliveries = AlertDispatcher.dispatch(alerts, byId.get, sinks)
-            AlertDispatcher.persist(spark, deliveries, deliveryPath)
-          }
-          AlertThrottle.saveStateTable(spark, alertStatePath, newState)
-        }
-      }
+      val byId = specsWithStatus.map { case (sp, _) => sp.id -> sp }.toMap
+      AlertThrottle.cycle(spark, alertStatePath, events, byId.get, sinks, Some(deliveryPath))
     }
     new Scheduler(
       runJob = (spec, fireAt) => {

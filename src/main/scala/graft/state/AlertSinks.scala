@@ -95,8 +95,7 @@ object AlertDispatcher {
     * default for a real HTTP/SMTP sink; 0 keeps injected-transport
     * tests instant). `sleep` is injectable so specs assert the timing
     * without waiting. Unknown channels fall back to the "log" sink (and
-    * say so in the record); a job with no keys defaults to "log:" —
-    * same default as [[AlertThrottle.route]]. */
+    * say so in the record); a job with no keys defaults to "log:". */
   def dispatch(alerts: Seq[Alert], specOf: Long => Option[MonitorSpec],
       sinks: Seq[AlertSink], maxAttempts: Int = 3, backoffMs: Long = 0,
       sleep: Long => Unit = Thread.sleep): Seq[Delivery] = {

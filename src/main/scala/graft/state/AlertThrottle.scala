@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.model.JobStatus
+import graft.model.{JobStatus, MonitorSpec}
 
 /** Alert throttling + status transitions (ST5): the reference tracks
   * `job_errors.last_alerted_at` (db/schema.rb:43) and suppresses
@@ -114,20 +114,42 @@ object AlertThrottle {
       }
   }
 
+  /** JVM-global lock for the load→replay→save cycle over the shared
+    * state table: the streaming runner and the scheduler both advertise
+    * the same path, and interleaved cycles would lose throttle updates
+    * (or overwrite mid-read). Only [[cycle]] takes it, around the WHOLE
+    * cycle. Scope honesty: a JVM lock serializes the single-driver
+    * deployment this library targets; two separate driver JVMs sharing
+    * one path would need a storage-level lease. */
+  private val stateTableLock = new Object
+
+  /** The one throttle-and-deliver cycle of every monitor path (the
+    * scheduler and the streaming runner), under [[stateTableLock]]:
+    * load the state table, [[replay]] `events` over it, hand the fired
+    * alerts to `record` (streaming writes its per-batch alerts table
+    * there), deliver them through [[AlertDispatcher.dispatch]] and
+    * append the delivery records to `deliveryPath`, then save the new
+    * state. Every fired alert is dispatched: with no `sinks` the
+    * dispatcher's stderr log channel delivers it, so a page is never
+    * dropped without a trace. */
+  def cycle(spark: SparkSession, statePath: String, events: Seq[RunEvent],
+      specOf: Long => Option[MonitorSpec], sinks: Seq[AlertSink],
+      deliveryPath: Option[String], record: Seq[Alert] => Unit = _ => ()): Unit =
+    if (events.nonEmpty) stateTableLock.synchronized {
+      val (alerts, newState) = replay(events, loadStateTable(spark, statePath))
+      if (alerts.nonEmpty) {
+        record(alerts)
+        val deliveries = AlertDispatcher.dispatch(alerts, specOf, sinks)
+        deliveryPath.foreach(AlertDispatcher.persist(spark, deliveries, _))
+      }
+      saveStateTable(spark, statePath, newState)
+    }
+
   /** Parquet-backed throttle-state table (job_id → status + last-alerted
     * ms — both, so a post-recovery alert is labeled 'enter-failure'
     * across restarts). Bounded by monitor count — metadata scale. Shared
     * by the streaming runner and the scheduler so a job alerted by one
-    * path stays throttled on the other. */
-  /** JVM-global lock for the load→replay→save cycle over the shared
-    * state table: the streaming runner and the scheduler both advertise
-    * the same path, and interleaved cycles would lose throttle updates
-    * (or overwrite mid-read). Callers hold this around the WHOLE cycle.
-    * Scope honesty: a JVM lock serializes the single-driver deployment
-    * this library targets; two separate driver JVMs sharing one path
-    * would need a storage-level lease. */
-  val stateTableLock = new Object
-
+    * path stays throttled on the other. Read and written by [[cycle]]. */
   def loadStateTable(spark: SparkSession,
       path: String): Map[Long, ThrottleState] = {
     // only a MISSING table reads as empty; an IO/corruption error must
@@ -148,21 +170,5 @@ object AlertThrottle {
     st.toSeq.map { case (j, s) => (j, s.status, s.lastAlertedAtMillis) }
       .toDF("job_id", "status", "last_alerted_ms")
       .coalesce(1).write.mode("overwrite").parquet(path)
-  }
-
-  /** Route an alert to its channels — parse `alert_keys`
-    * (reference db/schema.rb:59) prefixes. Side-effecting sink, kept
-    * out of the plan; the default "log:" channel just returns the
-    * formatted line. */
-  def route(alertKeys: Seq[String], alert: Alert): Seq[(String, String)] = {
-    val msg = s"[job ${alert.jobId}] ${alert.transition} at ${alert.at}"
-    val keys = if (alertKeys.isEmpty) Seq("log:") else alertKeys
-    keys.map { k =>
-      val channel = k.takeWhile(_ != ':')
-      channel match {
-        case "mailto" | "pagerduty" | "campfire" | "log" => (channel, msg)
-        case other => ("log", s"(unknown channel '$other') $msg")
-      }
-    }
   }
 }

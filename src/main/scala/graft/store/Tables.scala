@@ -25,13 +25,11 @@ object Tables {
   @volatile var cacheEnabled: Boolean = false
   private val cached = scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
 
-  /** Rows per cache partition for `cpuDense` tables (dev-tunable via
-    * SPARK_GRAFT_DENSE_ROWS). Measured on the 23 document-suite bench
-    * queries at sf0.1, min-of-2 per point: off 15.2 s, 512 13.9 s,
-    * 1024 13.4–13.6 s (twice), 2048 14.0 s — 1024 balances fold
-    * parallelism against map-task/shuffle-block fan. */
-  private val denseRows: Long = math.max(1L,
-    sys.env.get("SPARK_GRAFT_DENSE_ROWS").map(_.toLong).getOrElse(1024L))
+  /** Rows per cache partition for `cpuDense` tables. Measured on the 23
+    * document-suite bench queries at sf0.1, min-of-2 per point: off
+    * 15.2 s, 512 13.9 s, 1024 13.4–13.6 s (twice), 2048 14.0 s — 1024
+    * balances fold parallelism against map-task/shuffle-block fan. */
+  private val denseRows = 1024L
 
   def table(spark: SparkSession, dir: String, name: String,
       cpuDense: Boolean = false): DataFrame =

@@ -9,7 +9,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.dsl.MonitorDsl
 import graft.model.MonitorSpec
 import graft.state.AlertThrottle
-import graft.state.AlertThrottle.{Alert, RunEvent}
+import graft.state.AlertThrottle.RunEvent
 
 /** Continuous monitor evaluation (ST2/ST3/ST4/ST5 end-to-end): the
   * reference's cron-pull loop re-expressed as ONE Structured Streaming
@@ -36,20 +36,15 @@ object StreamingRunner {
   /** Stage 1: closed-window verdict stream for one monitor. */
   def verdictStream(stream: DataFrame, spec: MonitorSpec,
       slide: String, lateness: String = "2 minutes"): DataFrame = {
-    val ast = MonitorDsl.parse(spec.monitorExpr).fold(
-      err => throw new IllegalArgumentException(s"monitor ${spec.id}: $err"),
-      identity)
-    val reds = MonitorDsl.reductions(ast).toSeq.sorted
-    val aggs = reds.map(r =>
-      MonitorDsl.reductionAgg(r, col("value"), col("ts")).as(MonitorDsl.redCol(r)))
+    val m = MonitorDsl.compileMonitor(spec)
     stream
       .withWatermark("ts", lateness)
       .groupBy(window(col("ts"), s"${spec.minutes} minutes", slide).as("w"), col("metric"))
-      .agg(aggs.head, aggs.tail: _*)
-      .withColumn("passed", MonitorDsl.compile(ast))
+      .agg(m.aggs.head, m.aggs.tail: _*)
+      .withColumn("passed", m.passed)
       .withColumn("job_id", lit(spec.id))
       .select(Seq(col("job_id"), col("metric"), col("w.end").as("window_end"),
-        col("passed")) ++ reds.map(r => col(MonitorDsl.redCol(r))): _*)
+        col("passed")) ++ m.reductions.map(r => col(MonitorDsl.redCol(r))): _*)
   }
 
   /** Stage 1 MULTIPLEXED: ONE stateful query evaluates N monitors that
@@ -67,16 +62,12 @@ object StreamingRunner {
     require(specs.nonEmpty, "multiplexedVerdictStream: no specs")
     require(specs.map(_.minutes).distinct.size == 1,
       s"one cohort = one window length; got minutes=${specs.map(_.minutes).distinct}")
-    val asts = specs.map { sp =>
-      sp.id -> MonitorDsl.parse(sp.monitorExpr).fold(
-        err => throw new IllegalArgumentException(s"monitor ${sp.id}: $err"),
-        identity)
-    }.toMap
-    val allReds = asts.values.flatMap(MonitorDsl.reductions).toSeq.distinct.sorted
-    val aggs = allReds.map(r =>
-      MonitorDsl.reductionAgg(r, col("value"), col("ts")).as(MonitorDsl.redCol(r)))
-    val passedByJob = specs.foldLeft(lit(null).cast("boolean")) { (acc, sp) =>
-      when(col("job_id") === sp.id, MonitorDsl.compile(asts(sp.id))).otherwise(acc)
+    val compiled = specs.map(sp => sp.id -> MonitorDsl.compileMonitor(sp))
+    val aggOf = compiled.flatMap { case (_, m) => m.reductions.zip(m.aggs) }.toMap
+    val allReds = aggOf.keys.toSeq.sorted
+    val aggs = allReds.map(aggOf)
+    val passedByJob = compiled.foldLeft(lit(null).cast("boolean")) { case (acc, (id, m)) =>
+      when(col("job_id") === id, m.passed).otherwise(acc)
     }
     stream
       .withWatermark("ts", lateness)
@@ -87,9 +78,6 @@ object StreamingRunner {
       .select(Seq(col("job_id"), col("metric"), col("w.end").as("window_end"),
         col("passed")) ++ allReds.map(r => col(MonitorDsl.redCol(r))): _*)
   }
-
-  // throttle-state table lives in AlertThrottle.load/saveStateTable —
-  // shared with the Scheduler so both paths honor one throttle clock
 
   /** Stage 2 wiring: start the full pipeline, appending fired alerts to
     * `alertsPath` parquet.
@@ -103,12 +91,13 @@ object StreamingRunner {
     * parquet files into `alertsPath/batch_id=-1/` (they rejoin the
     * table with batch_id -1) or point new runs at a fresh alertsPath.
     *
-    * When `sinks` is non-empty, fired alerts are
-    * ALSO delivered through [[graft.state.AlertDispatcher]] (S7: channel
-    * sinks with bounded retries) and the per-channel delivery records
+    * Each micro-batch runs the scheduler's own throttle-and-deliver
+    * cycle ([[AlertThrottle.cycle]]): fired alerts are ALSO delivered
+    * through `sinks` (S7: channel sinks with bounded retries; no sinks →
+    * the stderr log channel) and the per-channel delivery records
     * appended to `deliveryPath` — streaming and scheduled monitors share
-    * one delivery path. Returns the running query (AvailableNow for
-    * tests, ProcessingTime in deployment). */
+    * one throttle clock and one delivery path. Returns the running
+    * query (AvailableNow for tests, ProcessingTime in deployment). */
   def start(spark: SparkSession, stream: DataFrame, spec: MonitorSpec,
       slide: String, alertsPath: String, statePath: String, checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow(),
@@ -153,35 +142,14 @@ object StreamingRunner {
           .map(r => RunEvent(r.getLong(0), r.getTimestamp(1), r.getBoolean(2),
             specOf(r.getLong(0)).map(_.errorTimeoutMinutes).getOrElse(60)))
           .toSeq
-        if (events.nonEmpty) {
-          // the whole load→replay→save cycle under the JVM-global lock:
-          // the scheduler shares this state table, and interleaved
-          // cycles lost whichever update saved first
-          AlertThrottle.stateTableLock.synchronized {
-            val init = AlertThrottle.loadStateTable(spark, statePath)
-            val (alerts, newState) = AlertThrottle.replay(events, init)
-            if (alerts.nonEmpty) {
-              // per-batch OVERWRITE keyed by micro-batch id: a crash
-              // after this write but before the checkpoint commits
-              // re-delivers the batch, and the retry REPLACES its rows
-              // instead of appending duplicates (read the table with
-              // spark.read.parquet(alertsPath) — partition discovery
-              // adds the batch_id column). Sink DELIVERY below remains
-              // at-least-once: a retried batch can re-page — the
-              // standard alerting trade; dedup on (jobId, at) at the
-              // receiver if exact-once pages matter.
-              alerts.toDF().write.mode("overwrite")
-                .parquet(s"$alertsPath/batch_id=$batchId")
-              if (sinks.nonEmpty) {
-                val deliveries = graft.state.AlertDispatcher.dispatch(
-                  alerts, specOf, sinks)
-                deliveryPath.foreach(p =>
-                  graft.state.AlertDispatcher.persist(spark, deliveries, p))
-              }
-            }
-            AlertThrottle.saveStateTable(spark, statePath, newState)
-          }
-        }
+        // per-batch OVERWRITE keyed by micro-batch id: a crash after
+        // the alerts write but before the checkpoint commits re-delivers
+        // the batch, and the retry REPLACES its rows instead of appending
+        // duplicates. Sink DELIVERY remains at-least-once: a retried
+        // batch can re-page — the standard alerting trade; dedup on
+        // (jobId, at) at the receiver if exact-once pages matter.
+        AlertThrottle.cycle(spark, statePath, events, specOf, sinks, deliveryPath,
+          record = _.toDF().write.mode("overwrite").parquet(s"$alertsPath/batch_id=$batchId"))
       }
       .start()
   }

@@ -3,11 +3,12 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import graft.engine.{Planner, Runner}
+import graft.engine.{Backtest, Planner, Runner}
 import graft.model.{JobStatus, MonitorSpec}
 import graft.state.AlertThrottle
 import graft.state.AlertThrottle.RunEvent
-import graft.store.Tables
+import graft.store.{MetricSource, Tables}
+import graft.streaming.StreamingRunner
 
 class EngineSpec extends SparkTestBase {
   import spark.implicits._
@@ -206,10 +207,23 @@ class EngineSpec extends SparkTestBase {
   }
 
   test("reduction-free monitor expression is rejected with a named error") {
-    val e = intercept[IllegalArgumentException] {
-      Runner.evaluate(spark, store, spec("1 < 2"), Timestamp.valueOf("2024-01-15 12:00:00"))
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx = spark.sqlContext
+    val at = Timestamp.valueOf("2024-01-15 12:00:00")
+    val stream = MemoryStream[(String, Timestamp, Double)].toDF().toDF("metric", "ts", "value")
+    // every monitor path compiles through MonitorDsl.compileMonitor; a
+    // mixed cohort must not hide the bad spec behind its neighbours
+    val paths: Seq[(String, () => Any)] = Seq(
+      "evaluate" -> (() => Runner.evaluate(spark, store, spec("1 < 2"), at)),
+      "backtest" -> (() => Backtest.sweep(MetricSource.ofFrame(store), spec("1 < 2"),
+        Timestamp.valueOf("2024-01-15 00:00:00"), at, 60)),
+      "verdictStream" -> (() => StreamingRunner.verdictStream(stream, spec("1 < 2"), "5 minutes")),
+      "multiplexed" -> (() => StreamingRunner.multiplexedVerdictStream(stream,
+        Seq(spec("mean > 0"), spec("1 < 2").copy(id = 2)), "5 minutes")))
+    paths.foreach { case (name, run) =>
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains("references no reduction"), s"$name: ${e.getMessage}")
     }
-    assert(e.getMessage.contains("references no reduction"))
   }
 
   test("ST5 replay labels a post-recovery alert 'enter-failure' across carried state") {

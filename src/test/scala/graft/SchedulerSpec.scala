@@ -174,6 +174,25 @@ class SchedulerSpec extends SparkTestBase {
     sch.shutdown()
   }
 
+  test("no sinks: a fired alert still goes out on the log channel and is recorded") {
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("graft-sched-nosinks").toString
+    val points = Seq(("m.a", Timestamp.valueOf("2024-01-15 11:30:00"), 1.0))
+      .toDF("metric", "ts", "value")
+    val sch = Scheduler.forSourceWithAlerts(spark, graft.store.MetricSource.ofFrame(points),
+      s"$tmp/job_data", s"$tmp/job_errors", s"$tmp/alert_state", s"$tmp/deliveries",
+      sinks = Nil, parallelism = 1)
+    sch.register(MonitorSpec(id = 9, name = "nosinks", targets = Seq("m.a"),
+      minutes = 720, toDate = None, cronExpr = "* * * * *",
+      monitorExpr = "mean > 1000000", alertKeys = Seq("mailto:a@b")),
+      t("2024-01-15 11:59:00"))
+    sch.tick(t("2024-01-15 12:00:00")); sch.awaitIdle()
+    val d = spark.read.parquet(s"$tmp/deliveries").collect()
+    assert(d.map(r => (r.getAs[Long]("jobId"), r.getAs[String]("channel"),
+      r.getAs[Boolean]("delivered"))).toSeq == Seq((9L, "log", true)), d.toSeq.toString)
+    sch.shutdown()
+  }
+
   test("throttle clock is shared: a streaming-path alert suppresses the scheduled path") {
     val tmp = Files.createTempDirectory("graft-shared-throttle").toString
     val statePath = s"$tmp/alert_state"

@@ -7,7 +7,6 @@ import org.apache.spark.sql.functions._
 import graft.engine.Telemetry
 import graft.series.{HoltWinters, SeriesOps}
 import graft.sources.GraphiteRaw
-import graft.state.AlertThrottle
 
 class SourcesSpec extends SparkTestBase {
   import spark.implicits._
@@ -70,13 +69,6 @@ class SourcesSpec extends SparkTestBase {
       Thread.sleep(100); got = Telemetry.drain()
     }
     assert(got.nonEmpty && got.forall(!_.failed))
-  }
-
-  test("S7 alert routing parses channel prefixes, unknown → log") {
-    val a = AlertThrottle.Alert(1L, ts("00:00"), "enter-failure")
-    val routed = AlertThrottle.route(Seq("mailto:x@y", "pagerduty:KEY", "bogus:z"), a)
-    assert(routed.map(_._1) == Seq("mailto", "pagerduty", "log"))
-    assert(AlertThrottle.route(Nil, a).map(_._1) == Seq("log"))
   }
 
   private def ts(hm: String): Timestamp = Timestamp.valueOf(s"2024-01-01 $hm:00")

@@ -3,20 +3,14 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session per suite (lazy, UTC, low shuffle). */
+/** One shared local session per suite (lazy, [[Session]] confs, 4 cores). */
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.session
 }
 
 object SparkTestBase {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Session.local(4)
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -153,4 +153,19 @@ class StreamingRunnerSpec extends SparkTestBase {
     assert(d.filter("delivered").count() == 2)
     assert(sent.size == 2)
   }
+
+  test("no sinks: a fired alert still goes out on the log channel and is recorded") {
+    val tmp = Files.createTempDirectory("graft-sr-nosinks").toString
+    implicit val sqlCtx = spark.sqlContext
+    val ms = MemoryStream[(String, Timestamp, Double)]
+    ms.addData((0 to 30).map(m => ("m.a", ts(m), 1.0))) // failing windows
+    val q = StreamingRunner.start(spark, ms.toDF().toDF("metric", "ts", "value"),
+      spec.copy(alertKeys = Seq("mailto:a@b")), slide = "5 minutes",
+      s"$tmp/alerts", s"$tmp/state", s"$tmp/ckpt", deliveryPath = Some(s"$tmp/deliveries"))
+    q.awaitTermination()
+    val alerts = spark.read.parquet(s"$tmp/alerts").count()
+    val d = spark.read.parquet(s"$tmp/deliveries").collect()
+    assert(alerts == 1 && d.map(r => (r.getAs[String]("channel"),
+      r.getAs[Boolean]("delivered"))).toSeq == Seq(("log", true)), d.toSeq.toString)
+  }
 }
