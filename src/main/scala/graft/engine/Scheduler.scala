@@ -6,7 +6,7 @@ import java.util.concurrent.{ConcurrentHashMap, ExecutorService, Executors, Time
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 import graft.dsl.Cron
 import graft.model.{JobStatus, MonitorSpec}
@@ -176,18 +176,25 @@ final class Scheduler(
 
   /** Persist `next_run` per job (the reference keeps it in the jobs
     * table, db/schema.rb:62) so a restarted scheduler resumes the same
-    * schedule instead of re-deriving "next after boot". */
+    * schedule instead of re-deriving "next after boot". Versioned
+    * through [[graft.store.VersionedTable]]: a failed or interrupted
+    * save leaves the previous version loadable. */
   def saveState(spark: SparkSession, path: String): Unit = {
     import spark.implicits._
-    slots.asScala.toSeq
+    val df = slots.asScala.toSeq
       .map { case (id, s) => (id, s.nextRun.map(_.toEpochMilli): Option[Long]) }
       .toDF("job_id", "next_run_millis")
-      .write.mode(SaveMode.Overwrite).parquet(path)
+    graft.store.VersionedTable.publish(spark, path)(df.write.parquet(_))
   }
 
+  /** Restore persisted `next_run`s onto registered jobs. A path that was
+    * never saved restores nothing: every job keeps the schedule its
+    * registration computed. */
   def loadState(spark: SparkSession, path: String): Unit = {
     import spark.implicits._
-    spark.read.parquet(path).as[(Long, Option[Long])].collect().foreach {
+    val saved = graft.store.VersionedTable.read(spark, path)
+      .fold(Array.empty[(Long, Option[Long])])(_.as[(Long, Option[Long])].collect())
+    saved.foreach {
       case (id, next) =>
         val s = slots.get(id)
         // apply only a CONCRETE persisted fire time to active jobs: a

@@ -210,103 +210,35 @@ object CdxStore {
     require(graft.store.Bucketing.recoverCompacted(spark, table),
       s"no such cdx store: $table")
     require(blocks > 0, s"blocks must be positive, got $blocks")
-    // VERSIONED publish: an in-place overwrite would delete blocks a
-    // reader is mid-scan over (and a crash mid-rebuild would leave
-    // blocks/ and cluster.idx disagreeing). Each rebuild writes a
-    // complete v=N, then atomically swaps the `_current` pointer;
-    // versions older than the PREVIOUS are swept, so a reader that
-    // resolved the root just before the swap keeps a consistent layout
-    // for the duration of one whole rebuild cycle.
-    val conf = spark.sparkContext.hadoopConfiguration
-    val base = new org.apache.hadoop.fs.Path(dir)
-    val fs = base.getFileSystem(conf)
-    // what readers CURRENTLY resolve — read BEFORE publishing: the
-    // sweep must key on the pointer, not on version numbers (a crashed
-    // rebuild leaves an unpublished partial with the HIGHEST number;
-    // sweeping "all but the last two numbers" would then delete the
-    // version readers actually resolve while retaining the useless
-    // partial)
-    val prevPublished = publishedVersion(fs, base)
-    val existing = listVersions(fs, base)
-    val next = existing.foldLeft(-1L)(_ max _) + 1
-    val root = s"$dir/v=$next"
-    spark.table(table)
-      .repartitionByRange(blocks, col("urlkey"))
-      .sortWithinPartitions("urlkey")
-      .write.mode("overwrite").parquet(s"$root/blocks")
-    spark.read.parquet(s"$root/blocks")
-      .groupBy(input_file_name().as("file"))
-      .agg(min("urlkey").as("k_min"), max("urlkey").as("k_max"),
-        count(lit(1)).as("n_rows"))
-      .repartition(1) // block-count-sized: the whole point is it's tiny
-      .write.mode("overwrite").parquet(s"$root/cluster.idx")
-    publishAndSweep(spark, fs, base, next, prevPublished, existing)
-  }
-
-  /** Versions present on disk (published or not). */
-  private def listVersions(fs: org.apache.hadoop.fs.FileSystem,
-      base: org.apache.hadoop.fs.Path): Seq[Long] =
-    if (!fs.exists(base)) Seq.empty[Long]
-    else fs.listStatus(base).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("v="))
-      .flatMap(n => scala.util.Try(n.stripPrefix("v=").toLong).toOption)
-
-  /** The version `_current` points at, if any. */
-  private def publishedVersion(fs: org.apache.hadoop.fs.FileSystem,
-      base: org.apache.hadoop.fs.Path): Option[Long] = {
-    val cur = new org.apache.hadoop.fs.Path(base, "_current")
-    if (!fs.exists(cur)) None
-    else {
-      val in = fs.open(cur)
-      val v = try {
-        val bos = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](256)
-        var n = in.read(buf)
-        while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
-        new String(bos.toByteArray,
-          java.nio.charset.StandardCharsets.UTF_8).trim
-      } finally in.close()
-      scala.util.Try(v.stripPrefix("v=").toLong).toOption
+    // VERSIONED publish ([[graft.store.VersionedTable]]): an in-place
+    // overwrite would delete blocks a reader is mid-scan over (and a
+    // crash mid-rebuild would leave blocks/ and cluster.idx disagreeing)
+    graft.store.VersionedTable.publish(spark, dir, referencedVersions(spark, _)) { root =>
+      spark.table(table)
+        .repartitionByRange(blocks, col("urlkey"))
+        .sortWithinPartitions("urlkey")
+        .write.mode("overwrite").parquet(s"$root/blocks")
+      spark.read.parquet(s"$root/blocks")
+        .groupBy(input_file_name().as("file"))
+        .agg(min("urlkey").as("k_min"), max("urlkey").as("k_max"),
+          count(lit(1)).as("n_rows"))
+        .repartition(1) // block-count-sized: the whole point is it's tiny
+        .write.mode("overwrite").parquet(s"$root/cluster.idx")
     }
   }
 
-  /** Versions whose block FILES a version's cluster.idx references —
-    * an incremental refresh ([[refreshRangeLayout]]) reuses untouched
-    * block files in place, so a live index may point into OLDER version
-    * directories; those must survive the sweep. */
-  private def referencedVersions(spark: SparkSession, dir: String,
-      v: Long): Set[Long] = {
-    val idx = s"$dir/v=$v/cluster.idx"
+  /** Versions whose block FILES a published root's cluster.idx
+    * references — an incremental refresh ([[refreshRangeLayout]])
+    * reuses untouched block files in place, so a live index may point
+    * into OLDER version directories; those must survive the sweep. */
+  private def referencedVersions(spark: SparkSession, root: String): Set[Long] = {
     val re = java.util.regex.Pattern.compile("/v=(\\d+)/blocks/")
-    spark.read.parquet(idx).select("file").collect().iterator
+    spark.read.parquet(s"$root/cluster.idx").select("file").collect().iterator
       .map(_.getString(0))
       .flatMap { f =>
         val m = re.matcher(f)
         if (m.find()) Some(m.group(1).toLong) else None
       }.toSet
-  }
-
-  /** Atomically swap `_current` to `v=next`, then sweep: every version
-    * except the new one, the PREVIOUSLY PUBLISHED one (a reader that
-    * resolved the pointer just before the swap keeps a consistent
-    * layout for one whole rebuild cycle), and any version either of
-    * their indexes still references (file reuse) is deleted —
-    * including unpublished partials from crashed rebuilds. */
-  private def publishAndSweep(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, base: org.apache.hadoop.fs.Path,
-      next: Long, prevPublished: Option[Long], existing: Seq[Long]): Unit = {
-    AtomicSink.writeCommitted(fs, new org.apache.hadoop.fs.Path(base, "_current"),
-        attemptId = next) { tmp =>
-      val out = fs.create(tmp, true)
-      try out.write(s"v=$next".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
-    val dir = base.toString
-    val keep = (Set(next) ++ prevPublished) ++
-      referencedVersions(spark, dir, next) ++
-      prevPublished.toSet.flatMap((p: Long) => referencedVersions(spark, dir, p))
-    existing.filterNot(keep).foreach(v =>
-      fs.delete(new org.apache.hadoop.fs.Path(base, s"v=$v"), true))
   }
 
   /** INCREMENTAL range-layout refresh — the rebuild-cost closure for
@@ -334,15 +266,11 @@ object CdxStore {
       delta: DataFrame, blocks: Int = 64): Unit = {
     require(graft.store.Bucketing.recoverCompacted(spark, table),
       s"no such cdx store: $table")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val base = new org.apache.hadoop.fs.Path(dir)
-    val fs = base.getFileSystem(conf)
-    val prevPublished = publishedVersion(fs, base)
-    if (prevPublished.isEmpty)
-      return exportRangeLayout(spark, table, dir, blocks)
-    val prev = prevPublished.get
+    // a pre-versioning layout resolves to `dir` itself: full export
+    val prevRoot = graft.store.VersionedTable.current(spark, dir).filter(_ != dir)
+    if (prevRoot.isEmpty) return exportRangeLayout(spark, table, dir, blocks)
     // the previous index: sorted disjoint ranges (block-count-sized)
-    val prevIdx = spark.read.parquet(s"$dir/v=$prev/cluster.idx")
+    val prevIdx = spark.read.parquet(s"${prevRoot.get}/cluster.idx")
       .select("file", "k_min", "k_max", "n_rows")
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2),
         r.getLong(3)))
@@ -367,91 +295,74 @@ object CdxStore {
             (col("__hi").isNull || col("urlkey") < col("__hi")))
         .select("__blk").distinct().collect().map(_.getInt(0))
     if (affected.isEmpty) return // nothing new: keep the current version
-    val existing = listVersions(fs, base)
-    val next = existing.foldLeft(-1L)(_ max _) + 1
-    val root = s"$dir/v=$next"
-    // rewrite the affected blocks from the store under their ASSIGNMENT
-    // ranges [k_min(i), k_min(i+1)) — first block unbounded below, last
-    // unbounded above — in ONE JOB, boundary-ALIGNED: a single
-    // range-repartitioned write over scattered affected blocks would
-    // let a sampled partition boundary span untouched blocks' ranges,
-    // and the binary-search lookup (last k_min ≤ key, one candidate)
-    // would then miss keys hiding past a kept entry. So the block id
-    // itself is the partition key: one OR-of-ranges predicate (pushed —
-    // the store scan reads only matching row groups), the broadcast
-    // bounds join tags each row's block, and a hash repartition on the
-    // tag + partitionBy writes exactly one file per block into a
-    // scratch dir, whose part files rename into blocks/ — driver
-    // renames ∝ affected blocks, one Spark job total (the per-block
-    // job loop this replaces scheduled K store scans).
-    val ids = affected.toSeq
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$root/blocks"))
-    val affectedBoundsDf = ids.map { i =>
-      (i, if (i == 0) null else mins(i),
-        if (i == prevIdx.length - 1) null else mins(i + 1))
-    }.toDF("__blk", "__lo", "__hi")
-    val cond = ids.map { i =>
-      val lo = if (i == 0) None else Some(mins(i))
-      val hi = if (i == prevIdx.length - 1) None else Some(mins(i + 1))
-      lo.fold(lit(true))(l => col("urlkey") >= lit(l)) &&
-        hi.fold(lit(true))(h => col("urlkey") < lit(h))
-    }.reduce(_ || _)
-    val scratch = s"$root/_rewrite"
-    spark.table(table).filter(cond)
-      .join(broadcast(affectedBoundsDf),
-        (col("__lo").isNull || col("urlkey") >= col("__lo")) &&
-          (col("__hi").isNull || col("urlkey") < col("__hi")))
-      .drop("__lo", "__hi")
-      .repartition(ids.size, col("__blk"))
-      .sortWithinPartitions(col("__blk"), col("urlkey"))
-      .write.mode("overwrite").partitionBy("__blk").parquet(scratch)
-    val newFiles = ids.map { i =>
-      val part = fs.listStatus(new org.apache.hadoop.fs.Path(s"$scratch/__blk=$i"))
-        .map(_.getPath).filter(_.getName.endsWith(".parquet"))
-      require(part.length == 1, s"block $i: ${part.length} part files")
-      val dest = new org.apache.hadoop.fs.Path(
-        s"$root/blocks", f"block-r$i%05d.parquet")
-      require(fs.rename(part.head, dest), s"rename ${part.head} -> $dest")
-      dest.toString
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    graft.store.VersionedTable.publish(spark, dir, referencedVersions(spark, _)) { root =>
+      // rewrite the affected blocks from the store under their ASSIGNMENT
+      // ranges [k_min(i), k_min(i+1)) — first block unbounded below, last
+      // unbounded above — in ONE JOB, boundary-ALIGNED: a single
+      // range-repartitioned write over scattered affected blocks would
+      // let a sampled partition boundary span untouched blocks' ranges,
+      // and the binary-search lookup (last k_min ≤ key, one candidate)
+      // would then miss keys hiding past a kept entry. So the block id
+      // itself is the partition key: one OR-of-ranges predicate (pushed —
+      // the store scan reads only matching row groups), the broadcast
+      // bounds join tags each row's block, and a hash repartition on the
+      // tag + partitionBy writes exactly one file per block into a
+      // scratch dir, whose part files rename into blocks/ — driver
+      // renames ∝ affected blocks, one Spark job total (the per-block
+      // job loop this replaces scheduled K store scans).
+      val ids = affected.toSeq
+      fs.mkdirs(new org.apache.hadoop.fs.Path(s"$root/blocks"))
+      val affectedBoundsDf = ids.map { i =>
+        (i, if (i == 0) null else mins(i),
+          if (i == prevIdx.length - 1) null else mins(i + 1))
+      }.toDF("__blk", "__lo", "__hi")
+      val cond = ids.map { i =>
+        val lo = if (i == 0) None else Some(mins(i))
+        val hi = if (i == prevIdx.length - 1) None else Some(mins(i + 1))
+        lo.fold(lit(true))(l => col("urlkey") >= lit(l)) &&
+          hi.fold(lit(true))(h => col("urlkey") < lit(h))
+      }.reduce(_ || _)
+      val scratch = s"$root/_rewrite"
+      spark.table(table).filter(cond)
+        .join(broadcast(affectedBoundsDf),
+          (col("__lo").isNull || col("urlkey") >= col("__lo")) &&
+            (col("__hi").isNull || col("urlkey") < col("__hi")))
+        .drop("__lo", "__hi")
+        .repartition(ids.size, col("__blk"))
+        .sortWithinPartitions(col("__blk"), col("urlkey"))
+        .write.mode("overwrite").partitionBy("__blk").parquet(scratch)
+      val newFiles = ids.map { i =>
+        val part = fs.listStatus(new org.apache.hadoop.fs.Path(s"$scratch/__blk=$i"))
+          .map(_.getPath).filter(_.getName.endsWith(".parquet"))
+        require(part.length == 1, s"block $i: ${part.length} part files")
+        val dest = new org.apache.hadoop.fs.Path(
+          s"$root/blocks", f"block-r$i%05d.parquet")
+        require(fs.rename(part.head, dest), s"rename ${part.head} -> $dest")
+        dest.toString
+      }
+      fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
+      val newEntries = spark.read.parquet(newFiles: _*)
+        .groupBy(input_file_name().as("file"))
+        .agg(min("urlkey").as("k_min"), max("urlkey").as("k_max"),
+          count(lit(1)).as("n_rows"))
+      // new index = untouched prev entries (files reused in place) ∪ the
+      // rewritten blocks' entries
+      val kept = prevIdx.zipWithIndex.collect {
+        case ((f, kmin, kmax, n), i) if !affected.contains(i) => (f, kmin, kmax, n)
+      }.toSeq.toDF("file", "k_min", "k_max", "n_rows")
+      kept.unionByName(newEntries)
+        .repartition(1)
+        .write.mode("overwrite").parquet(s"$root/cluster.idx")
     }
-    fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
-    val newEntries = spark.read.parquet(newFiles: _*)
-      .groupBy(input_file_name().as("file"))
-      .agg(min("urlkey").as("k_min"), max("urlkey").as("k_max"),
-        count(lit(1)).as("n_rows"))
-    // new index = untouched prev entries (files reused in place) ∪ the
-    // rewritten blocks' entries
-    import spark.implicits._
-    val kept = prevIdx.zipWithIndex.collect {
-      case ((f, kmin, kmax, n), i) if !affected.contains(i) => (f, kmin, kmax, n)
-    }.toSeq.toDF("file", "k_min", "k_max", "n_rows")
-    kept.unionByName(newEntries)
-      .repartition(1)
-      .write.mode("overwrite").parquet(s"$root/cluster.idx")
-    publishAndSweep(spark, fs, base, next, prevPublished, existing)
   }
 
   /** The published layout root: versioned exports resolve through the
     * `_current` pointer; a pre-versioning layout (blocks/ directly
     * under `dir`) reads as-is. */
-  private[graft] def currentRoot(spark: SparkSession, dir: String): String = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val cur = new org.apache.hadoop.fs.Path(dir, "_current")
-    val fs = cur.getFileSystem(conf)
-    if (!fs.exists(cur)) dir
-    else {
-      val in = fs.open(cur)
-      val v = try {
-        val bos = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](256)
-        var n = in.read(buf)
-        while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
-        new String(bos.toByteArray,
-          java.nio.charset.StandardCharsets.UTF_8).trim
-      } finally in.close()
-      s"$dir/$v"
-    }
-  }
+  private[graft] def currentRoot(spark: SparkSession, dir: String): String =
+    graft.store.VersionedTable.current(spark, dir).getOrElse(dir)
 
   /** Site lookup THROUGH the secondary index: read cluster.idx
     * (kilobytes), keep blocks whose [k_min, k_max] intersects the

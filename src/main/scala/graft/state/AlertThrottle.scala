@@ -131,7 +131,15 @@ object AlertThrottle {
     * append the delivery records to `deliveryPath`, then save the new
     * state. Every fired alert is dispatched: with no `sinks` the
     * dispatcher's stderr log channel delivers it, so a page is never
-    * dropped without a trace. */
+    * dropped without a trace.
+    *
+    * Delivery is AT-LEAST-ONCE. The state is published only after
+    * dispatch and the delivery-audit append, so a cycle that fails in
+    * between (the audit append or the state publish throws) leaves the
+    * state at its previous version: the next failing run of that job
+    * finds it un-alerted and pages again. A page may be sent twice but
+    * is never lost. There is no idempotency key yet; a receiver that
+    * needs exactly-once pages dedups on (job id, run time). */
   def cycle(spark: SparkSession, statePath: String, events: Seq[RunEvent],
       specOf: Long => Option[MonitorSpec], sinks: Seq[AlertSink],
       deliveryPath: Option[String], record: Seq[Alert] => Unit = _ => ()): Unit =
@@ -149,26 +157,23 @@ object AlertThrottle {
     * ms — both, so a post-recovery alert is labeled 'enter-failure'
     * across restarts). Bounded by monitor count — metadata scale. Shared
     * by the streaming runner and the scheduler so a job alerted by one
-    * path stays throttled on the other. Read and written by [[cycle]]. */
+    * path stays throttled on the other. Read and written by [[cycle]],
+    * versioned through [[graft.store.VersionedTable]]: a failed or
+    * interrupted save leaves the previous version loadable. */
   def loadStateTable(spark: SparkSession,
-      path: String): Map[Long, ThrottleState] = {
-    // only a MISSING table reads as empty; an IO/corruption error must
-    // propagate — swallowing it reset every job's throttle clock to
-    // "never alerted" and the next save persisted the wiped state
-    // (alert storm on a transient storage hiccup)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Map.empty
-    else spark.read.parquet(path).collect()
-      .map(r => r.getLong(0) -> ThrottleState(r.getString(1), r.getLong(2)))
-      .toMap
-  }
+      path: String): Map[Long, ThrottleState] =
+    // only a MISSING (never published) table reads as empty; an IO or
+    // corruption error must propagate — swallowing it reset every job's
+    // throttle clock to "never alerted" and the next save persisted the
+    // wiped state (alert storm on a transient storage hiccup)
+    graft.store.VersionedTable.read(spark, path).fold(Map.empty[Long, ThrottleState])(
+      _.collect().map(r => r.getLong(0) -> ThrottleState(r.getString(1), r.getLong(2))).toMap)
 
   def saveStateTable(spark: SparkSession, path: String,
       st: Map[Long, ThrottleState]): Unit = {
     import spark.implicits._
-    st.toSeq.map { case (j, s) => (j, s.status, s.lastAlertedAtMillis) }
+    val df = st.toSeq.map { case (j, s) => (j, s.status, s.lastAlertedAtMillis) }
       .toDF("job_id", "status", "last_alerted_ms")
-      .coalesce(1).write.mode("overwrite").parquet(path)
+    graft.store.VersionedTable.publish(spark, path)(df.coalesce(1).write.parquet(_))
   }
 }

@@ -64,61 +64,14 @@ object Ingest {
   /** Rollup-store compaction — the small-files maintenance job. Every
     * micro-batch appends one file per day partition it touches; after a
     * week of 1-minute triggers a day directory holds thousands of tiny
-    * files and scan planning dominates query time. This rewrites each
-    * (closed) day to ONE file: compacted days are staged to a sibling
-    * directory and swapped in per-day — a crash mid-swap loses no data
-    * (each day is either the old file set or the new one). Row content
-    * is preserved exactly; run it on days the watermark has closed.
-    * Driver-side file moves are per-DAY (bounded), never per-file-row. */
-  def compactRollups(spark: SparkSession, dir: String,
-      beforeDate: Option[java.sql.Date] = None): Unit = {
-    import org.apache.hadoop.fs.Path
-    // Hadoop FS API, not java.nio: with a remote store (hdfs://, s3a://)
-    // the local-path forms silently did nothing — the _spark_metadata
-    // guard never fired (local path never exists) and listFiles()
-    // returned null so no day was ever swapped. Per-day swap via
-    // fs.rename: atomic on HDFS/local; on object stores rename is
-    // copy+delete, so a crash mid-day can leave that ONE day briefly
-    // duplicated — still never a data-losing state, and the next run
-    // re-compacts it.
-    val hdir = new Path(dir)
-    val fs = hdir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a FileStreamSink directory carries a _spark_metadata log that
-    // batch readers trust over the directory listing; swapping files
-    // under it would leave the log pointing at deleted files (reads
-    // break) and the next micro-batch would re-create a log that hides
-    // the compacted files. In-place compaction is only sound for
-    // directory-listed stores — stream sinks compact into a separate
-    // serving table ([[compactRollupsTo]]).
-    require(!fs.exists(new Path(hdir, "_spark_metadata")),
-      s"$dir is a live FileStreamSink output (has _spark_metadata); " +
-        "use compactRollupsTo to build a compacted serving table instead")
-    val staging = new Path(dir + "_compacting")
-    val df0 = spark.read.parquet(dir)
-    val df = beforeDate.fold(df0)(d => df0.filter(col("date") < lit(d)))
-    // one output partition per day ⇒ one file per day directory
-    df.repartition(col("date"))
-      .write.mode("overwrite").partitionBy("date").parquet(staging.toString)
-    val dayDirs =
-      if (fs.exists(staging))
-        fs.listStatus(staging)
-          .filter(st => st.isDirectory && st.getPath.getName.startsWith("date="))
-      else Array.empty[org.apache.hadoop.fs.FileStatus]
-    dayDirs.foreach { day =>
-      val dest = new Path(hdir, day.getPath.getName)
-      if (fs.exists(dest)) fs.delete(dest, true)
-      require(fs.rename(day.getPath, dest),
-        s"compactRollups: rename ${day.getPath} -> $dest failed")
-    }
-    fs.delete(staging, true) // staging remnants (_SUCCESS etc.)
-    ()
-  }
-
-  /** Compact a (possibly stream-written) rollup store into a SEPARATE
-    * day-partitioned serving table, one file per day — the safe shape
-    * for FileStreamSink outputs (see [[compactRollups]] scaladoc for
-    * why in-place is unsound there). Dynamic partition overwrite means
-    * re-running for new days never touches already-compacted ones. */
+    * files and scan planning dominates query time. This folds the store
+    * (directory-listed or a FileStreamSink output) into a SEPARATE
+    * day-partitioned serving table, one file per day, rows preserved
+    * exactly. The source is never modified: a stream sink's
+    * `_spark_metadata` log would otherwise point at deleted files, and
+    * a crash mid-compaction loses nothing a re-run cannot rebuild.
+    * Dynamic partition overwrite means re-running for new days never
+    * touches already-compacted ones. */
   def compactRollupsTo(spark: SparkSession, srcDir: String, destDir: String,
       beforeDate: Option[java.sql.Date] = None): Unit = {
     val df0 = spark.read.parquet(srcDir)

@@ -145,9 +145,7 @@ object StreamingRunner {
         // per-batch OVERWRITE keyed by micro-batch id: a crash after
         // the alerts write but before the checkpoint commits re-delivers
         // the batch, and the retry REPLACES its rows instead of appending
-        // duplicates. Sink DELIVERY remains at-least-once: a retried
-        // batch can re-page — the standard alerting trade; dedup on
-        // (jobId, at) at the receiver if exact-once pages matter.
+        // duplicates. Delivery is at-least-once (AlertThrottle.cycle).
         AlertThrottle.cycle(spark, statePath, events, specOf, sinks, deliveryPath,
           record = _.toDF().write.mode("overwrite").parquet(s"$alertsPath/batch_id=$batchId"))
       }

@@ -40,6 +40,35 @@ class AlertSinkSpec extends SparkTestBase {
     assert(sent.forall(_.contains("mean < 5") || s"$sent".nonEmpty))
   }
 
+  test("delivery is at-least-once: a cycle failing after dispatch keeps the state, the next cycle pages again") {
+    import graft.state.AlertThrottle
+    val tmp = Files.createTempDirectory("graft-atleastonce").toString
+    val statePath = s"$tmp/alert_state"
+    // alerted two hours ago: outside the 60-minute error_timeout
+    val prior = Map(1L -> AlertThrottle.ThrottleState(graft.model.JobStatus.Failed,
+      at.getTime - 2 * 3600 * 1000L))
+    AlertThrottle.saveStateTable(spark, statePath, prior)
+    val sent = ArrayBuffer[String]()
+    val sinks = AlertSinks.default(sent += _)
+    val specOf = (id: Long) => Some(spec(id, Seq("mailto:a@b")))
+    def failingRun(t: Timestamp) = Seq(AlertThrottle.RunEvent(1L, t, failed = true, 60))
+    // the delivery-audit append fails: its path is a regular file
+    val notADir = s"$tmp/deliveries_file"
+    Files.write(new java.io.File(notADir).toPath, "x".getBytes("UTF-8"))
+    intercept[Exception] {
+      AlertThrottle.cycle(spark, statePath, failingRun(at), specOf, sinks, Some(notADir))
+    }
+    assert(sent.size == 1) // dispatched before the failure
+    assert(AlertThrottle.loadStateTable(spark, statePath) == prior)
+    // the next cycle finds the job un-alerted and pages again
+    val later = new Timestamp(at.getTime + 60000L)
+    AlertThrottle.cycle(spark, statePath, failingRun(later), specOf, sinks,
+      Some(s"$tmp/deliveries"))
+    assert(sent.size == 2, s"expected a second page, got $sent")
+    assert(AlertThrottle.loadStateTable(spark, statePath)(1L).lastAlertedAtMillis ==
+      later.getTime)
+  }
+
   test("flaky sink succeeds on retry; dead sink records a bounded failure") {
     class Flaky(failures: Int) extends AlertSink {
       var calls = 0

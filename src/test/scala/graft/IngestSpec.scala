@@ -107,29 +107,30 @@ class IngestSpec extends SparkTestBase {
     rollup.write.partitionBy("date").mode("append").parquet(out)
     rollup.limit(500).write.partitionBy("date").mode("append").parquet(out)
 
-    def rowsSorted() = spark.read.parquet(out)
+    def rowsSorted(path: String) = spark.read.parquet(path)
       .collect().map(_.toString).sorted.toSeq
-    def filesPerDay() = new java.io.File(out).listFiles()
+    def filesPerDay(path: String) = new java.io.File(path).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("date="))
       .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet"))).toMap
 
-    val before = rowsSorted()
-    assert(filesPerDay().values.exists(_ > 1), "fixture should have multi-file days")
-    Ingest.compactRollups(spark, out)
-    assert(filesPerDay().values.forall(_ == 1), s"not compacted: ${filesPerDay()}")
+    val before = rowsSorted(out)
+    assert(filesPerDay(out).values.exists(_ > 1), "fixture should have multi-file days")
+    val compacted = s"$tmp/compacted"
+    Ingest.compactRollupsTo(spark, out, compacted)
+    assert(filesPerDay(compacted).values.forall(_ == 1),
+      s"not compacted: ${filesPerDay(compacted)}")
     // content preserved exactly — compaction must not dedup or drop
-    assert(rowsSorted() == before)
+    assert(rowsSorted(compacted) == before)
     // partition pruning still works on the compacted layout
-    val oneDay = spark.read.parquet(out)
+    val oneDay = spark.read.parquet(compacted)
       .filter(col("date") === java.sql.Date.valueOf("2024-01-10"))
     assert(oneDay.count() > 0 && oneDay.count() < before.size)
   }
 
-  test("stream-sink stores refuse in-place compaction; compactRollupsTo serves them") {
+  test("stream-sink stores compact into a serving table via compactRollupsTo") {
     val tmp = Files.createTempDirectory("graft-compact2")
     val out = s"$tmp/rollup"
     Ingest.runAvailableNow(spark, dir, out, s"$tmp/ckpt") // writes _spark_metadata
-    intercept[IllegalArgumentException] { Ingest.compactRollups(spark, out) }
     val serving = s"$tmp/serving"
     Ingest.compactRollupsTo(spark, out, serving)
     // content identical, one file per day, plain directory-listed table

@@ -127,6 +127,15 @@ class SchedulerSpec extends SparkTestBase {
     sch2.shutdown()
   }
 
+  test("loading a never-saved state path keeps the schedule registration computed") {
+    val tmp = Files.createTempDirectory("graft-sched-nostate").toString
+    val sch = new Scheduler((_, _) => JobStatus.Success)
+    sch.register(spec(1, "0 0 * * *"), t("2024-01-15 12:00:00"))
+    sch.loadState(spark, s"$tmp/never_saved")
+    assert(sch.snapshot.head.nextRun.contains(t("2024-01-16 00:00:00")))
+    sch.shutdown()
+  }
+
   test("four monitors run concurrently through one session without interference") {
     val tmp = Files.createTempDirectory("graft-sched-conc").toString
     val source = graft.store.MetricSource.events(spark, "/root/testdata/sf0.001")
