@@ -1,6 +1,9 @@
 package graft.engine
 
 import java.sql.Timestamp
+import java.util.concurrent.Executors
+
+import scala.util.Try
 
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -82,17 +85,16 @@ object Runner {
       chart: Seq[ChartSeries], jobDataPath: String, jobErrorsPath: String): Unit = {
     import spark.implicits._
     val status = jobStatus(verdicts)
-    val payload =
-      (if (chart.isEmpty) spark.emptyDataset[ChartSeries] else chart.toDS()).toDF()
-        .agg(to_json(collect_list(struct(col("metric"), col("points")))).as("chart"))
     // explicit timestamp type: on the empty-verdicts (error) path the
     // literal is null and an untyped lit(null) would be unwritable VOID
     val windowEnd = lit(verdicts.headOption.map(_.windowEnd).orNull)
       .cast(org.apache.spark.sql.types.TimestampType)
-    val run = payload.select(
+    // one row holding the whole chart: the projection folds into a local
+    // table scan, so the write is the run's only job (no exchange)
+    val run = Seq(Tuple1(chart)).toDF("chart").select(
       windowEnd.as("window_end"),
       lit(status).as("status"),
-      col("chart").as("data"))
+      to_json(col("chart")).as("data"))
     run.write.mode(SaveMode.Append).parquet(s"$jobDataPath/job_id=${spec.id}")
 
     if (status != JobStatus.Success) {
@@ -132,17 +134,24 @@ object Runner {
 
   /** E1 batched (the thousands-of-monitors cost model): K due jobs that
     * fire on the same tick share ONE scan of the store. The union of
-    * their windows is scanned once and persisted; each job's plan then
-    * clips its own (narrower) window from the cached slice — a filter
-    * over in-memory columnar batches, not a second storage scan. Results
-    * are identical to K independent [[runOnce]] calls (SchedulerSpec
+    * their windows is scanned once, persisted and filled by one job;
+    * each job's [[runOnce]] then clips its own (narrower) window from the
+    * cached slice — a filter over in-memory columnar batches, not a
+    * second storage scan. The K runs (plan, collect, [[persistRun]]) go
+    * to `min(parallelism, K)` threads created here, so each inherits the
+    * calling thread's Spark local properties (the FAIR pool name); each
+    * persists under its own `job_id=N` root, so concurrent commits are
+    * safe. Results are keyed by spec id; a run that throws is a
+    * `Failure` for its spec alone. Verdicts are identical to K
+    * independent [[runOnce]] calls, at any parallelism (SchedulerSpec
     * proves verdict equality and the single source scan).
     *
     * The cached slice is window-bounded (the whole point of monitor
     * windows: KB-to-MB per job even at 100 TB of history), so pinning it
     * for the batch is safe. */
   def runBatch(spark: SparkSession, source: MetricSource, specs: Seq[MonitorSpec],
-      now: Timestamp, jobDataPath: String, jobErrorsPath: String): Map[Long, Seq[Verdict]] = {
+      now: Timestamp, jobDataPath: String, jobErrorsPath: String,
+      parallelism: Int = 1): Map[Long, Try[Seq[Verdict]]] = {
     if (specs.isEmpty) return Map.empty
     val bounds = specs.map { sp =>
       val until = sp.toDate.getOrElse(now)
@@ -151,12 +160,19 @@ object Runner {
     val clipped = source
       .scan(new Timestamp(bounds.map(_._1).min), new Timestamp(bounds.map(_._2).max))
       .persist()
-    try
-      specs.map { spec =>
-        spec.id -> runOnce(spark, MetricSource.ofFrame(clipped), spec, now,
-          jobDataPath, jobErrorsPath)
-      }.toMap
-    finally clipped.unpersist()
+    try {
+      // fill the cache once, before the fan-out: otherwise each
+      // concurrent run would materialize the slice itself
+      clipped.foreachPartition((_: Iterator[Row]) => ())
+      val slice = MetricSource.ofFrame(clipped)
+      val pool = Executors.newFixedThreadPool(math.min(parallelism, specs.size))
+      try
+        specs.map { spec =>
+          spec.id -> pool.submit(() =>
+            Try(runOnce(spark, slice, spec, now, jobDataPath, jobErrorsPath)))
+        }.map { case (id, run) => id -> run.get }.toMap
+      finally pool.shutdown()
+    } finally clipped.unpersist()
   }
 
   /** E3 read path: latest persisted run per job (O1). */

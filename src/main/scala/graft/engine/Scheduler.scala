@@ -5,6 +5,7 @@ import java.time.Instant
 import java.util.concurrent.{ConcurrentHashMap, ExecutorService, Executors, TimeUnit}
 
 import scala.jdk.CollectionConverters._
+import scala.util.Success
 
 import org.apache.spark.sql.SparkSession
 
@@ -44,7 +45,10 @@ final class Scheduler(
     fairPool: String = "monitors",
     /** When set, a tick's whole due set is evaluated as ONE batch (one
       * shared scan of the store — [[Runner.runBatch]]): the cost model
-      * for thousands of same-schedule monitors. Per-job dispatch remains
+      * for thousands of same-schedule monitors. The batch runs on one
+      * pool thread under the FAIR pool and may fan its runs out to at
+      * most `parallelism` threads of its own; it returns a status per
+      * job, and a job it leaves out is `Error`. Per-job dispatch remains
       * the default and the fallback for single-job ticks. */
     runBatch: Option[(Seq[MonitorSpec], Timestamp) => Map[Long, String]] = None) {
 
@@ -103,8 +107,9 @@ final class Scheduler(
     val fireAt = Timestamp.from(now)
     runBatch match {
       case Some(batch) if due.size > 1 =>
-        // same-tick jobs share one scan: a single pool task evaluates
-        // the whole set (intra-batch parallelism lives inside Spark)
+        // same-tick jobs share one scan: a single pool task runs the
+        // whole set, fanning its runs out to threads it creates (they
+        // inherit this thread's FAIR pool name)
         inFlight.register()
         pool.execute { () =>
           try {
@@ -222,15 +227,17 @@ object Scheduler {
       parallelism = parallelism,
       spark = Some(spark),
       runBatch = Some((specs, fireAt) =>
-        Runner.runBatch(spark, source, specs, fireAt, jobDataPath, jobErrorsPath)
-          .map { case (id, vs) => id -> Runner.jobStatus(vs) }))
+        Runner.runBatch(spark, source, specs, fireAt, jobDataPath, jobErrorsPath, parallelism)
+          .map { case (id, run) => id -> run.fold(_ => JobStatus.Error, Runner.jobStatus) }))
 
   /** Full E1 loop (reference stages 1-5): run → persist → throttle →
     * deliver. Throttle and delivery run through [[graft.state
     * .AlertThrottle.cycle]], the one cycle the streaming runner also
     * uses, over one state table, so a job alerted by either path stays
-    * throttled on both. A cohort tick runs ONE cycle for all its events:
-    * one state-table read and overwrite per tick, not one per spec. */
+    * throttled on both. A cohort tick runs ONE cycle for all its events,
+    * after every run, in spec order: one state-table read and overwrite
+    * per tick, not one per spec. A run that throws is `Error` and stays
+    * out of the cycle, on both paths; its cohort neighbours still page. */
   def forSourceWithAlerts(spark: SparkSession, source: MetricSource,
       jobDataPath: String, jobErrorsPath: String,
       alertStatePath: String, deliveryPath: String,
@@ -256,11 +263,11 @@ object Scheduler {
       parallelism = parallelism,
       spark = Some(spark),
       runBatch = Some((specs, fireAt) => {
-        val results = Runner.runBatch(spark, source, specs, fireAt, jobDataPath, jobErrorsPath)
-        val statuses = specs.map(spec =>
-          spec -> Runner.jobStatus(results.getOrElse(spec.id, Nil)))
-        throttleAndDeliverAll(statuses, fireAt)
-        statuses.map { case (sp, st) => sp.id -> st }.toMap
+        val results = Runner.runBatch(spark, source, specs, fireAt, jobDataPath, jobErrorsPath,
+          parallelism)
+        val statuses = specs.map(spec => spec -> results(spec.id).map(Runner.jobStatus))
+        throttleAndDeliverAll(statuses.collect { case (sp, Success(st)) => sp -> st }, fireAt)
+        statuses.map { case (sp, st) => sp.id -> st.getOrElse(JobStatus.Error) }.toMap
       }))
   }
 }

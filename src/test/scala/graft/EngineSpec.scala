@@ -136,6 +136,30 @@ class EngineSpec extends SparkTestBase {
     assert(ts.nonEmpty && ts == ts.sorted)
   }
 
+  test("job_data chart JSON is byte-identical to the collect_list aggregate it replaced") {
+    import org.apache.spark.sql.functions.{col, collect_list, struct, to_json}
+    import Runner.{ChartPoint, ChartSeries}
+    def pt(ts: String, v: java.lang.Double) = ChartPoint(Timestamp.valueOf(ts), v)
+    val chart = Seq(
+      ChartSeries("events.click", Seq(pt("2024-01-15 11:00:00", 1.5),
+        pt("2024-01-15 11:01:00", null), pt("2024-01-15 11:02:00", -0.0))),
+      ChartSeries("events.\"quoted\" é", Nil),
+      ChartSeries("events.view", Seq(pt("2024-01-15 11:00:30", Double.NaN),
+        pt("2024-01-15 11:03:00", 1e-300))))
+    // a full chart, a null-only series and the empty (error-path) chart
+    Seq(chart, Seq(ChartSeries("m", Seq(pt("2024-01-15 11:00:00", null)))), Nil).foreach { c =>
+      // the oracle: the aggregate persistRun used to plan, over one
+      // partition so collect_list keeps the chart's order
+      val oracle = (if (c.isEmpty) spark.emptyDataset[ChartSeries] else c.toDS()).toDF()
+        .coalesce(1).agg(to_json(collect_list(struct(col("metric"), col("points")))))
+        .head().getString(0)
+      val tmp = Files.createTempDirectory("graft-chart-bytes").toString
+      Runner.persistRun(spark, spec("mean > 0"), Nil, c, s"$tmp/job_data", s"$tmp/job_errors")
+      val data = spark.read.parquet(s"$tmp/job_data").head().getAs[String]("data")
+      assert(data == oracle)
+    }
+  }
+
   test("ST5 throttle: no re-alert within error_timeout; recovery re-arms transition label") {
     def ev(min: Int, failed: Boolean) =
       RunEvent(7L, Timestamp.valueOf(f"2024-01-01 ${min / 60}%02d:${min % 60}%02d:00"), failed, 60)

@@ -261,9 +261,101 @@ class SchedulerSpec extends SparkTestBase {
     val batch = graft.engine.Runner.runBatch(spark, inner, specs, at, s"$tmp/jd2", s"$tmp/je2")
     specs.foreach { sp =>
       val solo = graft.engine.Runner.evaluate(spark, inner, sp, at)
-      assert(batch(sp.id).toSet == solo.toSet, s"job ${sp.id} differs")
+      assert(batch(sp.id).get.toSet == solo.toSet, s"job ${sp.id} differs")
     }
     sch.shutdown()
+  }
+
+  private def cohortSpec(id: Long, expr: String, minutes: Int = 720,
+      targets: Seq[String] = Seq("events.*")) = MonitorSpec(
+    id = id, name = s"cohort$id", targets = targets, minutes = minutes, toDate = None,
+    cronExpr = "*/5 * * * *", monitorExpr = expr, alertKeys = Seq("mailto:oncall@example.com"))
+
+  test("a cohort run that throws is Error alone; its neighbours keep their statuses and pages") {
+    val tmp = Files.createTempDirectory("graft-sched-badexpr").toString
+    val sent = new ConcurrentLinkedQueue[String]()
+    val sch = Scheduler.forSourceWithAlerts(spark,
+      graft.store.MetricSource.events(spark, "/root/testdata/sf0.001"),
+      s"$tmp/job_data", s"$tmp/job_errors", s"$tmp/alert_state", s"$tmp/deliveries",
+      sinks = graft.state.AlertSinks.default(sent.add(_)), parallelism = 2)
+    // job 1's expression is rejected when its run plans
+    Seq(cohortSpec(1, "bogus < 1"), cohortSpec(2, "mean > 1000000"), cohortSpec(3, "count > 0"))
+      .foreach(sch.register(_, t("2024-01-15 11:59:00")))
+    val (fired, _) = sch.tick(t("2024-01-15 12:00:00")); sch.awaitIdle()
+    assert(fired == Seq(1L, 2L, 3L))
+    assert(sch.snapshot.map(s => s.jobId -> s.lastStatus).toMap ==
+      Map(1L -> JobStatus.Error, 2L -> JobStatus.Failed, 3L -> JobStatus.Success))
+    // the failing neighbour paged; the run that threw never reached the cycle
+    val paged = spark.read.parquet(s"$tmp/deliveries").collect().map(_.getAs[Long]("jobId"))
+    assert(paged.toSeq == Seq(2L) && sent.size == 1, sent.toString)
+    assert(!graft.state.AlertThrottle.loadStateTable(spark, s"$tmp/alert_state").contains(1L))
+    sch.shutdown()
+  }
+
+  test("every Spark job of a cohort tick runs under the named FAIR pool") {
+    val tmp = Files.createTempDirectory("graft-sched-fair").toString
+    val sc = spark.sparkContext
+    // (description, pool) of every job start, in listener-bus order
+    val starts = new ConcurrentLinkedQueue[(String, String)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        starts.add((props.map(_.getProperty("spark.job.description")).orNull,
+          props.map(_.getProperty("spark.scheduler.pool")).orNull))
+      }
+    }
+    def marker(name: String): Unit = {
+      sc.setJobDescription(name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    val sch = Scheduler.forSource(spark,
+      graft.store.MetricSource.events(spark, "/root/testdata/sf0.001"),
+      s"$tmp/job_data", s"$tmp/job_errors", parallelism = 4)
+    Seq(cohortSpec(1, "count > 0", 240), cohortSpec(2, "mean > 1000000", 480),
+      cohortSpec(3, "mean > 0")).foreach(sch.register(_, t("2024-01-15 11:59:00")))
+    sc.addSparkListener(listener)
+    try {
+      marker("before-tick")
+      sch.tick(t("2024-01-15 12:00:00")); sch.awaitIdle()
+      marker("after-tick")
+      // the bus delivers in order: once the second marker is seen, so is
+      // every job the tick submitted
+      val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(30)
+      while (!starts.asScala.exists(_._1 == "after-tick") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      val tick = starts.asScala.toSeq.dropWhile(_._1 != "before-tick").drop(1)
+        .takeWhile(_._1 != "after-tick")
+      // at least the cache fill and one job_data write per run
+      assert(tick.size >= 4, tick.toString)
+      assert(tick.forall(_._2 == "monitors"), tick.toString)
+    } finally sc.removeSparkListener(listener)
+    sch.shutdown()
+  }
+
+  test("a cohort's verdicts and persisted rows do not depend on parallelism") {
+    import org.apache.spark.sql.functions.col
+    val source = graft.store.MetricSource.events(spark, "/root/testdata/sf0.001")
+    val at = Timestamp.valueOf("2024-01-15 12:00:00")
+    // passing, failing, no-series (Error, persisted) and bad-expression
+    // (thrown) runs over different window lengths
+    val specs = Seq(cohortSpec(1, "count > 0", 240), cohortSpec(2, "mean > 1000000", 480),
+      cohortSpec(3, "mean > 0", targets = Seq("nosuch.metric")), cohortSpec(4, "bogus < 1"),
+      cohortSpec(5, "count < 0", 360))
+    def rows(path: String, cols: String*) =
+      spark.read.parquet(path).select(cols.map(col): _*).collect().map(_.toSeq).toSeq
+        .sortBy(_.mkString("|"))
+    def runWith(parallelism: Int) = {
+      val tmp = Files.createTempDirectory(s"graft-sched-par$parallelism").toString
+      val results = graft.engine.Runner.runBatch(spark, source, specs, at,
+        s"$tmp/job_data", s"$tmp/job_errors", parallelism)
+      (results.map { case (id, r) => id -> r.toEither.map(_.toSet).left.map(_.getMessage) },
+        rows(s"$tmp/job_data", "job_id", "window_end", "status", "data"),
+        rows(s"$tmp/job_errors", "job_id", "at", "message", "status"))
+    }
+    val (serial, concurrent) = (runWith(1), runWith(4))
+    assert(serial._1(4).isLeft && serial._1(3) == Right(Set.empty))
+    assert(serial._2.size == 4 && serial._3.nonEmpty)
+    assert(concurrent == serial)
   }
 
   test("production wiring: due job runs end-to-end through Runner.runOnce") {
