@@ -12,9 +12,11 @@ import graft.model.MonitorSpec
   * (SURVEY §3). The whole monitor run — window clip, target functions,
   * per-series reductions, threshold — is ONE declarative DataFrame, so
   * Catalyst gets the entire thing: window + metric predicates push into
-  * the scan, reductions get map-side partials, the verdict projection is
-  * codegen'd. No fork/exec, no per-run HTTP, no interpreter (contrast:
-  * reference stages 2-5, which cross two process boundaries per run).
+  * the scan, reductions get map-side partials. No fork/exec, no per-run
+  * HTTP, no sandbox interpreter (contrast: reference stages 2-5, which
+  * cross two process boundaries per run). The plan runs codegen'd in the
+  * caller's session, except on the scheduled path, which runs it
+  * interpreted ([[Runner]]).
   */
 object Planner {
 

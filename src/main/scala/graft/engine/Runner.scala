@@ -7,6 +7,7 @@ import scala.util.Try
 
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.EngineSession
 
 import graft.model.{JobStatus, MonitorSpec, Verdict}
 import graft.store.MetricSource
@@ -26,6 +27,18 @@ import graft.store.MetricSource
   * driver-local rows. The hot path takes a [[MetricSource]] so the
   * window bounds reach the storage scan (PushedFilters), not a
   * post-conversion filter.
+  *
+  * E1 ([[runOnce]], [[runBatch]] and the [[persistRun]] they make) runs
+  * INTERPRETED when its window is at most [[InterpretedMaxMinutes]]
+  * long, in an engine session derived from the caller's
+  * ([[org.apache.spark.sql.graft.EngineSession]]: per call, a copy of
+  * the caller's session with codegen off). A run's window bounds and
+  * `window_end` are literals that Spark inlines into generated code, so
+  * under codegen every run compiles new classes (~19 per run on the
+  * `monitor_loop` benchmark, ~20 ms each); interpreted, it compiles
+  * none and pays more per row instead. A longer window runs codegen'd
+  * in the caller's session, as [[evaluate]], the planner, the backtest,
+  * the API and the streaming runner always do.
   */
 object Runner {
 
@@ -33,6 +46,24 @@ object Runner {
     * (transformNull inverses, align joins) can emit nulls. */
   final case class ChartPoint(ts: Timestamp, value: java.lang.Double)
   final case class ChartSeries(metric: String, points: Seq[ChartPoint])
+
+  /** The longest window, in minutes, that a scheduled run evaluates
+    * interpreted. Measured on 4 local cores, one run (plan, collect,
+    * persist) at a new `now`, interpreted against codegen'd, median of
+    * three, over five target forms: at up to ~1.2 k rows per run from
+    * the rollup store every form took 0.67-0.82 of its codegen'd time,
+    * and at ~1.7 k raw events 0.85-1.02. The forms cross over between
+    * ~7 k rows (`movingAverage`) and over 200 k (`summarize`); at 10^5
+    * rows interpreted took up to 1.9x as long. The code sees a window's
+    * length, not its rows: six hours at the rollup grain (one row per
+    * series-minute) of five series is 1.8 k rows. */
+  val InterpretedMaxMinutes = 360
+
+  /** The session a scheduled query over a window `minutes` long runs
+    * in: `engine` (interpreted) up to [[InterpretedMaxMinutes]],
+    * otherwise the caller's `spark` (codegen'd). */
+  private def sessionFor(spark: SparkSession, engine: SparkSession, minutes: Long) =
+    if (minutes <= InterpretedMaxMinutes) engine else spark
 
   /** E2 / pure evaluation: verdict rows only, no side effects. */
   def evaluate(spark: SparkSession, source: MetricSource, spec: MonitorSpec,
@@ -106,31 +137,46 @@ object Runner {
 
   /** E1: evaluate + persist + (throttled) alert rows. Returns verdicts.
     * Alert dispatch is a side-effecting sink fed by the returned rows —
-    * deliberately OUT of the query plan (SURVEY §2.1 S7). */
+    * deliberately OUT of the query plan (SURVEY §2.1 S7). A window up
+    * to [[InterpretedMaxMinutes]] runs in an engine session derived from
+    * `spark` for this call. */
   def runOnce(spark: SparkSession, source: MetricSource, spec: MonitorSpec,
-      now: Timestamp, jobDataPath: String, jobErrorsPath: String): Seq[Verdict] = {
-    val df = Planner.planWithPoints(spark, source, spec, now)
-    val rows = df.collect().toSeq
-    val verdicts = toVerdicts(spec, df.columns, rows)
-    // Merge chart points per metric across targets (a metric matched by
-    // two targets charts once), sorted by ts for a deterministic payload.
-    val chart = rows
-      .map { r =>
-        val pts = r.getSeq[Row](r.fieldIndex("points")).map { p =>
-          ChartPoint(p.getTimestamp(0), p.get(1).asInstanceOf[java.lang.Double])
-        }
-        (r.getString(r.fieldIndex("metric")), pts)
-      }
-      .groupBy(_._1).toSeq.sortBy(_._1)
-      .map { case (m, grps) =>
-        ChartSeries(m, grps.flatMap(_._2).sortBy(_.ts.getTime)) }
-    persistRun(spark, spec, verdicts, chart, jobDataPath, jobErrorsPath)
-    verdicts
-  }
+      now: Timestamp, jobDataPath: String, jobErrorsPath: String): Seq[Verdict] =
+    runIn(spark, EngineSession.derive(spark), source, spec, now, jobDataPath, jobErrorsPath)
 
   def runOnce(spark: SparkSession, store: DataFrame, spec: MonitorSpec,
       now: Timestamp, jobDataPath: String, jobErrorsPath: String): Seq[Verdict] =
     runOnce(spark, MetricSource.ofFrame(store), spec, now, jobDataPath, jobErrorsPath)
+
+  /** [[runOnce]] with an engine session the caller derived from `spark`
+    * (the scheduler shares one with the tick's throttle cycle). The run
+    * takes the session its window calls for ([[sessionFor]]); its plan
+    * moves there before the collect, and the whole run, the persist
+    * included, has that session as its active one. */
+  private[engine] def runIn(spark: SparkSession, engine: SparkSession, source: MetricSource,
+      spec: MonitorSpec, now: Timestamp, jobDataPath: String,
+      jobErrorsPath: String): Seq[Verdict] = {
+    val session = sessionFor(spark, engine, spec.minutes)
+    EngineSession.withActive(session) {
+      val df = EngineSession.adopt(session, Planner.planWithPoints(session, source, spec, now))
+      val rows = df.collect().toSeq
+      val verdicts = toVerdicts(spec, df.columns, rows)
+      // Merge chart points per metric across targets (a metric matched by
+      // two targets charts once), sorted by ts for a deterministic payload.
+      val chart = rows
+        .map { r =>
+          val pts = r.getSeq[Row](r.fieldIndex("points")).map { p =>
+            ChartPoint(p.getTimestamp(0), p.get(1).asInstanceOf[java.lang.Double])
+          }
+          (r.getString(r.fieldIndex("metric")), pts)
+        }
+        .groupBy(_._1).toSeq.sortBy(_._1)
+        .map { case (m, grps) =>
+          ChartSeries(m, grps.flatMap(_._2).sortBy(_.ts.getTime)) }
+      persistRun(session, spec, verdicts, chart, jobDataPath, jobErrorsPath)
+      verdicts
+    }
+  }
 
   /** E1 batched (the thousands-of-monitors cost model): K due jobs that
     * fire on the same tick share ONE scan of the store. The union of
@@ -146,30 +192,45 @@ object Runner {
     * independent [[runOnce]] calls, at any parallelism (SchedulerSpec
     * proves verdict equality and the single source scan).
     *
+    * One engine session, derived here, serves the slice and the K runs,
+    * each by its window ([[sessionFor]]): the scan moves into the
+    * session the union window calls for before `persist()`, so the
+    * cache build and fill run there too, and each run moves its plan
+    * over the slice into the session its own window calls for (the
+    * cache is shared between them).
+    *
     * The cached slice is window-bounded (the whole point of monitor
     * windows: KB-to-MB per job even at 100 TB of history), so pinning it
     * for the batch is safe. */
   def runBatch(spark: SparkSession, source: MetricSource, specs: Seq[MonitorSpec],
       now: Timestamp, jobDataPath: String, jobErrorsPath: String,
-      parallelism: Int = 1): Map[Long, Try[Seq[Verdict]]] = {
+      parallelism: Int = 1): Map[Long, Try[Seq[Verdict]]] =
+    batchIn(spark, EngineSession.derive(spark), source, specs, now, jobDataPath,
+      jobErrorsPath, parallelism)
+
+  /** [[runBatch]] with an engine session the caller derived from `spark`. */
+  private[engine] def batchIn(spark: SparkSession, engine: SparkSession,
+      source: MetricSource, specs: Seq[MonitorSpec], now: Timestamp, jobDataPath: String,
+      jobErrorsPath: String, parallelism: Int): Map[Long, Try[Seq[Verdict]]] = {
     if (specs.isEmpty) return Map.empty
     val bounds = specs.map { sp =>
       val until = sp.toDate.getOrElse(now)
       (until.getTime - sp.minutes * 60000L, until.getTime)
     }
-    val clipped = source
-      .scan(new Timestamp(bounds.map(_._1).min), new Timestamp(bounds.map(_._2).max))
-      .persist()
+    val (from, until) = (bounds.map(_._1).min, bounds.map(_._2).max)
+    val home = sessionFor(spark, engine, (until - from) / 60000L)
+    val clipped = EngineSession.adopt(home,
+      source.scan(new Timestamp(from), new Timestamp(until))).persist()
     try {
       // fill the cache once, before the fan-out: otherwise each
       // concurrent run would materialize the slice itself
-      clipped.foreachPartition((_: Iterator[Row]) => ())
+      EngineSession.withActive(home)(clipped.foreachPartition((_: Iterator[Row]) => ()))
       val slice = MetricSource.ofFrame(clipped)
       val pool = Executors.newFixedThreadPool(math.min(parallelism, specs.size))
       try
         specs.map { spec =>
           spec.id -> pool.submit(() =>
-            Try(runOnce(spark, slice, spec, now, jobDataPath, jobErrorsPath)))
+            Try(runIn(spark, engine, slice, spec, now, jobDataPath, jobErrorsPath)))
         }.map { case (id, run) => id -> run.get }.toMap
       finally pool.shutdown()
     } finally clipped.unpersist()

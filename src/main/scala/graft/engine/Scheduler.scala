@@ -8,6 +8,8 @@ import scala.jdk.CollectionConverters._
 import scala.util.Success
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.EngineSession
+import org.apache.spark.sql.types.{LongType, StructType}
 
 import graft.dsl.Cron
 import graft.model.{JobStatus, MonitorSpec}
@@ -26,7 +28,11 @@ import graft.store.MetricSource
   * concurrent monitor runs share the cluster fairly instead of FIFO
   * head-of-line blocking (the host session should set
   * `spark.scheduler.mode=FAIR`; the pool name is a thread-local property,
-  * which is the public Spark mechanism for per-job pools). Job *state* is
+  * which is the public Spark mechanism for per-job pools). A run whose
+  * window is at most [[Runner.InterpretedMaxMinutes]] long executes
+  * interpreted, in an engine session derived from the scheduler's
+  * session ([[Runner]]), so it pays no code-generation compile; the
+  * session passed in is never changed. Job *state* is
   * driver-memory (monitor count ≈ thousands, metadata-sized) with a
   * parquet save/load twin for cross-restart parity with the reference's
   * DB-persisted `next_run`.
@@ -197,7 +203,8 @@ final class Scheduler(
     * registration computed. */
   def loadState(spark: SparkSession, path: String): Unit = {
     import spark.implicits._
-    val saved = graft.store.VersionedTable.read(spark, path)
+    val schema = new StructType().add("job_id", LongType).add("next_run_millis", LongType)
+    val saved = graft.store.VersionedTable.read(spark, path, schema)
       .fold(Array.empty[(Long, Option[Long])])(_.as[(Long, Option[Long])].collect())
     saved.foreach {
       case (id, next) =>
@@ -217,18 +224,22 @@ object Scheduler {
 
   /** Production wiring: due jobs run [[Runner.runOnce]] against the
     * windowed metric source (bounds → PushedFilters) and persist the
-    * job_data / job_errors twins. */
+    * job_data / job_errors twins; each tick's runs share one engine
+    * session, the scheduler's current one. */
   def forSource(spark: SparkSession, source: MetricSource,
       jobDataPath: String, jobErrorsPath: String,
-      parallelism: Int = 4): Scheduler =
+      parallelism: Int = 4): Scheduler = {
+    val engines = new EngineSession.Current(spark)
     new Scheduler(
-      runJob = (spec, fireAt) =>
-        Runner.jobStatus(Runner.runOnce(spark, source, spec, fireAt, jobDataPath, jobErrorsPath)),
+      runJob = (spec, fireAt) => Runner.jobStatus(Runner.runIn(spark, engines.get(), source,
+        spec, fireAt, jobDataPath, jobErrorsPath)),
       parallelism = parallelism,
       spark = Some(spark),
       runBatch = Some((specs, fireAt) =>
-        Runner.runBatch(spark, source, specs, fireAt, jobDataPath, jobErrorsPath, parallelism)
+        Runner.batchIn(spark, engines.get(), source, specs, fireAt, jobDataPath, jobErrorsPath,
+          parallelism)
           .map { case (id, run) => id -> run.fold(_ => JobStatus.Error, Runner.jobStatus) }))
+  }
 
   /** Full E1 loop (reference stages 1-5): run → persist → throttle →
     * deliver. Throttle and delivery run through [[graft.state
@@ -237,36 +248,52 @@ object Scheduler {
     * throttled on both. A cohort tick runs ONE cycle for all its events,
     * after every run, in spec order: one state-table read and overwrite
     * per tick, not one per spec. A run that throws is `Error` and stays
-    * out of the cycle, on both paths; its cohort neighbours still page. */
+    * out of the cycle, on both paths; its cohort neighbours still page.
+    *
+    * Each tick (a cohort's batch, or one job's run) runs its cycle, and
+    * every monitor whose window is at most [[Runner.InterpretedMaxMinutes]]
+    * long (longer ones run codegen'd in `spark`), in the scheduler's
+    * current engine session ([[Runner]]: interpreted, no code
+    * generation). The scheduler holds one engine session and derives a
+    * new one when `spark`'s runtime confs or query-execution listeners
+    * have changed since ([[org.apache.spark.sql.graft.EngineSession
+    * .Current]]), so a conf change or a listener registered after the
+    * scheduler is built still reaches the next tick. */
   def forSourceWithAlerts(spark: SparkSession, source: MetricSource,
       jobDataPath: String, jobErrorsPath: String,
       alertStatePath: String, deliveryPath: String,
       sinks: Seq[graft.state.AlertSink],
       parallelism: Int = 4): Scheduler = {
     import graft.state.AlertThrottle
-    def throttleAndDeliverAll(specsWithStatus: Seq[(MonitorSpec, String)],
-        fireAt: Timestamp): Unit = {
+    val engines = new EngineSession.Current(spark)
+    def throttleAndDeliverAll(engine: SparkSession,
+        specsWithStatus: Seq[(MonitorSpec, String)], fireAt: Timestamp): Unit = {
       val events = specsWithStatus.map { case (spec, status) =>
         AlertThrottle.RunEvent(spec.id, fireAt,
           failed = status != JobStatus.Success, spec.errorTimeoutMinutes)
       }
       val byId = specsWithStatus.map { case (sp, _) => sp.id -> sp }.toMap
-      AlertThrottle.cycle(spark, alertStatePath, events, byId.get, sinks, Some(deliveryPath))
+      EngineSession.withActive(engine)(AlertThrottle.cycle(engine, alertStatePath, events,
+        byId.get, sinks, Some(deliveryPath)))
     }
     new Scheduler(
       runJob = (spec, fireAt) => {
-        val verdicts = Runner.runOnce(spark, source, spec, fireAt, jobDataPath, jobErrorsPath)
+        val engine = engines.get()
+        val verdicts =
+          Runner.runIn(spark, engine, source, spec, fireAt, jobDataPath, jobErrorsPath)
         val status = Runner.jobStatus(verdicts)
-        throttleAndDeliverAll(Seq(spec -> status), fireAt)
+        throttleAndDeliverAll(engine, Seq(spec -> status), fireAt)
         status
       },
       parallelism = parallelism,
       spark = Some(spark),
       runBatch = Some((specs, fireAt) => {
-        val results = Runner.runBatch(spark, source, specs, fireAt, jobDataPath, jobErrorsPath,
-          parallelism)
+        val engine = engines.get()
+        val results = Runner.batchIn(spark, engine, source, specs, fireAt, jobDataPath,
+          jobErrorsPath, parallelism)
         val statuses = specs.map(spec => spec -> results(spec.id).map(Runner.jobStatus))
-        throttleAndDeliverAll(statuses.collect { case (sp, Success(st)) => sp -> st }, fireAt)
+        throttleAndDeliverAll(engine, statuses.collect { case (sp, Success(st)) => sp -> st },
+          fireAt)
         statuses.map { case (sp, st) => sp.id -> st.getOrElse(JobStatus.Error) }.toMap
       }))
   }

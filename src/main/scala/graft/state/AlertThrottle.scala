@@ -4,6 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
 import graft.model.{JobStatus, MonitorSpec}
 
@@ -166,8 +167,13 @@ object AlertThrottle {
     // corruption error must propagate — swallowing it reset every job's
     // throttle clock to "never alerted" and the next save persisted the
     // wiped state (alert storm on a transient storage hiccup)
-    graft.store.VersionedTable.read(spark, path).fold(Map.empty[Long, ThrottleState])(
-      _.collect().map(r => r.getLong(0) -> ThrottleState(r.getString(1), r.getLong(2))).toMap)
+    graft.store.VersionedTable.read(spark, path, StateSchema)
+      .fold(Map.empty[Long, ThrottleState])(
+        _.collect().map(r => r.getLong(0) -> ThrottleState(r.getString(1), r.getLong(2))).toMap)
+
+  /** The columns [[saveStateTable]] writes. */
+  private val StateSchema = new StructType()
+    .add("job_id", LongType).add("status", StringType).add("last_alerted_ms", LongType)
 
   def saveStateTable(spark: SparkSession, path: String,
       st: Map[Long, ThrottleState]): Unit = {

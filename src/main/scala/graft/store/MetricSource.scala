@@ -4,6 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** A metric store the planner can ask for a *window-clipped* scan, so the
   * time predicate is applied where the storage layer can actually use it
@@ -40,10 +41,26 @@ object MetricSource {
     * [[graft.streaming.Ingest.runAvailableNow]]: the window clip becomes
     * BOTH a partition filter on `date` (directory pruning) and a
     * row-group filter on the native `ts` — the E1 hot path's 100-TB
-    * layout. `value` is the minutely sum (the store's own grain). */
+    * layout. `value` is the minutely sum (the store's own grain).
+    *
+    * Each scan reads the store with the schema Ingest writes
+    * ([[RollupSchema]]) instead of inferring it, which would cost a
+    * Spark job per scan. So a store that exists but holds no data yet
+    * (an empty directory, or a stream sink with no committed batch)
+    * scans as empty, and every monitor over it gets no series; a store
+    * directory that does not exist still fails the scan with
+    * `PATH_NOT_FOUND`. */
   def rollup(spark: SparkSession, dir: String): MetricSource =
-    (from, until) => spark.read.parquet(dir)
+    (from, until) => spark.read.schema(RollupSchema).parquet(dir)
       .filter(col("date") >= to_date(lit(from)) && col("date") <= to_date(lit(until)) &&
         col("ts") >= lit(from) && col("ts") <= lit(until))
       .select(col("metric"), col("ts"), col("sum_v").as("value"))
+
+  /** The rollup store's columns: [[graft.streaming.Ingest]] writes its
+    * rows as this schema and [[rollup]] reads them with it. `date` is
+    * the partition column. */
+  val RollupSchema: StructType = new StructType()
+    .add("metric", StringType).add("ts", TimestampType).add("n", LongType)
+    .add("sum_v", DoubleType).add("min_v", DoubleType).add("max_v", DoubleType)
+    .add("date", DateType)
 }

@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 import graft.ext.AtomicSink
 
@@ -51,12 +52,14 @@ object VersionedTable {
     }
   }
 
-  /** [[current]] loaded as a parquet table, or None. A pre-versioning
-    * root is read through its own top-level files only, so a `v=N` that
-    * a crashed first publish left beside them is never picked up. */
-  def read(spark: SparkSession, dir: String): Option[DataFrame] =
+  /** [[current]] loaded as a parquet table with the `schema` it was
+    * written with, or None. Giving the schema skips parquet's schema
+    * inference, a Spark job per read. A pre-versioning root is read
+    * through its own top-level files only, so a `v=N` that a crashed
+    * first publish left beside them is never picked up. */
+  def read(spark: SparkSession, dir: String, schema: StructType): Option[DataFrame] =
     current(spark, dir).map(root =>
-      spark.read.parquet(if (root == dir) s"$dir/*.parquet" else root))
+      spark.read.schema(schema).parquet(if (root == dir) s"$dir/*.parquet" else root))
 
   /** Write a complete new version with `write(root)`, publish it, and
     * sweep. `keep(root)` names further versions a published root still

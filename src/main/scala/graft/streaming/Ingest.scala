@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
+import graft.store.MetricSource
+
 /** Structured-Streaming ingest (ST7): events → 1-minute pre-aggregated
   * metric rollups, the store layout every monitor query reads
   * (SURVEY §4.4). The reference never ingested (Graphite owned
@@ -110,11 +112,14 @@ object Ingest {
     * layout): a monitor window's scan prunes to its day directories
     * before parquet even opens a footer — at 100 TB that is the
     * difference between listing two days and listing years. Read it
-    * through [[graft.store.MetricSource.rollup]]. */
+    * through [[graft.store.MetricSource.rollup]]; the rows are written
+    * as its [[graft.store.MetricSource.RollupSchema]], the one
+    * definition of the store's columns. */
   def runAvailableNow(spark: SparkSession, srcDir: String, outDir: String,
       checkpointDir: String): Unit = {
     val q = rollupStream(spark, srcDir)
       .withColumn("date", to_date(col("ts")))
+      .select(MetricSource.RollupSchema.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
       .writeStream
       .outputMode("append")
       .format("parquet")

@@ -184,4 +184,35 @@ class IngestSpec extends SparkTestBase {
     val n2 = spark.read.parquet(out).count()
     assert(n1 == n2)
   }
+
+  test("the rollup source reads the store with its written schema, inferring nothing") {
+    import java.sql.Timestamp
+    val tmp = Files.createTempDirectory("graft-ingest-schema")
+    val out = s"$tmp/rollup"
+    Ingest.runAvailableNow(spark, dir, out, s"$tmp/ckpt")
+    val src = graft.store.MetricSource.rollup(spark, out)
+    val (from, until) =
+      (Timestamp.valueOf("2024-01-10 00:00:00"), Timestamp.valueOf("2024-01-11 12:00:00"))
+    // building the scan launches no schema-inference job
+    var clipped: org.apache.spark.sql.DataFrame = null
+    assert(jobsDuring { clipped = src.scan(from, until) } == 0)
+    // the declared columns and types are the ones Ingest wrote
+    val inferred = spark.read.parquet(out)
+    def columns(t: org.apache.spark.sql.types.StructType) = t.map(f => f.name -> f.dataType)
+    assert(columns(inferred.schema) == columns(graft.store.MetricSource.RollupSchema))
+    // and the rows are the ones an inferring read returns
+    val expected = inferred
+      .filter(col("ts") >= lit(from) && col("ts") <= lit(until))
+      .select(col("metric"), col("ts"), col("sum_v").as("value"))
+    def sorted(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(sorted(clipped).nonEmpty && sorted(clipped) == sorted(expected))
+
+    // a store with no data yet scans as empty; a missing one still fails
+    val empty = Files.createTempDirectory("graft-ingest-empty").toString
+    assert(graft.store.MetricSource.rollup(spark, empty).scan(from, until).count() == 0)
+    val missing = intercept[org.apache.spark.sql.AnalysisException] {
+      graft.store.MetricSource.rollup(spark, s"$empty/nosuch").scan(from, until)
+    }
+    assert(missing.getMessage.contains("PATH_NOT_FOUND"), missing.getMessage)
+  }
 }

@@ -77,4 +77,12 @@ class VersionedTableSpec extends SparkTestBase {
     assert(VersionedTable.current(spark, path).contains(s"$path/v=1"))
     assert(AlertThrottle.loadStateTable(spark, path) == state(2000L))
   }
+
+  test("a state table loads with its written schema: the collect is its only job") {
+    val path = Files.createTempDirectory("graft-vt-schema").toString + "/alert_state"
+    AlertThrottle.saveStateTable(spark, path, state(1000L))
+    var loaded = Map.empty[Long, ThrottleState]
+    assert(jobsDuring { loaded = AlertThrottle.loadStateTable(spark, path) } == 1)
+    assert(loaded == state(1000L))
+  }
 }
