@@ -18,11 +18,15 @@ import org.apache.spark.unsafe.types.UTF8String
   *    aggregate builds the (word, freq) vocabulary table.
   *  - Every merge round then runs over the VOCABULARY (≤ ~1M rows for
   *    real corpora, frequency-weighted), not the corpus: count adjacent
-  *    symbol pairs (explode + sum(freq)), take the argmax (one
-  *    driver-side row — model metadata), rewrite the symbol arrays with
-  *    a greedy left-to-right fold. Lineage is truncated per round.
-  *  - Applying the tokenizer is a broadcast join against the segmented
-  *    vocabulary — corpus tokenization never re-runs the merges.
+  *    symbol pairs (explode + sum(freq)), collect the top pairs (a few
+  *    driver-side rows — model metadata), accept the merges a
+  *    one-merge-per-round run would pick, rewrite the symbol arrays
+  *    with greedy left-to-right folds. Lineage is truncated per round.
+  *  - Applying the char-level tokenizer is a broadcast join against
+  *    the segmented vocabulary. The byte-level id, count and specials
+  *    tokenizers are per-row kernels ([[graft.functions.BpeExpressions]])
+  *    that carry only the model (merges, vocab ids) and apply the merges
+  *    to every word.
   *
   * Determinism: pair counts are exact integer sums; the argmax tie rule
   * is total (count desc, then left asc, right asc), so the learned
@@ -73,40 +77,14 @@ object Bpe {
       .agg(sum(col("freq")).as("c"))
       .orderBy(col("c").desc, col("l"), col("r"))
 
-  /** Learn `numMerges` merges from the vocabulary table. Returns them in
-    * rank order; stops early if no pair occurs twice. One driver round
-    * (count + argmax + rewrite) PER MERGE — the reference formulation;
-    * [[learnMergesFromVocabBatched]] learns the same list in far fewer
-    * rounds and is what production-size vocabularies should use. */
-  def learnMergesFromVocab(vocab: DataFrame, numMerges: Int): Seq[Merge] = {
-    var words = vocab
-      .select(col("word"), col("freq"), initialSymbols(col("word")).as("symbols"))
-      .localCheckpoint(true)
-    val merges = scala.collection.mutable.ArrayBuffer[Merge]()
-    var done = false
-    var rank = 0
-    while (rank < numMerges && !done) {
-      val top = pairCounts(words).limit(1).collect()
-      if (top.isEmpty || top(0).getLong(2) < 2) done = true
-      else {
-        val (l, r) = (top(0).getString(0), top(0).getString(1))
-        merges += Merge(rank, l, r)
-        words = words
-          .select(col("word"), col("freq"), applyMerge(col("symbols"), l, r).as("symbols"))
-          .localCheckpoint(true)
-        rank += 1
-      }
-    }
-    merges.toSeq
-  }
-
   final case class BatchedLearn(merges: Seq[Merge], rounds: Int)
 
-  /** [[learnMergesFromVocab]] in BATCHED rounds: one pair-count job
-    * collects the top `sliceSize` pairs, and a driver-side greedy
-    * filter accepts a prefix of merges PROVABLY equal to what the
-    * one-merge-per-round reference would pick, cutting driver rounds
-    * for a production 32k-merge vocabulary from 32k to hundreds.
+  /** Learn up to `numMerges` merges from the vocabulary table, in rank
+    * order, stopping early if no pair occurs twice. Rounds are BATCHED:
+    * one pair-count job collects the top `sliceSize` pairs, and a
+    * driver-side greedy filter accepts a prefix of merges PROVABLY equal
+    * to what one-merge-per-round Sennrich BPE would pick, cutting
+    * driver rounds for a 32k-merge vocabulary from 32k to hundreds.
     *
     * Soundness of accepting m₂ after m₁ without recounting, from two
     * invariants of a single merge (a,b)→ab:
@@ -198,10 +176,6 @@ object Bpe {
     BatchedLearn(merges.toSeq, rounds)
   }
 
-  /** Learn merges straight from a corpus. */
-  def learnMerges(df: DataFrame, textCol: String, numMerges: Int): Seq[Merge] =
-    learnMergesFromVocab(wordFreqs(df, textCol), numMerges)
-
   /** Segment a vocabulary with a learned merge list: (word, subwords).
     * Merges apply in rank order — the tokenizer's behavior on ANY word,
     * materialized once over the vocab, vocab-sized.
@@ -216,9 +190,13 @@ object Bpe {
     * by K regardless of vocabulary size; the materializations are
     * vocab-sized, never corpus-sized. */
   def segmentTable(vocab: DataFrame, merges: Seq[Merge],
-      checkpointEvery: Int = 32): DataFrame = {
-    val init = vocab.select(col("word"), initialSymbols(col("word")).as("symbols"))
-    val segmented = merges.zipWithIndex.foldLeft(init) { case (df, (m, i)) =>
+      checkpointEvery: Int = 32): DataFrame =
+    segmentWith(vocab, merges, checkpointEvery, initialSymbols)
+
+  private def segmentWith(vocab: DataFrame, merges: Seq[Merge],
+      checkpointEvery: Int, init: Column => Column): DataFrame = {
+    val start = vocab.select(col("word"), init(col("word")).as("symbols"))
+    val segmented = merges.zipWithIndex.foldLeft(start) { case (df, (m, i)) =>
       val next = df.select(col("word"),
         applyMerge(col("symbols"), m.left, m.right).as("symbols"))
       if ((i + 1) % checkpointEvery == 0 && i + 1 < merges.size)
@@ -372,17 +350,8 @@ object Bpe {
 
   /** Byte-level [[segmentTable]]: (word, subwords), no sentinel. */
   def segmentTableBytes(vocab: DataFrame, merges: Seq[Merge],
-      checkpointEvery: Int = 32): DataFrame = {
-    val init = vocab.select(col("word"), initialByteSymbols(col("word")).as("symbols"))
-    val segmented = merges.zipWithIndex.foldLeft(init) { case (df, (m, i)) =>
-      val next = df.select(col("word"),
-        applyMerge(col("symbols"), m.left, m.right).as("symbols"))
-      if ((i + 1) % checkpointEvery == 0 && i + 1 < merges.size)
-        next.localCheckpoint(true)
-      else next
-    }
-    segmented.select(col("word"), col("symbols").as("subwords"))
-  }
+      checkpointEvery: Int = 32): DataFrame =
+    segmentWith(vocab, merges, checkpointEvery, initialByteSymbols)
 
   /** Byte-level [[tokenize]]: (idCol, pos, subpos, subword). Unknown
     * words fall back to their byte symbols — with a 256-symbol base
@@ -397,29 +366,12 @@ object Bpe {
         posexplode(coalesce(col("subwords"), initialByteSymbols(col("word"))))
           .as(Seq("subpos", "subword")))
 
-  /** Per-doc TOKEN COUNTS without materializing the tokens: the
-    * token-budget/packing input ([[graft.ext.Export.writeShards]],
-    * [[Sampling]] budgets) needs ntok, not the token stream — joining
-    * word rows against the segment table's SIZES skips the per-token
-    * explode entirely (≈ token-per-word× fewer intermediate rows; on
-    * the x90 chain that is the difference between a word-sized and a
-    * token-sized shuffle). Unknown words count their byte symbols —
-    * exactly what [[tokenizeBytes]]' fallback would emit. */
-  def tokenCountsBytes(df: DataFrame, idCol: String, textCol: String,
-      segments: DataFrame): DataFrame = {
-    val sizes = segments.select(col("word"), size(col("subwords")).as("__n"))
-    df.select(col(idCol), explode(byteWords(col(textCol))).as("word"))
-      .join(broadcast(sizes), Seq("word"), "left")
-      .groupBy(col(idCol))
-      .agg(sum(coalesce(col("__n"), length(col("word")))).as("ntok"))
-  }
-
   /** The STABLE id assignment a training stack consumes (the GPT-2
     * vocab shape): ids 0..255 are the byte symbols IN BYTE ORDER
     * (id = the byte value — position-independent, corpus-independent),
     * id 256+rank is each merge's product symbol. Total and injective
-    * over everything [[tokenizeBytes]] can emit (every subword is a
-    * byte symbol or a merge product), so id lookup never misses. */
+    * over everything the tokenizers can emit (every subword is a byte
+    * symbol or a merge product), so id lookup never misses. */
   def byteVocab(merges: Seq[Merge]): Map[String, Int] = {
     val base = (0 until 256).map(b => ByteLevel.byteToChar(b).toString -> b)
     val merged = merges.map(m => (m.left + m.right) -> (256 + m.rank))
@@ -429,76 +381,36 @@ object Bpe {
     vocab
   }
 
-  /** [[tokenizeBytes]] to INTEGER token ids: (idCol, pos, subpos,
-    * token_id) — the tensor-ready shape. The vocab rides as a
-    * broadcast (vocab-sized) lookup frame; the id join is total by
-    * [[byteVocab]]'s construction, and the plan asserts it (an inner
-    * join would silently DROP a row on a vocab bug — the left join +
-    * null check turns that into a loud analysis-time invariant). */
+  /** Byte-level tokenization to INTEGER token ids: (idCol, pos, subpos,
+    * token_id) — the tensor-ready shape, `pos` the byte-word index and
+    * `subpos` the subword index inside it. One per-row kernel
+    * ([[graft.functions.BpeExpressions.BpeTokenizeToIds]]) carries only
+    * the model — (merges, vocab ids), constant-sized — and applies the
+    * merges in rank order to EVERY word, exactly as [[segmentTableBytes]]
+    * segments a vocabulary word: a word's ids do not depend on which
+    * corpus the merges were learned from. `vocabIds` defaults (null) to
+    * [[byteVocab]] of `merges`; an IMPORTED tokenizer passes its own
+    * file's mapping ([[ModelStore.importGpt2]]: a real GPT-2
+    * `encoder.json` assigns base-byte ids by char codepoint, not byte
+    * value, so the file is the authority). A subword missing from
+    * `vocabIds` emits −1, which [[detokenizeIds]] rejects loudly. */
   def tokenizeBytesToIds(df: DataFrame, idCol: String, textCol: String,
-      segments: DataFrame, merges: Seq[Merge]): DataFrame =
-    tokenizeBytesToIds(df, idCol, textCol, segments, byteVocab(merges))
-
-  /** [[tokenizeBytesToIds]] against an EXPLICIT subword → id mapping —
-    * the path an IMPORTED tokenizer takes ([[ModelStore.importGpt2]]):
-    * a real GPT-2 `encoder.json` assigns base-byte ids by char
-    * codepoint, not byte value, so the file's mapping is the
-    * authority, never [[byteVocab]]'s convention. */
-  def tokenizeBytesToIds(df: DataFrame, idCol: String, textCol: String,
-      segments: DataFrame, vocabIds: Map[String, Int]): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val vocab = vocabIds.toSeq.toDF("subword", "token_id")
-    tokenizeBytes(df, idCol, textCol, segments)
-      .join(broadcast(vocab), Seq("subword"), "left")
-      .select(col(idCol), col("pos"), col("subpos"),
-        // total by construction: surface a vocab bug as an error value
-        // (-1) the DetokenizeSpec/round-trip gates would catch, never
-        // as a silently dropped token
-        coalesce(col("token_id"), lit(-1)).as("token_id"))
-  }
-
-  /** [[tokenizeBytesToIds]] as ONE fused kernel
-    * ([[graft.functions.BpeExpressions.BpeTokenizeToIds]]) — same
-    * rows, no segment-table broadcast: the DataFrame form ships the
-    * corpus-derived word→subwords table to every task (vocabulary-
-    * sized, grows with the corpus) and pays two Generates + two
-    * broadcast joins per pass; the kernel carries only (merges, vocab
-    * ids) — model-sized, the true 100-TB scoring posture — and
-    * re-derives each word's segmentation with the exact
-    * [[segmentTableBytes]] semantics (spec-pinned equal in BpeSpec;
-    * the x31c/x93-family oracle gates hash the composition).
-    *
-    * OOV NOTE: row-exact equality with [[tokenizeBytesToIds]] holds
-    * for words present in the join path's segment table (always true
-    * when the tokenized corpus is the vocab corpus). For a word ABSENT
-    * from that table the join path falls back to raw byte symbols
-    * while this kernel applies the merges — different ids, identical
-    * detokenized bytes (see the divergence note in
-    * [[graft.functions.BpeExpressions]]). */
-  def tokenizeBytesToIdsFused(df: DataFrame, idCol: String, textCol: String,
       merges: Seq[Merge], vocabIds: Map[String, Int] = null): DataFrame = {
-    val vocab = Option(vocabIds).getOrElse(byteVocab(merges))
     val k = graft.functions.BpeExpressions.bpeTokenizeToIds(
-      col(textCol), merges.map(m => (m.left, m.right)), vocab)
-    df.select(col(idCol), explode(k).as("t"))
-      .select(col(idCol), col("t.pos").as("pos"),
-        col("t.subpos").as("subpos"), col("t.token_id").as("token_id"))
+      col(textCol), merges.map(m => (m.left, m.right)), vocabOr(merges, vocabIds))
+    explodeTokens(df, idCol, k)
   }
 
-  /** [[tokenCountsBytes]] as a pure column kernel — per-doc totals
-    * with no explode/join/aggregation at all; docs with no byte-words
-    * drop (the groupBy path's absent-row semantics). Same OOV note as
-    * [[tokenizeBytesToIdsFused]]: counts agree with the join path only
-    * for in-vocab words (OOV words count their kernel segmentation,
-    * the join path their byte length) — pair these counts with KERNEL
-    * tokens, never with join-path tokens, on a corpus that may contain
-    * OOV words. */
-  def tokenCountsBytesFused(df: DataFrame, idCol: String, textCol: String,
+  /** Per-doc TOKEN COUNTS (idCol, ntok) without materializing the
+    * tokens — the token-budget/packing input ([[Export.writeShards]],
+    * [[Sampling]] budgets). A column kernel with no explode, join or
+    * aggregation; its counts equal [[tokenizeBytesToIds]]' rows per doc
+    * for every text, and docs with no byte-words drop (they have no
+    * tokens). */
+  def tokenCountsBytes(df: DataFrame, idCol: String, textCol: String,
       merges: Seq[Merge], vocabIds: Map[String, Int] = null): DataFrame = {
-    val vocab = Option(vocabIds).getOrElse(byteVocab(merges))
     val k = graft.functions.BpeExpressions.bpeTokenCount(
-      col(textCol), merges.map(m => (m.left, m.right)), vocab)
+      col(textCol), merges.map(m => (m.left, m.right)), vocabOr(merges, vocabIds))
     df.select(col(idCol), k.as("ntok")).filter(col("ntok") > 0)
   }
 
@@ -506,85 +418,33 @@ object Bpe {
     * (the HuggingFace `added_tokens` contract, [[ModelStore
     * .importHuggingFaceFull]]): each literal occurrence of a special's
     * content becomes ONE token with the file's id — never byte-level
-    * segmented — and the text between occurrences tokenizes through the
-    * normal path. Longest special wins on overlap (the tokenizers
-    * library's added-token matching). Output shape is unchanged:
-    * `(idCol, pos, subpos, token_id)` with `pos` numbering
-    * words-and-specials in document order (one doc-bounded window
-    * renumber — never corpus-ordered). */
+    * segmented — and the text between occurrences tokenizes as
+    * [[tokenizeBytesToIds]] does. Longest special wins on overlap (the
+    * tokenizers library's added-token matching). Output shape is
+    * unchanged: `(idCol, pos, subpos, token_id)` with `pos` numbering
+    * words-and-specials in document order. One per-row kernel
+    * ([[graft.functions.BpeExpressions.BpeTokenizeWithSpecials]]). */
   def tokenizeBytesToIdsWithSpecials(df: DataFrame, idCol: String,
-      textCol: String, segments: DataFrame, vocabIds: Map[String, Int],
-      specials: Seq[(String, Int)]): DataFrame = {
-    if (specials.isEmpty) return tokenizeBytesToIds(df, idCol, textCol, segments, vocabIds)
-    specials.foreach { case (c, _) => require(c.nonEmpty, "empty special token") }
-    require(specials.map(_._1).distinct.size == specials.size,
-      "duplicate special token contents")
-    val spark = df.sparkSession
-    import spark.implicits._
-    // longest-first alternation so an overlapping shorter special never
-    // steals a longer one's prefix
-    val alt = specials.sortBy(-_._1.length)
-      .map(s => java.util.regex.Pattern.quote(s._1)).mkString("|")
-    // interleave the split segments with the matched specials:
-    // pieces = seg0, m0, seg1, m1, ..., segN  (split keeps trailing
-    // empties with limit -1, so counts always align: |segs| = |m| + 1)
-    val segs = split(col(textCol), alt, -1)
-    val matched = regexp_extract_all(col(textCol), lit(s"($alt)"), lit(1))
-    val pieces = df.select(col(idCol),
-        posexplode(flatten(zip_with(
-          segs, concat(matched, array(lit(null).cast("string"))),
-          (s, m) => array(struct(s.as("piece"), lit(false).as("is_special")),
-            struct(m.as("piece"), lit(true).as("is_special"))))))
-          .as(Seq("piecepos", "p")))
-      .filter(col("p.piece").isNotNull)
-      .select(col(idCol), col("piecepos"),
-        col("p.piece").as("piece"), col("p.is_special").as("is_special"))
-    val specialId = specials.foldLeft(lit(null).cast("int")) { case (acc, (c, id)) =>
-      when(col("piece") === c, lit(id)).otherwise(acc)
-    }
-    val specialRows = pieces.filter(col("is_special"))
-      .select(col(idCol), col("piecepos"), lit(0).as("wordpos"),
-        lit(0).as("subpos"), specialId.as("token_id"))
-    val vocab = vocabIds.toSeq.toDF("subword", "token_id")
-    val textRows = pieces.filter(!col("is_special"))
-      .select(col(idCol), col("piecepos"),
-        posexplode(byteWords(col("piece"))).as(Seq("wordpos", "word")))
-      .join(broadcast(segments), Seq("word"), "left")
-      .select(col(idCol), col("piecepos"), col("wordpos"),
-        posexplode(coalesce(col("subwords"), initialByteSymbols(col("word"))))
-          .as(Seq("subpos", "subword")))
-      .join(broadcast(vocab), Seq("subword"), "left")
-      .select(col(idCol), col("piecepos"), col("wordpos"), col("subpos"),
-        coalesce(col("token_id"), lit(-1)).as("token_id"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(idCol)).orderBy(col("piecepos"), col("wordpos"))
-    specialRows.unionByName(textRows)
-      .withColumn("pos", (dense_rank().over(w) - 1).cast("int"))
-      .select(col(idCol), col("pos"), col("subpos").cast("int"), col("token_id"))
-  }
-
-  /** [[tokenizeBytesToIdsWithSpecials]] as ONE fused kernel
-    * ([[graft.functions.BpeExpressions.BpeTokenizeWithSpecials]]) —
-    * same output frame (atomic special ids, the dense words-and-
-    * specials `pos` numbering), no corpus-sized segment-table
-    * broadcast: the model payload is (merges, vocab ids, specials),
-    * constant-sized. Special matching replicates the DataFrame path's
-    * longest-first literal alternation exactly (spec-pinned in
-    * BpeSpec). Same OOV note as [[tokenizeBytesToIdsFused]]. */
-  def tokenizeBytesToIdsWithSpecialsFused(df: DataFrame, idCol: String,
       textCol: String, merges: Seq[Merge], vocabIds: Map[String, Int],
       specials: Seq[(String, Int)]): DataFrame = {
     if (specials.isEmpty)
-      return tokenizeBytesToIdsFused(df, idCol, textCol, merges, vocabIds)
+      return tokenizeBytesToIds(df, idCol, textCol, merges, vocabIds)
     specials.foreach { case (c, _) => require(c.nonEmpty, "empty special token") }
     require(specials.map(_._1).distinct.size == specials.size,
       "duplicate special token contents")
     val k = graft.functions.BpeExpressions.bpeTokenizeWithSpecials(
       col(textCol), merges.map(m => (m.left, m.right)), vocabIds, specials)
-    df.select(col(idCol), explode(k).as("t"))
+    explodeTokens(df, idCol, k)
+  }
+
+  private def vocabOr(merges: Seq[Merge], vocabIds: Map[String, Int]): Map[String, Int] =
+    Option(vocabIds).getOrElse(byteVocab(merges))
+
+  /** A kernel's per-doc token array → (idCol, pos, subpos, token_id) rows. */
+  private def explodeTokens(df: DataFrame, idCol: String, tokens: Column): DataFrame =
+    df.select(col(idCol), explode(tokens).as("t"))
       .select(col(idCol), col("t.pos").as("pos"),
         col("t.subpos").as("subpos"), col("t.token_id").as("token_id"))
-  }
 
   /** Inverse of [[tokenizeBytesToIdsWithSpecials]]: specials splice
     * back VERBATIM (their content is raw text, not byte-level symbols —
@@ -641,8 +501,8 @@ object Bpe {
       merges: Seq[Merge]): DataFrame =
     detokenizeIds(tokens, idCol, byteVocab(merges))
 
-  /** [[detokenizeIds]] against an explicit subword → id mapping (the
-    * imported-tokenizer twin). An id ABSENT from the vocabulary —
+  /** [[detokenizeIds]] against an explicit subword → id mapping (an
+    * imported tokenizer's). An id ABSENT from the vocabulary —
     * including the −1 error sentinel [[tokenizeBytesToIds]] emits on a
     * vocab bug — fails LOUDLY here: without the check, the null
     * subword would vanish inside concat_ws and a corrupted id stream

@@ -423,8 +423,8 @@ object Export {
     // and when `tokens` is an unmaterialized tokenize pipeline each
     // scan re-runs the whole tokenizer. `docCounts` (idCol, ntok) lets
     // the caller supply the counts from a cheaper source — e.g.
-    // [[Bpe.tokenCountsBytes]]'s word-sized segment-table join, pinned
-    // equal to the materialized count by BpeSpec — so the token stream
+    // [[Bpe.tokenCountsBytes]]'s column kernel, pinned equal to the
+    // token stream's per-doc count by BpeSpec — so the token stream
     // is scanned exactly once. Must equal tokens.groupBy(id).count.
     val counts = Option(docCounts).getOrElse(
       tokens.groupBy(col(idCol)).agg(count(lit(1)).as("ntok")))

@@ -23,10 +23,11 @@ import org.apache.spark.sql.types.DecimalType
   *    softmax normalizers, and gradient terms are rounded to fixed
   *    decimals and DECIMAL-summed, so the fitted model is bit-identical
   *    under any partitioning (`local[32]` model == 1000-executor model);
-  *  - batch scoring: one broadcast join + one argmax aggregation;
-  *  - streaming scoring: [[langIdCol]] — the whole model rides the plan
-  *    as one MapType literal and scoring is a per-row fold, no join, no
-  *    shuffle, no state (usable in a Structured Streaming `select`).
+  *  - scoring: [[langIdCol]] — the whole model rides the plan in one
+  *    per-row kernel, no join, no shuffle, no state (usable in a
+  *    Structured Streaming `select`). [[predictStored]] and
+  *    [[predictPortable]] score with the engine-portable md5 bucketer,
+  *    for the oracle-checked gates x57b and x56.
   *
   * Scale contract (the [[QualityClassifier]] one): TRAIN on a bounded
   * labeled sample — labels are the scarce resource — SCORE the full
@@ -117,9 +118,12 @@ object LangId {
     * for oracle-checkable stored models). */
   def features(df: DataFrame, idCol: String, textCol: String, dim: Int,
       minN: Int, maxN: Int, bucketOf: Column => Column = null): DataFrame = {
-    // one explode pass (the [[predictPortable]] shape): the per-doc
-    // gram total is closed-form on the base frame ([[gramCount]]),
-    // never a second aggregation pass over the exploded grams
+    // one explode pass: the per-doc gram total is closed-form on the
+    // base frame ([[gramCount]]), never a second aggregation pass over
+    // the exploded grams. Computing it on a separate non-exploded
+    // branch matters: projected next to the Generate, the optimizer
+    // hoists the per-doc arithmetic into the per-GRAM frame and
+    // re-normalizes the document once per gram
     val g = spreadForExplode(df)
       .select(col(idCol), explode(charNgrams(col(textCol), minN, maxN)).as("g"))
     val n = df.select(col(idCol),
@@ -209,30 +213,6 @@ object LangId {
     Model(dim, minN, maxN, langs, intercepts, weights)
   }
 
-  /** Batch prediction: (idCol, lang). One broadcast join + one argmax
-    * aggregation; ties break to the lexicographically larger code (the
-    * [[TextOps.langId]] rule). Docs whose every gram is out-of-model
-    * (or that have no grams at all) take `fallback` — pass
-    * `TextOps.langId(col("text"))` to chain the marker heuristic, or
-    * leave the default `"und"`. */
-  def predict(df: DataFrame, model: Model, idCol: String, textCol: String,
-      fallback: Column = lit("und")): DataFrame = {
-    val dec = DecimalType(28, 10)
-    val wDf = broadcast(model.weightRows(df.sparkSession))
-    val bOf = typedLit(model.interceptOf)
-    val best = features(df, idCol, textCol, model.dim, model.minN, model.maxN)
-      .join(wDf, Seq("idx"))
-      .groupBy(col(idCol), col("lang"))
-      .agg(sum(round(col("w") * col("cnt"), 9).cast(dec)).cast("double").as("_m"))
-      .select(col(idCol), col("lang"), (col("_m") + element_at(bOf, col("lang"))).as("m"))
-      .groupBy(idCol)
-      .agg(max(struct(col("m"), col("lang"))).as("_b"))
-      .select(col(idCol), col("_b.lang").as("_lang"))
-    df.select(col(idCol), fallback.as("_fb"))
-      .join(best, Seq(idCol), "left")
-      .select(col(idCol), coalesce(col("_lang"), col("_fb")).as("lang"))
-  }
-
   /** Stateless scoring as a PURE COLUMN EXPRESSION (the
     * [[QualityClassifier.scoreCol]] analog): the whole model rides the
     * plan in one
@@ -240,92 +220,19 @@ object LangId {
     * join, no shuffle, no state, so it drops into a Structured
     * Streaming `select` as-is. This is the 100 TB scoring path: one
     * JIT-able loop per row, whole corpus, zero exchanges (the
-    * LshSignatureFloat precedent — the column-algebra fold form below
-    * re-evaluated the gram array once per class per row and measured
-    * 8.8 s on the x57 scan; the kernel is ~50×cheaper with
-    * bit-identical semantics, spec-pinned against both other paths).
+    * LshSignatureFloat precedent — a column-algebra fold of the same
+    * math re-evaluates the gram array once per class per row, because
+    * higher-order lambdas get no common-subexpression elimination, and
+    * measured 8.8 s on the x57 scan; the kernel is ~50× cheaper).
     *
-    * Margins are plain double folds in gram order; agreement with
-    * [[predict]]'s decimal-summed path is exact on the argmax for any
-    * non-knife-edge model (spec-pinned). */
+    * Margins are plain double folds in gram order. LangIdSpec pins the
+    * kernel to that fold bit-exactly, and its argmax to a
+    * decimal-summed weight-table join for a non-knife-edge model. */
   def langIdCol(textCol: Column, model: Model, fallback: Column = lit("und")): Column =
     coalesce(
       graft.functions.LangIdExpressions.langIdScore(textCol, model.dim,
         model.minN, model.maxN, model.langs, model.intercepts, model.weights),
       fallback)
-
-  /** [[langIdCol]]'s reference semantics in plain column algebra
-    * (fold + zip_with) — the form the kernel is spec-pinned against.
-    * Slow on purpose-built scans (HOF lambdas get no CSE); use
-    * [[langIdCol]] everywhere real. */
-  def langIdColFold(textCol: Column, model: Model, fallback: Column = lit("und")): Column = {
-    val k = model.langs.size
-    val wMap = typedLit(model.weights)
-    val zeros = typedLit(Seq.fill(k)(0.0))
-    val bArr = typedLit(model.intercepts)
-    val langsArr = typedLit(model.langs)
-    val grams = charNgrams(textCol, model.minN, model.maxN)
-    val folded = aggregate(grams, zeros, (acc, g) =>
-      zip_with(acc,
-        coalesce(element_at(wMap, pmod(xxhash64(g), lit(model.dim)).cast("int")), zeros),
-        (a, b) => a + b))
-    val withB = zip_with(folded, bArr, (m, b) => m / size(grams) + b)
-    val best = array_max(zip_with(withB, langsArr,
-      (m, l) => struct(m.as("m"), l.as("lang"))))
-    when(size(grams) > 0, best.getField("lang")).otherwise(fallback)
-  }
-
-  /** [[predict]]'s oracle-anchoring twin (the
-    * [[QualityClassifier.scorePortable]] / x29b precedent: oracle the
-    * deterministic inference stage of an engine-specific pipeline). The
-    * xxhash64 featurizer has no SQL twin, so grams hash into the
-    * portable 16-bit md5-prefix bucket space and the per-(bucket, class)
-    * weight is a caller-supplied CLOSED-FORM column pair; every other
-    * stage is byte-for-byte the [[predict]] discipline — per-(doc,
-    * bucket) counts, L1 normalization, 9-decimal rounded margin terms
-    * summed as exact DECIMAL, argmax with ties to the larger code. The
-    * pinned weight table has RANK-1 structure — w(bucket, k) = base(b) +
-    * k·delta(b) — so the |langs| class margins collapse to TWO decimal
-    * sums per doc (m_k = A + k·B + intercept_k), an in-row expansion,
-    * and an in-row argmax: the gate costs two aggregates instead of
-    * |langs|, on both engines, while still exercising every inference
-    * stage (the general-weight wide-agg form measured 7.1 s at sf0.1 —
-    * 20 decimal roundings per (doc, bucket) row was the entire cost). */
-  def predictPortable(df: DataFrame, idCol: String, textCol: String,
-      langs: Seq[String], minN: Int, maxN: Int,
-      baseOfBucket: Column => Column, deltaOfBucket: Column => Column,
-      interceptOf: Int => Double): DataFrame = {
-    val dec = DecimalType(28, 10)
-    // ONE explode pass: the per-doc gram total is CLOSED-FORM length
-    // arithmetic ([[gramCount]]) on the BASE frame — the old shape
-    // re-ran the scan + normalize + explode a second time just to count
-    // rows the length already determines. Computing _n on a separate
-    // non-exploded branch matters: projected next to the Generate, the
-    // optimizer hoists the per-doc arithmetic into the per-GRAM frame
-    // and re-normalizes the document once per gram (measured 2.7×
-    // worse); an in-row HOF run-length fold avoids the shuffles but
-    // pays interpreted per-element decimal structs (measured 1.6×
-    // worse). The aggregated join shape keeps every per-gram operation
-    // inside codegen and joins doc-count-sized frames.
-    val wide = spreadForExplode(df)
-    val g = wide.select(col(idCol), explode(charNgrams(col(textCol), minN, maxN)).as("g"))
-    val n = df.select(col(idCol),
-      gramCount(col(textCol), minN, maxN).cast("double").as("_n"))
-    val b = g.select(col(idCol), substring(md5(col("g")), 1, 4).as("bucket"))
-      .groupBy(idCol, "bucket").agg(count(lit(1)).cast("double").as("_c"))
-    val sums = b.join(n, idCol).filter(col("_n") > 0).groupBy(idCol).agg(
-      sum(round(baseOfBucket(col("bucket")) * col("_c") / col("_n"), 9).cast(dec))
-        .cast("double").as("_a"),
-      sum(round(deltaOfBucket(col("bucket")) * col("_c") / col("_n"), 9).cast(dec))
-        .cast("double").as("_b"))
-    val entries = langs.indices.map { ki =>
-      struct((col("_a") + lit(ki.toDouble) * col("_b") + lit(interceptOf(ki))).as("m"),
-        lit(langs(ki)).as("lang"))
-    }
-    sums.select(col(idCol), array_max(array(entries: _*)).as("_best"))
-      .select(col(idCol), col("_best.lang").as("lang"),
-        round(col("_best.m"), 6).as("margin"))
-  }
 
   /** Persist a fitted model as a parquet artifact (the
     * [[Dsir.writeModel]] discipline: weights + intercepts + meta, each
@@ -362,73 +269,49 @@ object LangId {
       ib.map(_._2), weights)
   }
 
-  /** STORED-model scoring with an explicit (portable) bucketer — the
-    * [[predict]] discipline run off a persisted artifact: per-(doc,
-    * bucket) L1-normalized counts, 9-decimal rounded margin terms
-    * summed as exact DECIMAL, intercept add, argmax with ties to the
-    * lexicographically larger code. With [[portableBucket]] features,
-    * an external engine holding the same weight table re-derives every
-    * margin bit-exactly (gate x57b — the x29b "score the stored
-    * classifier" precedent). Returns (id, lang, margin). */
+  /** STORED-model scoring with the [[portableBucket]] rule: (idCol,
+    * lang, margin). One per-row kernel
+    * ([[graft.functions.LangIdExpressions.PortableLangIdScore]]) runs
+    * per-(doc, bucket) L1-normalized counts, 9-decimal rounded margin
+    * terms summed as exact DECIMAL(28,10), the intercept add, argmax
+    * with ties to the lexicographically larger code and a 6-decimal
+    * margin — numerics an external engine holding the same weight table
+    * re-derives bit-exactly (gate x57b hash-checks it against DuckDB;
+    * the x29b "score the stored classifier" precedent). Docs with no
+    * grams, or no in-model bucket, drop. */
   def predictStored(df: DataFrame, idCol: String, textCol: String,
-      model: Model, bucketOf: Column => Column): DataFrame = {
-    val dec = DecimalType(28, 10)
-    val wDf = broadcast(model.weightRows(df.sparkSession))
-    val bOf = typedLit(model.interceptOf)
-    features(df, idCol, textCol, model.dim, model.minN, model.maxN, bucketOf)
-      .join(wDf, Seq("idx"))
-      .groupBy(col(idCol), col("lang"))
-      .agg(sum(round(col("w") * col("cnt"), 9).cast(dec)).cast("double").as("_m"))
-      .select(col(idCol), col("lang"),
-        (col("_m") + element_at(bOf, col("lang"))).as("m"))
-      .groupBy(idCol)
-      .agg(max(struct(col("m"), col("lang"))).as("_b"))
-      .select(col(idCol), col("_b.lang").as("lang"),
-        round(col("_b.m"), 6).as("margin"))
-  }
+      model: Model): DataFrame =
+    scoreRows(df, idCol, graft.functions.LangIdExpressions.portableLangIdScore(
+      col(textCol), model.dim, model.minN, model.maxN,
+      model.langs, model.intercepts, model.weights))
 
-  /** [[predictPortable]] with closed-form hex-coefficient weights as
-    * ONE fused kernel
-    * ([[graft.functions.LangIdExpressions.Rank1PortableLangIdScore]]) —
-    * the x56 gate's scoring discipline without the explode and the two
-    * aggregation exchanges. Bit-exact twin of predictPortable for
-    * `baseOfBucket`/`deltaOfBucket` of the hex-coefficient form (the
-    * only form the portable convention uses); spec-pinned margin-exact
-    * in LangIdSpec. */
-  def predictPortableFused(df: DataFrame, idCol: String, textCol: String,
+  /** Oracle-anchoring scoring over closed-form weights (the
+    * [[QualityClassifier.scorePortable]] / x29b precedent: oracle the
+    * deterministic inference stage of an engine-specific pipeline):
+    * (idCol, lang, margin). Grams hash into the portable 16-bit
+    * md5-prefix bucket space, and the per-(bucket, class) weight has
+    * RANK-1 structure — w(bucket, k) = base(b) + k·delta(b), each a
+    * [[graft.functions.LangIdExpressions.HexCoef]] of the bucket's hex
+    * chars — so the |langs| class margins collapse to TWO decimal sums
+    * per doc (m_k = A + k·B + intercept_k). Every other stage is the
+    * [[predictStored]] discipline. One per-row kernel
+    * ([[graft.functions.LangIdExpressions.Rank1PortableLangIdScore]]);
+    * gate x56 hash-checks it. Docs with no grams drop. */
+  def predictPortable(df: DataFrame, idCol: String, textCol: String,
       langs: Seq[String], minN: Int, maxN: Int,
       base: graft.functions.LangIdExpressions.HexCoef,
       delta: graft.functions.LangIdExpressions.HexCoef,
-      interceptOf: Int => Double): DataFrame = {
-    val s = graft.functions.LangIdExpressions.rank1PortableLangIdScore(
-      col(textCol), minN, maxN, langs, base, delta, interceptOf)
-    spreadForExplode(df)
-      .select(col(idCol), s.as("_s"))
-      .filter(col("_s").isNotNull)
-      .select(col(idCol), col("_s.lang").as("lang"), col("_s.margin").as("margin"))
-  }
+      interceptOf: Int => Double): DataFrame =
+    scoreRows(df, idCol, graft.functions.LangIdExpressions.rank1PortableLangIdScore(
+      col(textCol), minN, maxN, langs, base, delta, interceptOf))
 
-  /** [[predictStored]] with the [[portableBucket]] rule as ONE fused
-    * kernel ([[graft.functions.LangIdExpressions.PortableLangIdScore]])
-    * — per-document arithmetic needs no exchange: the DataFrame form
-    * planned an explode plus 4 Exchanges / 2 SortAggregates and spent
-    * ~2.3× DuckDB's oracle time on the x57b scan; the kernel runs the
-    * identical oracle-pinned numerics (md5 buckets, L1 counts,
-    * 9-decimal rounded terms, DECIMAL(28,10) sums, intercepts, argmax
-    * ties-to-larger, 6-decimal margin) as one JIT-able loop per row —
-    * margin-exact equality is spec-pinned (LangIdSpec) and the x57b
-    * gate hash-checks it against DuckDB at both SFs. Same output
-    * contract: docs with no grams (or no in-model bucket) drop. */
-  def predictStoredPortable(df: DataFrame, idCol: String, textCol: String,
-      model: Model): DataFrame = {
-    val s = graft.functions.LangIdExpressions.portableLangIdScore(
-      col(textCol), model.dim, model.minN, model.maxN,
-      model.langs, model.intercepts, model.weights)
-    spreadForExplode(df) // kernel is CPU-dense: spread like the explode path
-      .select(col(idCol), s.as("_s"))
+  /** A struct(lang, margin) kernel's rows; null scores drop. The kernel
+    * is CPU-dense, so spread the input like an explode. */
+  private def scoreRows(df: DataFrame, idCol: String, score: Column): DataFrame =
+    spreadForExplode(df)
+      .select(col(idCol), score.as("_s"))
       .filter(col("_s").isNotNull)
       .select(col(idCol), col("_s.lang").as("lang"), col("_s.margin").as("margin"))
-  }
 
   /** Deterministic zero-resource bootstrap corpus: short documents
     * sampled (by closed-form index arithmetic — no RNG) from small

@@ -157,8 +157,8 @@ object ModelStore {
     * the encoder.json id mapping)`. The FILE's ids are the authority —
     * a genuine GPT-2 encoder.json numbers base bytes by char
     * codepoint, not byte value, so callers must tokenize through the
-    * returned mapping ([[Bpe.tokenizeBytesToIds]]'s explicit-vocab
-    * overload), never re-derive ids from the merges. Validated
+    * returned mapping ([[Bpe.tokenizeBytesToIds]]'s `vocabIds`), never
+    * re-derive ids from the merges. Validated
     * eagerly: every base byte symbol and every merge product must have
     * an id (a gap would surface later as the −1 sentinel on real
     * data — fail at load instead). */

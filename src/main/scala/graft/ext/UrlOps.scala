@@ -81,10 +81,10 @@ object UrlOps {
     * the `!`) to theirs. The whole list is model-sized metadata
     * (~10k rules), so lookups ride the plan as MAP LITERALS — join-free
     * and shuffle-free, which beats the broadcast-join formulation the
-    * same way [[LangId.langIdCol]] beats its join path: the derivation
-    * stays a pure per-row expression usable in a streaming `select`,
-    * and domain governance (x44-style caps) keys on it with zero extra
-    * exchanges. */
+    * same way [[LangId.langIdCol]] beats a weight-table join: the
+    * derivation stays a pure per-row expression usable in a streaming
+    * `select`, and domain governance (x44-style caps) keys on it with
+    * zero extra exchanges. */
   final case class PublicSuffixes(normal: Map[String, Int], exceptions: Map[String, Int]) {
     /** Longest rule length — bounds the per-row suffix probes. */
     val maxK: Int = (normal.values ++ exceptions.values ++ Seq(1)).max

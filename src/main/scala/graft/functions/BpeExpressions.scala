@@ -9,44 +9,24 @@ import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Fused byte-level BPE tokenization kernels — the per-row form of
-  * [[graft.ext.Bpe.tokenizeBytesToIds]]'s explode → segment-table
-  * broadcast join → explode → vocab broadcast join pipeline (and of
-  * [[graft.ext.Bpe.tokenCountsBytes]]'s word-sized twin).
+/** Byte-level BPE tokenization kernels — the per-row bodies of
+  * [[graft.ext.Bpe.tokenizeBytesToIds]], [[graft.ext.Bpe.tokenCountsBytes]]
+  * and [[graft.ext.Bpe.tokenizeBytesToIdsWithSpecials]].
   *
-  * Why: the DataFrame form BROADCASTS the corpus-derived word→subwords
-  * segment table — vocabulary-sized, i.e. it grows with the corpus —
-  * while the actual model is just (merges, vocab ids), constant-sized.
-  * These kernels carry ONLY the model and re-derive each word's
-  * segmentation with the exact [[graft.ext.Bpe.segmentTableBytes]]
-  * semantics: merges applied in rank order, each as one greedy
-  * left-to-right non-overlapping pass (`out.last == left && cur ==
-  * right` — the applyMerge fold rule). Unknown subwords map to −1
-  * (the join path's loud error value; unreachable under
-  * [[graft.ext.Bpe.byteVocab]]'s total id assignment). Word →
-  * token-ids is a pure function, memoized per executor thread with a
-  * bounded cache (Zipf makes the hit rate high; the cache never
-  * affects results).
-  *
-  * Pinned equal to the join pipeline by BpeSpec (same rows) for every
-  * word PRESENT in the segment-table vocabulary — which is all words
-  * when the tokenized corpus is the vocab corpus, the x31c/x93-family
-  * posture (hash-exact gates downstream).
-  *
-  * DOCUMENTED DIVERGENCE (out-of-vocabulary words): the join path
-  * falls back to raw byte symbols (no merges) for a word absent from
-  * its materialized segment table — an artifact of materializing
-  * segmentation only for the vocab — while these kernels apply the
-  * merges to ANY word (the behavior a real BPE tokenizer has, and the
-  * only one expressible without corpus-sized state). The two paths
-  * then emit different token ids for OOV words, but BOTH streams
-  * detokenize to byte-identical text (merging never loses bytes) and
-  * produce the same per-special counts (ordinary ids never collide
-  * with special ids). BpeSpec pins both facts on an OOV corpus. Do
-  * NOT mix join-path counts with kernel tokens (or vice versa) in one
-  * [[graft.ext.Export.writeTokenBin]] call when the corpus may
-  * contain OOV words — writeTokenBin's manifest/index invariant fails
-  * loudly on such a mismatch. */
+  * Each kernel carries ONLY the model — (merges, vocab ids), plus the
+  * specials, constant-sized — and segments every pretoken word with the
+  * exact [[graft.ext.Bpe.segmentTableBytes]] semantics: merges applied
+  * in rank order, each as one greedy left-to-right non-overlapping pass
+  * (`out.last == left && cur == right` — the applyMerge fold rule). The
+  * merges apply to ANY word, whether or not it occurred in the corpus
+  * the merges were learned from: that is the tokenizer's one OOV
+  * contract, and BpeSpec states it as an equality with a segment-table
+  * join over the tokenized corpus's own words. Unknown subwords map to
+  * −1 (unreachable under [[graft.ext.Bpe.byteVocab]]'s total id
+  * assignment; [[graft.ext.Bpe.detokenizeIds]] rejects it loudly). Word
+  * → token ids is a pure function, memoized per executor thread with a
+  * bounded cache (Zipf makes the hit rate high; the cache never affects
+  * results). */
 object BpeExpressions {
 
   /** The model payload: merges in rank order + subword → id. */
@@ -118,20 +98,28 @@ object BpeExpressions {
       ids
     }
 
-    /** Whole-row tokenize: the (pos, subpos, token_id) entry array. */
-    def tokenizeRow(v: UTF8String): ArrayData = {
-      val words = graft.ext.Bpe.ByteLevel.byteWords(v.toString)
-      val out = scala.collection.mutable.ArrayBuffer.empty[Any]
-      var pos = 0
-      words.foreach { w =>
+    /** Append the (pos, subpos, token_id) entries of `text`'s byte
+      * words to `out`, numbering words from `pos`; returns the next
+      * free `pos`. */
+    def appendWords(text: String, pos: Int,
+        out: scala.collection.mutable.ArrayBuffer[Any]): Int = {
+      var p = pos
+      graft.ext.Bpe.ByteLevel.byteWords(text).foreach { w =>
         val ids = idsOf(w)
         var sp = 0
         while (sp < ids.length) {
-          out += new GenericInternalRow(Array[Any](pos, sp, ids(sp)))
+          out += new GenericInternalRow(Array[Any](p, sp, ids(sp)))
           sp += 1
         }
-        pos += 1
+        p += 1
       }
+      p
+    }
+
+    /** Whole-row tokenize: the (pos, subpos, token_id) entry array. */
+    def tokenizeRow(v: UTF8String): ArrayData = {
+      val out = scala.collection.mutable.ArrayBuffer.empty[Any]
+      appendWords(v.toString, 0, out)
       new GenericArrayData(out.toArray)
     }
 
@@ -146,8 +134,8 @@ object BpeExpressions {
 
   /** text → array<struct<pos,subpos,token_id>> — one entry per token,
     * `pos` the byte-word index, `subpos` the in-word subword index
-    * (the exact row shape [[graft.ext.Bpe.tokenizeBytesToIds]] emits
-    * after its two explodes). Empty/word-less text → empty array. */
+    * (the row shape [[graft.ext.Bpe.tokenizeBytesToIds]] explodes).
+    * Empty/word-less text → empty array. */
   final case class BpeTokenizeToIds(child: Expression, model: BpeModelRef)
       extends UnaryExpression with ExpectsInputTypes {
     override def inputTypes = Seq(StringType)
@@ -172,12 +160,11 @@ object BpeExpressions {
       copy(child = newChild)
   }
 
-  /** text → total token count (long) — the fused twin of
-    * [[graft.ext.Bpe.tokenCountsBytes]]'s per-doc sum; 0 for word-less
-    * text (callers filter to reproduce the join path's absent-row
-    * semantics). Non-deterministic fence: a caller's `> 0` filter
-    * would otherwise be pushed below the projection and evaluate the
-    * kernel twice (the §4.4 duplication). */
+  /** text → total token count (long), the per-doc value of
+    * [[graft.ext.Bpe.tokenCountsBytes]]; 0 for word-less text (the
+    * caller filters those, as they have no tokens). Non-deterministic
+    * fence: a caller's `> 0` filter would otherwise be pushed below the
+    * projection and evaluate the kernel twice (the §4.4 duplication). */
   final case class BpeTokenCount(child: Expression, model: BpeModelRef)
       extends UnaryExpression with ExpectsInputTypes {
     override def inputTypes = Seq(StringType)
@@ -199,16 +186,12 @@ object BpeExpressions {
       copy(child = newChild)
   }
 
-  /** [[BpeModelRef]] plus the HF `added_tokens` atomic-id contract —
-    * the fused twin of [[graft.ext.Bpe.tokenizeBytesToIdsWithSpecials]]'
-    * split/extract/interleave pipeline. Matching replicates the
-    * DataFrame path's regex semantics exactly: literal specials,
-    * leftmost non-overlapping scan, longest special wins at any
-    * position (the path sorts the alternation longest-first and Java
-    * regex takes the first alternative that matches). `pos` numbers
-    * words-and-specials in document order (the dense_rank twin: an
-    * empty text piece between adjacent specials emits nothing and
-    * advances nothing). */
+  /** [[BpeModelRef]] plus the HF `added_tokens` atomic-id contract of
+    * [[graft.ext.Bpe.tokenizeBytesToIdsWithSpecials]]: literal
+    * specials, leftmost non-overlapping scan, longest special wins at
+    * any position (a longest-first regex alternation). `pos` numbers
+    * words-and-specials in document order (an empty text piece between
+    * adjacent specials emits nothing and advances nothing). */
   final class BpeSpecialsRef(val model: BpeModelRef,
       specialsIn: Array[(String, Int)]) extends Serializable {
     private val specials: Array[(String, Int)] = specialsIn.sortBy(-_._1.length)
@@ -217,16 +200,7 @@ object BpeExpressions {
       val text = v.toString
       val out = scala.collection.mutable.ArrayBuffer.empty[Any]
       var pos = 0
-      def emitWords(piece: String): Unit =
-        graft.ext.Bpe.ByteLevel.byteWords(piece).foreach { w =>
-          val ids = model.idsOf(w)
-          var sp = 0
-          while (sp < ids.length) {
-            out += new GenericInternalRow(Array[Any](pos, sp, ids(sp)))
-            sp += 1
-          }
-          pos += 1
-        }
+      def emitWords(piece: String): Unit = pos = model.appendWords(piece, pos, out)
       var segStart = 0
       var i = 0
       while (i < text.length) {
@@ -251,11 +225,9 @@ object BpeExpressions {
   }
 
   /** text → array<struct<pos,subpos,token_id>> with specials atomic —
-    * the exact row shape [[graft.ext.Bpe
-    * .tokenizeBytesToIdsWithSpecials]] emits (same `pos` numbering,
-    * same atomic ids), carried by the model-sized (merges, vocab,
-    * specials) payload instead of the corpus-sized segment-table
-    * broadcast. */
+    * the row shape [[graft.ext.Bpe.tokenizeBytesToIdsWithSpecials]]
+    * explodes, carried by the model-sized (merges, vocab, specials)
+    * payload. */
   final case class BpeTokenizeWithSpecials(child: Expression,
       ref: BpeSpecialsRef)
       extends UnaryExpression with ExpectsInputTypes {

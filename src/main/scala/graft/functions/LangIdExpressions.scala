@@ -10,78 +10,122 @@ import org.apache.spark.sql.types.{DataType, DoubleType, StringType, StructField
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Fused scoring kernel for [[graft.ext.LangId]] — the language-ID
-  * analog of [[VectorExpressions.LshSignatureFloat]].
+/** Scoring kernels for [[graft.ext.LangId]] — the language-ID analog
+  * of [[VectorExpressions.LshSignatureFloat]]: each runs a whole
+  * document's inference as ONE JIT-able loop per row, with no explode,
+  * join or shuffle.
   *
-  * The column-algebra fold ([[graft.ext.LangId.langIdColFold]]) is the
-  * reference semantics, but higher-order lambdas get no
-  * common-subexpression elimination: the gram-array expression is
-  * re-evaluated by `size(grams)` inside the normalizing lambda (once
-  * per CLASS per row) and again by the final guard — measured 8.8 s for
-  * the x57 corpus scan at sf0.1. This kernel runs the identical math as
-  * ONE JIT-able loop per row: normalize (trim → lower → `\s+`→' ', the
-  * exact Spark primitives), walk char n-grams in the same n-ascending /
-  * position-ascending order, hash each gram's UTF-8 bytes with the same
-  * seed-42 xxhash64, accumulate the per-class margin vector in the same
-  * index order (bit-identical doubles), then argmax with the same
-  * tie-to-larger-code rule (`Double.compare` ≥, matching Spark's struct
-  * max ordering incl. NaN-greatest and -0.0 < 0.0). Null when the
-  * document has no grams — callers coalesce in their fallback.
+  * The three kernels share one gram walk and one argmax:
+  *  - [[forEachGram]]: the exact `LangId.normText` chain (Spark trim
+  *    via `UTF8String.trim`, Spark lower via `UTF8String.toLowerCase`,
+  *    java-regex `\s+` → ' ', as `regexp_replace` runs it), then every
+  *    char n-gram in n-ascending / position-ascending order as code
+  *    point substrings (`substr` counts code points), handed over as
+  *    UTF-8 bytes;
+  *  - [[argmax]]: `Double.compare` with ties to the lexicographically
+  *    LARGER lang in `UTF8String` binary order — Spark's struct-max
+  *    rule (NaN greatest, -0.0 < 0.0), independent of the langs' order.
+  *
+  * The portable kernels also share the md5 bucket key
+  * ([[md5Key]]: md5 of the gram's UTF-8 bytes, first four lowercase
+  * hex chars — exactly Spark's `md5`) and the oracle-pinned decimal
+  * contracts ([[decTerm]], [[round6]]). LangIdSpec pins each kernel
+  * against its DataFrame reference form.
   */
 object LangIdExpressions {
 
+  private val SpaceRe = java.util.regex.Pattern.compile("\\s+")
+
+  /** Normalize `input`, hand every char n-gram's UTF-8 bytes to `f`
+    * (n ∈ [minN, maxN] ascending, then position ascending), and return
+    * the gram count. */
+  private def forEachGram(input: UTF8String, minN: Int, maxN: Int)(
+      f: Array[Byte] => Unit): Int = {
+    val norm = SpaceRe.matcher(input.trim().toLowerCase().toString).replaceAll(" ")
+    val cps = norm.codePoints().toArray
+    var total = 0
+    var n = minN
+    while (n <= maxN) {
+      var i = 0
+      while (i <= cps.length - n) {
+        f(new String(cps, i, n).getBytes(StandardCharsets.UTF_8))
+        total += 1
+        i += 1
+      }
+      n += 1
+    }
+    total
+  }
+
+  /** Index of the largest margin; equal margins take the
+    * lexicographically larger lang. */
+  private def argmax(margins: Array[Double], langs: Array[UTF8String]): Int = {
+    var best = 0
+    var j = 1
+    while (j < margins.length) {
+      val c = java.lang.Double.compare(margins(j), margins(best))
+      if (c > 0 || (c == 0 && langs(j).compareTo(langs(best)) > 0)) best = j
+      j += 1
+    }
+    best
+  }
+
+  // MessageDigest is stateful and not thread-safe; one per task thread
+  private val Md5 = ThreadLocal.withInitial[java.security.MessageDigest](() =>
+    java.security.MessageDigest.getInstance("MD5"))
+  private val HexAscii: Array[Int] = "0123456789abcdef".map(_.toInt).toArray
+
+  /** md5(gram)'s first two bytes — its first four hex chars — as one
+    * 16-bit key. */
+  private def md5Key(gram: Array[Byte]): Int = {
+    val d = Md5.get().digest(gram) // digest() resets for the next gram
+    ((d(0) & 0xFF) << 8) | (d(1) & 0xFF)
+  }
+
+  /** ASCII code of hex char `i` (0 = first) of a [[md5Key]]. */
+  private def hexAscii(key: Int, i: Int): Int = HexAscii((key >> (12 - 4 * i)) & 0xF)
+
+  private def halfUp(x: Double, scale: Int): java.math.BigDecimal =
+    java.math.BigDecimal.valueOf(x).setScale(scale, java.math.RoundingMode.HALF_UP)
+
+  /** `CAST(ROUND(x, 9) AS DECIMAL(28,10))`: Spark's Round on DOUBLE,
+    * then its Cast via the shortest-repr BigDecimal. */
+  private def decTerm(x: Double): java.math.BigDecimal = halfUp(halfUp(x, 9).doubleValue(), 10)
+
+  /** `ROUND(m, 6)` on DOUBLE. */
+  private def round6(m: Double): Double = halfUp(m, 6).doubleValue()
+
+  /** struct(lang, margin) of the winning class. */
+  private def langAndMargin(margins: Array[Double], langs: Array[UTF8String])
+      : org.apache.spark.sql.catalyst.InternalRow = {
+    val best = argmax(margins, langs)
+    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+      Array[Any](langs(best), round6(margins(best))))
+  }
+
   /** The model payload carried into codegen as one reference object:
     * `weights` is flat idx-major `double[dim * k]` (zeros for buckets
-    * the model never saw), `langs` pre-encoded UTF8. */
+    * the model never saw), `langs` pre-encoded UTF8. Margins are plain
+    * double sums of the seed-42 xxhash64 buckets' weight rows in gram
+    * order, divided by the gram count, plus the intercept. Null when
+    * the document has no grams — callers coalesce in their fallback. */
   final class LangIdModelRef(val dim: Int, val minN: Int, val maxN: Int,
       val k: Int, val weights: Array[Double], val intercepts: Array[Double],
       val langs: Array[UTF8String]) extends Serializable {
 
-    @transient private lazy val spaceRe = java.util.regex.Pattern.compile("\\s+")
-
     def score(input: UTF8String): UTF8String = {
-      // the exact normText chain: Spark trim (UTF8String.trim), Spark
-      // lower (UTF8String.toLowerCase), Java-regex \s+ replacement —
-      // regexp_replace also runs java.util.regex over the string form
-      val norm = spaceRe.matcher(input.trim().toLowerCase().toString).replaceAll(" ")
-      val cps = norm.codePoints().toArray // substr counts code points
-      val len = cps.length
       val margins = new Array[Double](k)
-      var total = 0
-      var n = minN
-      while (n <= maxN) {
-        val last = len - n
-        var i = 0
-        while (i <= last) {
-          val bytes = new String(cps, i, n).getBytes(StandardCharsets.UTF_8)
-          val h = XXH64.hashUnsafeBytes(bytes, Platform.BYTE_ARRAY_OFFSET, bytes.length, 42L)
-          val idx = (((h % dim) + dim) % dim).toInt
-          val off = idx * k
-          var j = 0
-          while (j < k) { margins(j) += weights(off + j); j += 1 }
-          total += 1
-          i += 1
-        }
-        n += 1
+      val total = forEachGram(input, minN, maxN) { bytes =>
+        val h = XXH64.hashUnsafeBytes(bytes, Platform.BYTE_ARRAY_OFFSET, bytes.length, 42L)
+        val off = (((h % dim) + dim) % dim).toInt * k
+        var j = 0
+        while (j < k) { margins(j) += weights(off + j); j += 1 }
       }
       if (total == 0) null
       else {
-        var best = 0
-        var bm = margins(0) / total + intercepts(0)
-        var j = 1
-        while (j < k) {
-          val m = margins(j) / total + intercepts(j)
-          // ties take the lexicographically LARGER lang — the struct-max
-          // rule — by comparing the strings themselves (UTF8String binary
-          // order = Spark string order), so the rule holds for ANY lang
-          // order, not just the sorted arrays train/readModel produce
-          val c = java.lang.Double.compare(m, bm)
-          if (c > 0 || (c == 0 && langs(j).compareTo(langs(best)) > 0)) {
-            best = j; bm = m
-          }
-          j += 1
-        }
-        langs(best)
+        var j = 0
+        while (j < k) { margins(j) = margins(j) / total + intercepts(j); j += 1 }
+        langs(argmax(margins, langs))
       }
     }
   }
@@ -110,106 +154,47 @@ object LangIdExpressions {
       copy(child = newChild)
   }
 
-  /** PORTABLE-bucket stored-model scoring kernel — the fused form of
-    * [[graft.ext.LangId.predictStored]]'s DataFrame pipeline (explode →
-    * md5 bucket → per-(doc,bucket) counts → weight join → decimal
-    * margin sums → argmax), which planned 4 Exchanges + 2
-    * SortAggregates for what is per-document arithmetic. One loop per
-    * row, zero shuffles, REPLICATING THE ORACLE-PINNED NUMERICS
-    * BIT-EXACTLY (gate x57b hash-compares margins):
+  /** PORTABLE-bucket stored-model scoring kernel
+    * ([[graft.ext.LangId.predictStored]]), REPLICATING THE
+    * ORACLE-PINNED NUMERICS BIT-EXACTLY (gate x57b hash-compares
+    * margins):
     *
-    *   - normalization/grams: the [[LangIdModelRef.score]] chain
-    *     (Spark trim/lower, java-regex `\s+`, code-point substrings);
     *   - bucket: `(ascii(md5hex[0])·53 + ascii(md5hex[1])·17 +
-    *     ascii(md5hex[2])·7 + ascii(md5hex[3])) % dim` — md5 of the
-    *     gram's UTF-8 bytes, lowercase hex, exactly Spark's `md5`;
-    *   - margin term: `round(w · c/n, 9)` = `BigDecimal.valueOf(x)
-    *     .setScale(9, HALF_UP).toDouble` (Spark's Round on DOUBLE),
-    *     cast to DECIMAL(28,10) = `valueOf(t).setScale(10, HALF_UP)`
-    *     (Spark's Cast via the shortest-repr BigDecimal), summed as
-    *     exact decimals, `.doubleValue` (Spark's Decimal→double), +
-    *     intercept in plain IEEE;
-    *   - argmax: ascending-lang scan with `>=` — equal margins take the
-    *     lexicographically larger code (Spark's struct-max tie rule);
-    *   - result margin: `round(m, 6)`, same HALF_UP contract.
+    *     ascii(md5hex[2])·7 + ascii(md5hex[3])) % dim`
+    *     (`LangId.portableBucket`);
+    *   - margin term: [[decTerm]] of `w · (c/n)`, summed as exact
+    *     decimals, `.doubleValue` (Spark's Decimal→double), + intercept
+    *     in plain IEEE;
+    *   - result: [[argmax]], margin [[round6]].
     *
     * Buckets ABSENT from the stored weight table contribute no term
-    * (the inner join's semantics); a document whose every bucket is
-    * absent — or that has no grams — scores null, which callers filter
-    * (the join path simply never produced its rows). Spec-pinned
-    * equal, margin-exact, to the DataFrame path (LangIdSpec). */
+    * (an inner join's semantics); a document whose every bucket is
+    * absent — or that has no grams — scores null, which callers
+    * filter. */
   final class PortableLangIdModelRef(val dim: Int, val minN: Int,
       val maxN: Int, val k: Int, val present: Array[Boolean],
       val weights: Array[Double], val intercepts: Array[Double],
       val langs: Array[UTF8String]) extends Serializable {
 
-    @transient private lazy val spaceRe = java.util.regex.Pattern.compile("\\s+")
-    // MessageDigest is stateful and not thread-safe; one per task thread
-    @transient private lazy val md5 =
-      ThreadLocal.withInitial[java.security.MessageDigest](() =>
-        java.security.MessageDigest.getInstance("MD5"))
-    private val HexAscii: Array[Int] = "0123456789abcdef".map(_.toInt).toArray
-
     def score(input: UTF8String): org.apache.spark.sql.catalyst.InternalRow = {
-      val norm = spaceRe.matcher(input.trim().toLowerCase().toString).replaceAll(" ")
-      val cps = norm.codePoints().toArray
-      val len = cps.length
       val counts = new Array[Int](dim)
-      val digest = md5.get()
-      var total = 0
-      var n = minN
-      while (n <= maxN) {
-        val last = len - n
-        var i = 0
-        while (i <= last) {
-          val bytes = new String(cps, i, n).getBytes(StandardCharsets.UTF_8)
-          val d = digest.digest(bytes) // digest() resets for the next gram
-          val h0 = HexAscii((d(0) >> 4) & 0xF)
-          val h1 = HexAscii(d(0) & 0xF)
-          val h2 = HexAscii((d(1) >> 4) & 0xF)
-          val h3 = HexAscii(d(1) & 0xF)
-          counts((h0 * 53 + h1 * 17 + h2 * 7 + h3) % dim) += 1
-          total += 1
-          i += 1
-        }
-        n += 1
+      val total = forEachGram(input, minN, maxN) { bytes =>
+        val key = md5Key(bytes)
+        counts((hexAscii(key, 0) * 53 + hexAscii(key, 1) * 17 +
+          hexAscii(key, 2) * 7 + hexAscii(key, 3)) % dim) += 1
       }
-      if (total == 0) return null
-      var any = false
-      var best = -1
-      var bm = 0.0
-      var j = 0
-      while (j < k) {
-        var acc: java.math.BigDecimal = null
+      if (!(0 until dim).exists(i => counts(i) > 0 && present(i))) return null
+      val margins = Array.tabulate(k) { j =>
+        var acc = java.math.BigDecimal.ZERO
         var idx = 0
         while (idx < dim) {
-          if (counts(idx) > 0 && present(idx)) {
-            val t9 = java.math.BigDecimal
-              .valueOf(weights(idx * k + j) * (counts(idx).toDouble / total.toDouble))
-              .setScale(9, java.math.RoundingMode.HALF_UP).doubleValue()
-            val dec = java.math.BigDecimal.valueOf(t9)
-              .setScale(10, java.math.RoundingMode.HALF_UP)
-            acc = if (acc == null) dec else acc.add(dec)
-          }
+          if (counts(idx) > 0 && present(idx))
+            acc = acc.add(decTerm(weights(idx * k + j) * (counts(idx).toDouble / total.toDouble)))
           idx += 1
         }
-        if (acc != null) {
-          any = true
-          val m = acc.doubleValue() + intercepts(j)
-          // string-compared tie (see LangIdModelRef.score): the
-          // struct-max rule independent of the caller's lang order
-          val c = if (best < 0) 1 else java.lang.Double.compare(m, bm)
-          if (c > 0 || (c == 0 && langs(j).compareTo(langs(best)) > 0)) {
-            best = j; bm = m
-          }
-        }
-        j += 1
+        acc.doubleValue() + intercepts(j)
       }
-      if (!any) return null
-      val margin = java.math.BigDecimal.valueOf(bm)
-        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        Array[Any](langs(best), margin))
+      langAndMargin(margins, langs)
     }
   }
 
@@ -223,96 +208,45 @@ object LangIdExpressions {
       ((h0 * c0 + h1 * c1 + h2 * c2) % mod - off) / div
   }
 
-  /** RANK-1 portable scoring kernel — the fused form of
-    * [[graft.ext.LangId.predictPortable]]: buckets are the md5 hex
-    * 4-prefix, each bucket carries closed-form (base, delta) weights,
-    * and class margins are `a + k·d + intercept(k)` over the two
-    * decimal-summed per-doc totals. Replays the oracle-pinned numerics
-    * of gate x56 bit-exactly (same BigDecimal contracts as
-    * [[PortableLangIdModelRef]], with predictPortable's own operand
-    * order `(w · c) / n`); argmax = array_max's struct ordering (ties
-    * to the larger code). Null when the document has no grams. */
+  /** RANK-1 portable scoring kernel ([[graft.ext.LangId.predictPortable]]):
+    * buckets are the md5 hex 4-prefix, each bucket carries closed-form
+    * (base, delta) weights, and class margins are `a + k·d +
+    * intercept(k)` over the two decimal-summed per-doc totals. Replays
+    * the oracle-pinned numerics of gate x56 bit-exactly (the
+    * [[decTerm]] contract over `(w · c) / n`, this gate's operand
+    * order); [[argmax]], margin [[round6]]. Null when the document has
+    * no grams. */
   final class Rank1PortableLangIdRef(val minN: Int, val maxN: Int,
       val base: HexCoef, val delta: HexCoef, val intercepts: Array[Double],
       val langs: Array[UTF8String]) extends Serializable {
 
-    @transient private lazy val spaceRe = java.util.regex.Pattern.compile("\\s+")
-    @transient private lazy val md5 =
-      ThreadLocal.withInitial[java.security.MessageDigest](() =>
-        java.security.MessageDigest.getInstance("MD5"))
-    private val HexAscii: Array[Int] = "0123456789abcdef".map(_.toInt).toArray
-
     def score(input: UTF8String): org.apache.spark.sql.catalyst.InternalRow = {
-      val norm = spaceRe.matcher(input.trim().toLowerCase().toString).replaceAll(" ")
-      val cps = norm.codePoints().toArray
-      val len = cps.length
-      val digest = md5.get()
-      var total = 0
-      // collect 16-bit bucket keys (4 hex nibbles), then run-length on
-      // the sorted array — gram counts are prefix-bounded (≤ ~3·len)
-      var keys = new Array[Int](math.max(3 * len, 8))
+      // collect 16-bit bucket keys, then run-length on the sorted array
+      var keys = new Array[Int](64)
       var kn = 0
-      var n = minN
-      while (n <= maxN) {
-        val last = len - n
-        var i = 0
-        while (i <= last) {
-          val bytes = new String(cps, i, n).getBytes(StandardCharsets.UTF_8)
-          val d = digest.digest(bytes)
-          if (kn == keys.length) keys = java.util.Arrays.copyOf(keys, kn * 2)
-          keys(kn) = ((d(0) & 0xFF) << 8) | (d(1) & 0xFF)
-          kn += 1
-          total += 1
-          i += 1
-        }
-        n += 1
+      val total = forEachGram(input, minN, maxN) { bytes =>
+        if (kn == keys.length) keys = java.util.Arrays.copyOf(keys, kn * 2)
+        keys(kn) = md5Key(bytes)
+        kn += 1
       }
       if (total == 0) return null
-      java.util.Arrays.sort(keys, 0, kn)
+      java.util.Arrays.sort(keys, 0, total)
       val nn = total.toDouble
-      var accA: java.math.BigDecimal = null
-      var accB: java.math.BigDecimal = null
+      var accA = java.math.BigDecimal.ZERO
+      var accB = java.math.BigDecimal.ZERO
       var i = 0
-      while (i < kn) {
+      while (i < total) {
         val key = keys(i)
         var j = i
-        while (j < kn && keys(j) == key) j += 1
+        while (j < total && keys(j) == key) j += 1
         val c = (j - i).toDouble
-        val h0 = HexAscii((key >> 12) & 0xF)
-        val h1 = HexAscii((key >> 8) & 0xF)
-        val h2 = HexAscii((key >> 4) & 0xF)
-        // predictPortable's operand order: (weight · c) / n
-        val tA = java.math.BigDecimal.valueOf(base.of(h0, h1, h2) * c / nn)
-          .setScale(9, java.math.RoundingMode.HALF_UP).doubleValue()
-        val tB = java.math.BigDecimal.valueOf(delta.of(h0, h1, h2) * c / nn)
-          .setScale(9, java.math.RoundingMode.HALF_UP).doubleValue()
-        val dA = java.math.BigDecimal.valueOf(tA)
-          .setScale(10, java.math.RoundingMode.HALF_UP)
-        val dB = java.math.BigDecimal.valueOf(tB)
-          .setScale(10, java.math.RoundingMode.HALF_UP)
-        accA = if (accA == null) dA else accA.add(dA)
-        accB = if (accB == null) dB else accB.add(dB)
+        val (h0, h1, h2) = (hexAscii(key, 0), hexAscii(key, 1), hexAscii(key, 2))
+        accA = accA.add(decTerm(base.of(h0, h1, h2) * c / nn))
+        accB = accB.add(decTerm(delta.of(h0, h1, h2) * c / nn))
         i = j
       }
-      val a = accA.doubleValue()
-      val d = accB.doubleValue()
-      var best = 0
-      var bm = a + 0.0 * d + intercepts(0)
-      var k = 1
-      while (k < langs.length) {
-        val m = a + k.toDouble * d + intercepts(k)
-        // string-compared tie (see LangIdModelRef.score): the
-        // struct-max rule independent of the caller's lang order
-        val c = java.lang.Double.compare(m, bm)
-        if (c > 0 || (c == 0 && langs(k).compareTo(langs(best)) > 0)) {
-          best = k; bm = m
-        }
-        k += 1
-      }
-      val margin = java.math.BigDecimal.valueOf(bm)
-        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        Array[Any](langs(best), margin))
+      val (a, d) = (accA.doubleValue(), accB.doubleValue())
+      langAndMargin(Array.tabulate(langs.length)(k => a + k.toDouble * d + intercepts(k)), langs)
     }
   }
 

@@ -342,8 +342,7 @@ object Queries {
     // memory-cached) frame: pushdown when reading parquet, partition
     // filtering on the cached columnar batches otherwise
     minuteRollup(s, dir).filter(
-      col("date") >= to_date(lit(from)) && col("date") <= to_date(lit(untilExcl)) &&
-        col("ts") >= lit(from) && col("ts") < lit(untilExcl))
+      graft.store.DayPartitions.window(lit(from), lit(untilExcl), untilExclusive = true))
   private val hourRollupCache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
   private def hourRollup(s: SparkSession, dir: String): DataFrame = {
     // derive from minuteRollup (not Rollups.hourly) so bench mode reads
@@ -4728,10 +4727,9 @@ object Queries {
        |SELECT doc_id, lang, ROUND(m, 6) AS margin
        |FROM r WHERE rk = 1 ORDER BY doc_id""".stripMargin) { (s, dir) =>
     val langs = graft.ext.LangId.Seed.Vocab.map(_._1).sorted
-    // fused rank-1 portable kernel — bit-exact twin of
-    // LangId.predictPortable with these hex coefficients (spec-pinned;
-    // the DataFrame form paid an explode plus two agg exchanges)
-    graft.ext.LangId.predictPortableFused(
+    // rank-1 portable kernel: one loop per row, no explode and no
+    // aggregation exchange
+    graft.ext.LangId.predictPortable(
         Tables.documents(s, dir)
           .select(col("doc_id"), substring(col("text"), 1, 160).as("t")),
         "doc_id", "t", langs, minN = 1, maxN = 3,
@@ -4744,7 +4742,7 @@ object Queries {
   // X57 — TRAINED char-n-gram language ID over the corpus (rows-only:
   // the GD softmax fit has no SQL twin; LangIdSpec proves ≥0.9 holdout
   // accuracy across 20 languages, partition-order-invariant training,
-  // and join-path ≡ fold-path scoring; x56 oracle-pins the inference
+  // and kernel ≡ join-oracle scoring; x56 oracle-pins the inference
   // math). The model trains ONCE on the deterministic seed corpus (the
   // classifierMemo amortized-setup rationale — in production the fitted
   // weights are a persisted artifact) and scores every document via
@@ -4851,10 +4849,8 @@ object Queries {
   qLazy("x57b_langid_stored")(
       x57bOracleSql(SparkSession.active)) { (s, dir) =>
     val m = langIdStored(s)
-    // fused portable-scoring kernel — bit-exact twin of
-    // LangId.predictStored(portableBucket) (spec-pinned; the DataFrame
-    // form planned 4 Exchanges for per-document arithmetic)
-    graft.ext.LangId.predictStoredPortable(
+    // portable-scoring kernel: per-document arithmetic, no exchange
+    graft.ext.LangId.predictStored(
         Tables.documents(s, dir)
           .select(col("doc_id"), substring(col("text"), 1, 160).as("t")),
         "doc_id", "t", m)
@@ -5969,9 +5965,9 @@ object Queries {
       val v = graft.ext.Bpe.byteWordFreqs(docs, "text").cache()
       (graft.ext.Bpe.learnByteMergesFromVocabBatched(v, 20).merges, v)
     })
-    // fused tokenizer kernel — row-exact twin of the segment-table
-    // join path (BpeSpec pin); no vocab-sized broadcast
-    val toks = graft.ext.Bpe.tokenizeBytesToIdsFused(docs, "doc_id", "text", merges)
+    // the tokenizer kernel carries (merges, vocab ids) only — no
+    // vocab-sized broadcast
+    val toks = graft.ext.Bpe.tokenizeBytesToIds(docs, "doc_id", "text", merges)
     val detok = graft.ext.Bpe.detokenizeIds(toks, "doc_id", merges)
     // an empty-text doc emits no tokens and so no detok row — restore
     // it as the empty string (the conservation law covers it too)
@@ -6010,13 +6006,11 @@ object Queries {
     val wrapped = docs.select(col("doc_id"),
       concat(lit("<|graftbos|>"), col("text"), lit("<|graftsep|>"),
         substring(col("text"), 1, 10), lit("<|grafteot|>")).as("text"))
-    // fused specials-aware tokenizer kernel — no corpus-sized
-    // segment-table broadcast; the substr piece's cut words are OOV
-    // and segment differently from the join path, but the declared
-    // output is invariant to segmentation (detok is byte-exact for any
-    // merge-product stream and ordinary ids never reach the special
-    // range) — BpeSpec pins both laws on an OOV corpus
-    val toks = graft.ext.Bpe.tokenizeBytesToIdsWithSpecialsFused(
+    // the specials-aware tokenizer kernel applies the merges to every
+    // word, so the substr piece's cut (out-of-vocabulary) words segment
+    // as any word does; detok is byte-exact for any merge-product
+    // stream and ordinary ids never reach the special range
+    val toks = graft.ext.Bpe.tokenizeBytesToIdsWithSpecials(
       wrapped, "doc_id", "text", merges, graft.ext.Bpe.byteVocab(merges), specials)
     val nSpec = toks.filter(col("token_id") >= 500000)
       .groupBy("doc_id").agg(count(lit(1)).as("n_special"))
@@ -6047,8 +6041,8 @@ object Queries {
       (graft.ext.Bpe.learnByteMergesFromVocabBatched(v, 20).merges, v)
     })
     // token COUNTS as a pure column kernel (no explode/join/agg at
-    // all — BpeSpec pins equality with the materialized path)
-    val counted = graft.ext.Bpe.tokenCountsBytesFused(docs, "doc_id", "text", merges)
+    // all — BpeSpec pins equality with the token stream's counts)
+    val counted = graft.ext.Bpe.tokenCountsBytes(docs, "doc_id", "text", merges)
       .filter(col("ntok") >= 10) // the short-doc quality floor
     val out = trainingExportDirMemo.getOrElseUpdate(dir,
       java.nio.file.Files.createTempDirectory("graft-trainexp").toString)
@@ -6075,10 +6069,10 @@ object Queries {
       val v = graft.ext.Bpe.byteWordFreqs(docs, "text").cache()
       (graft.ext.Bpe.learnByteMergesFromVocabBatched(v, 20).merges, v)
     })
-    // fused tokenizer + count kernels (BpeSpec-pinned row-exact twins
-    // of the segment-table join path; counts equal toks.groupBy.count)
-    val toks = graft.ext.Bpe.tokenizeBytesToIdsFused(docs, "doc_id", "text", merges)
-    val counts = graft.ext.Bpe.tokenCountsBytesFused(docs, "doc_id", "text", merges)
+    // tokenizer + count kernels (counts equal toks.groupBy.count,
+    // BpeSpec-pinned)
+    val toks = graft.ext.Bpe.tokenizeBytesToIds(docs, "doc_id", "text", merges)
+    val counts = graft.ext.Bpe.tokenCountsBytes(docs, "doc_id", "text", merges)
     val packing = graft.ext.Packing.packContiguous(
       counts, "ntok", 256L, Seq(col("doc_id")))
     graft.ext.Packing.packTokenIds(toks, "doc_id", packing, 256L)
@@ -6104,15 +6098,15 @@ object Queries {
       val v = graft.ext.Bpe.byteWordFreqs(docs, "text").cache()
       (graft.ext.Bpe.learnByteMergesFromVocabBatched(v, 20).merges, v)
     })
-    // fused tokenizer + count kernels (BpeSpec-pinned row-exact): one
-    // kernel pass for the bin write, one pure-column pass for the
+    // tokenizer + count kernels: one kernel pass for the bin
+    // write, one pure-column pass for the
     // layout counts — no segment-table broadcast, no count re-tokenize
-    val toks = graft.ext.Bpe.tokenizeBytesToIdsFused(docs, "doc_id", "text", merges)
+    val toks = graft.ext.Bpe.tokenizeBytesToIds(docs, "doc_id", "text", merges)
     val out = tokenBinDirMemo.getOrElseUpdate(dir,
       java.nio.file.Files.createTempDirectory("graft-tokbin").toString)
     val manifest = graft.ext.Export.writeTokenBin(toks, "doc_id", out,
       tokensPerShard = 16384,
-      docCounts = graft.ext.Bpe.tokenCountsBytesFused(docs, "doc_id", "text", merges))
+      docCounts = graft.ext.Bpe.tokenCountsBytes(docs, "doc_id", "text", merges))
     // the audit (streams every landed bin) and the positioned-read
     // witness are INDEPENDENT jobs over the final state — overlap them
     // (guide §2.6: the scheduler runs concurrent jobs; the audit's
@@ -6225,10 +6219,9 @@ object Queries {
       val v = graft.ext.Bpe.byteWordFreqs(docs, "text").cache()
       (graft.ext.Bpe.learnByteMergesFromVocabBatched(v, 20).merges, v)
     })
-    // one FUSED tokenize pass (BpeSpec-pinned row-exact) serves the
-    // base write + both appends + replay
+    // one tokenize pass serves the base write + both appends + replay
     val toks = graft.ext.Bpe
-      .tokenizeBytesToIdsFused(docs, "doc_id", "text", merges)
+      .tokenizeBytesToIds(docs, "doc_id", "text", merges)
       .localCheckpoint(true)
     val out = java.nio.file.Files
       .createTempDirectory("graft-tokbin-app").toString

@@ -2,8 +2,7 @@ package graft.state
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
 import graft.model.{JobStatus, MonitorSpec}
@@ -13,11 +12,12 @@ import graft.model.{JobStatus, MonitorSpec}
   * re-alerts within `error_timeout` minutes (db/schema.rb:61, default
   * 60), with job status driven by a state machine (Gemfile.lock:167).
   *
-  * Two implementations of the same rule:
-  *  - [[throttleBatch]]: per-job ordered fold (groupByKey →
-  *    flatMapGroups) for batch/replay — deterministic, no checkpoint.
-  *  - [[throttleStream]]: flatMapGroupsWithState for Structured
-  *    Streaming, state = (status, lastAlertedAt), checkpointable.
+  * One implementation: [[replay]], a driver-side per-job ordered fold
+  * with the state carried between calls. Every monitor path runs it
+  * through [[cycle]]: the scheduler per tick, and the streaming runner
+  * per micro-batch from `foreachBatch` (the driver-replay pattern, so
+  * the state lives in the versioned state table, not a Spark state
+  * store).
   *
   * Rule (matching the reference's semantics): alert fires on a failing
   * run iff no alert has fired for this job in the previous
@@ -33,8 +33,8 @@ object AlertThrottle {
   /** An alert that should actually fire. */
   final case class Alert(jobId: Long, at: Timestamp, transition: String)
 
-  /** Per-job persisted throttle state (public: Spark codegen needs the
-    * accessors when encoding it into the state store). */
+  /** Per-job throttle state, carried between [[replay]] calls and
+    * persisted by [[saveStateTable]]. */
   final case class ThrottleState(status: String, lastAlertedAtMillis: Long)
 
   /** A failure episode whose enter-failure alert was SUPPRESSED by the
@@ -46,11 +46,11 @@ object AlertThrottle {
     * alerted (the old semantics). */
   val FailedUnalerted = "failed-unalerted"
 
-  private def foldEvents(events: Iterator[RunEvent],
+  private def foldEvents(events: Seq[RunEvent],
       init: Option[ThrottleState]): (Seq[Alert], ThrottleState) = {
     var st = init.getOrElse(ThrottleState(JobStatus.Success, Long.MinValue))
     val out = Seq.newBuilder[Alert]
-    events.toSeq.sortBy(_.at.getTime).foreach { e =>
+    events.sortBy(_.at.getTime).foreach { e =>
       if (e.failed) {
         val throttleMs = e.errorTimeoutMinutes * 60000L
         // sentinel MinValue = "never alerted" (subtraction would overflow)
@@ -83,36 +83,12 @@ object AlertThrottle {
     val outAlerts = Seq.newBuilder[Alert]
     val outState = Map.newBuilder[Long, ThrottleState]
     byJob.foreach { case (jobId, evs) =>
-      val (alerts, st) = foldEvents(evs.iterator, init.get(jobId))
+      val (alerts, st) = foldEvents(evs, init.get(jobId))
       outAlerts ++= alerts
       outState += jobId -> st
     }
     init.foreach { case (j, st) => if (!byJob.contains(j)) outState += j -> st }
     (outAlerts.result().sortBy(_.at.getTime), outState.result())
-  }
-
-  /** Batch mode: replay each job's runs in time order, emit the alerts
-    * that pass the throttle. Parallel across jobs (one group per job —
-    * state is driver-free). */
-  def throttleBatch(events: Dataset[RunEvent]): Dataset[Alert] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.jobId).flatMapGroups { (_, it) =>
-      foldEvents(it, None)._1.iterator
-    }
-  }
-
-  /** Streaming mode: identical fold, state carried by Spark's state
-    * store across micro-batches. */
-  def throttleStream(events: Dataset[RunEvent]): Dataset[Alert] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.jobId)
-      .flatMapGroupsWithState[ThrottleState, Alert](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Long, it: Iterator[RunEvent], state: GroupState[ThrottleState]) =>
-          val (alerts, st) = foldEvents(it, state.getOption)
-          state.update(st)
-          alerts.iterator
-      }
   }
 
   /** JVM-global lock for the load→replay→save cycle over the shared

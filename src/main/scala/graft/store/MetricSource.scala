@@ -38,10 +38,10 @@ object MetricSource {
     (from, until) => df.filter(col("ts") >= lit(from) && col("ts") <= lit(until))
 
   /** Day-partitioned 1-minute rollup store written by
-    * [[graft.streaming.Ingest.runAvailableNow]]: the window clip becomes
-    * BOTH a partition filter on `date` (directory pruning) and a
-    * row-group filter on the native `ts` — the E1 hot path's 100-TB
-    * layout. `value` is the minutely sum (the store's own grain).
+    * [[graft.streaming.Ingest.runAvailableNow]]: the window clip
+    * ([[DayPartitions.window]]) becomes BOTH a partition filter on
+    * `date` (directory pruning) and a row-group filter on the native
+    * `ts` — the E1 hot path's 100-TB layout. `value` is the minutely sum (the store's own grain).
     *
     * Each scan reads the store with the schema Ingest writes
     * ([[RollupSchema]]) instead of inferring it, which would cost a
@@ -52,8 +52,7 @@ object MetricSource {
     * `PATH_NOT_FOUND`. */
   def rollup(spark: SparkSession, dir: String): MetricSource =
     (from, until) => spark.read.schema(RollupSchema).parquet(dir)
-      .filter(col("date") >= to_date(lit(from)) && col("date") <= to_date(lit(until)) &&
-        col("ts") >= lit(from) && col("ts") <= lit(until))
+      .filter(DayPartitions.window(lit(from), lit(until)))
       .select(col("metric"), col("ts"), col("sum_v").as("value"))
 
   /** The rollup store's columns: [[graft.streaming.Ingest]] writes its

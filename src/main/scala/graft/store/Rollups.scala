@@ -48,13 +48,12 @@ object Rollups {
 
   /** Window-clipped rollup scan, `[from, untilExclusive)`: emits BOTH
     * the `date` partition filter (directory pruning) and the native-`ts`
-    * filter (row-group pruning) — RollupsSpec asserts both reach the
-    * scan. */
+    * filter (row-group pruning) through [[DayPartitions.window]] —
+    * RollupsSpec asserts both reach the scan. */
   def minutelyClipped(spark: SparkSession, rollupDir: String,
       from: String, untilExclusive: String): DataFrame =
     minutely(spark, rollupDir).filter(
-      col("date") >= to_date(lit(from)) && col("date") <= to_date(lit(untilExclusive)) &&
-        col("ts") >= lit(from) && col("ts") < lit(untilExclusive))
+      DayPartitions.window(lit(from), lit(untilExclusive), untilExclusive = true))
 
   /** Hourly re-aggregation of the minute rollup (exact: decimal sums of
     * decimal sums). */
@@ -67,7 +66,6 @@ object Rollups {
     * serving-path reader for Planner/Backtest (value = minute sum). */
   def asMetricSource(spark: SparkSession, rollupDir: String): MetricSource =
     (fromTs, untilTs) => minutely(spark, rollupDir)
-      .filter(col("date") >= to_date(lit(fromTs)) && col("date") <= to_date(lit(untilTs)) &&
-        col("ts") >= lit(fromTs) && col("ts") <= lit(untilTs))
+      .filter(DayPartitions.window(lit(fromTs), lit(untilTs)))
       .select(col("metric"), col("ts"), col("sum_dec").cast("double").as("value"))
 }

@@ -63,7 +63,9 @@ class BacktestSpec extends SparkTestBase {
     val df = Backtest.sweep(src, spec, from, until, stepMinutes = 120)
     df.collect()
     // the sweep's union window is [Jan 9 18:00, Jan 10 18:00] → the scan
-    // may list exactly the two touched day directories, no more
+    // may list the two touched day directories plus one boundary day on
+    // each side (a writer in another zone may have put window rows
+    // there), no more
     def scans(p: org.apache.spark.sql.execution.SparkPlan): Seq[FileSourceScanExec] = {
       (p match {
         case f: FileSourceScanExec => return Seq(f)
@@ -78,7 +80,7 @@ class BacktestSpec extends SparkTestBase {
       assert(sc.partitionFilters.exists(_.references.exists(_.name == "date")),
         s"no date partition filter:\n$sc")
       val parts = sc.relation.location.listFiles(sc.partitionFilters, sc.dataFilters).size
-      assert(parts <= 2, s"two-day sweep window listed $parts day partitions")
+      assert(parts <= 4, s"two-day sweep window listed $parts day partitions")
     }
     // sweep ≡ evaluate on the rollup source too (same grain, same verdicts)
     val sweptEnd = Backtest.sweep(src, spec, until, until, stepMinutes = 120)

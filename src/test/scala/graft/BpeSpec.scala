@@ -8,9 +8,19 @@ import graft.store.Tables
 /** BPE induction: the distributed merges equal a pure-Scala reference
   * run of the Sennrich algorithm, segmentation round-trips, repeated
   * words collapse to single tokens, and learning is partition-order
-  * invariant. */
+  * invariant. The byte-level id, count and specials kernels equal the
+  * segment-table join oracle ([[BpeOracle]]) over the tokenized corpus's
+  * own words — in-vocabulary or not. */
 class BpeSpec extends SparkTestBase {
   import spark.implicits._
+
+  private def learn(df: org.apache.spark.sql.DataFrame, n: Int): Seq[Bpe.Merge] =
+    Bpe.learnMergesFromVocabBatched(Bpe.wordFreqs(df, "text"), n).merges
+
+  /** Multiset equality of two frames' rows. */
+  private def sameRows(a: org.apache.spark.sql.DataFrame,
+      b: org.apache.spark.sql.DataFrame): Boolean =
+    a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
 
   /** Reference implementation: greedy BPE over a word-frequency map,
     * ties (count desc, left asc, right asc) — the spec's ground truth. */
@@ -46,7 +56,7 @@ class BpeSpec extends SparkTestBase {
     val freqs = Map("low" -> 5L, "lower" -> 2L, "newest" -> 6L, "widest" -> 3L)
     val corpus = freqs.toSeq.flatMap { case (w, f) => Seq.fill(f.toInt)(w) }
     val df = corpus.zipWithIndex.map { case (w, i) => (i.toLong, w) }.toDF("id", "text")
-    val got = Bpe.learnMerges(df, "text", 8).map(m => (m.left, m.right))
+    val got = learn(df, 8).map(m => (m.left, m.right))
     val want = referenceMerges(freqs, 8)
     assert(got == want, s"got $got want $want")
     // (e,s) and (s,t) both hit freq 9 (newest 6 + widest 3); the total
@@ -58,12 +68,13 @@ class BpeSpec extends SparkTestBase {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     val freqs = Bpe.wordFreqs(docs, "text")
       .as[(String, Long)].collect().toMap
-    val got = Bpe.learnMerges(docs, "text", 20).map(m => (m.left, m.right))
+    val got = learn(docs, 20).map(m => (m.left, m.right))
     val want = referenceMerges(freqs, 20)
     assert(got == want, s"got $got want $want")
   }
 
   test("batched merge rounds == one-merge-per-round, in far fewer rounds") {
+    // the one-merge-per-round reference is the pure-Scala run above.
     // classic corpus: equality at every requested merge count (the
     // acceptance rule must stop EXACTLY where a recount could reorder)
     val freqs = Map("low" -> 5L, "lower" -> 2L, "newest" -> 6L, "widest" -> 3L)
@@ -71,19 +82,18 @@ class BpeSpec extends SparkTestBase {
     val df = corpus.zipWithIndex.map { case (w, i) => (i.toLong, w) }.toDF("id", "text")
     val vocab = Bpe.wordFreqs(df, "text").localCheckpoint(true)
     for (n <- Seq(1, 3, 8)) {
-      val seq = Bpe.learnMergesFromVocab(vocab, n)
-      val bat = Bpe.learnMergesFromVocabBatched(vocab, n)
-      assert(bat.merges == seq, s"n=$n: got ${bat.merges} want $seq")
+      val seq = referenceMerges(freqs, n)
+      val bat = Bpe.learnMergesFromVocabBatched(vocab, n).merges.map(m => (m.left, m.right))
+      assert(bat == seq, s"n=$n: got $bat want $seq")
     }
     // real corpus: bit-identical list, measured round-count drop
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     val rvocab = Bpe.wordFreqs(docs, "text").localCheckpoint(true)
-    val seq = Bpe.learnMergesFromVocab(rvocab, 40)
+    val seq = referenceMerges(rvocab.as[(String, Long)].collect().toMap, 40)
     val bat = Bpe.learnMergesFromVocabBatched(rvocab, 40)
-    assert(bat.merges == seq,
-      s"diverged at ${bat.merges.zip(seq).indexWhere(p => p._1 != p._2)}: " +
-        s"got ${bat.merges.map(m => (m.left, m.right))} " +
-        s"want ${seq.map(m => (m.left, m.right))}")
+    val got = bat.merges.map(m => (m.left, m.right))
+    assert(got == seq,
+      s"diverged at ${got.zip(seq).indexWhere(p => p._1 != p._2)}: got $got want $seq")
     // measured on this corpus: 26 rounds for 40 merges (and 105 merges
     // in 71 rounds at vocabulary exhaustion) — char-level early merges
     // interact heavily, so exact-equality batching amortizes ~1.5×
@@ -97,7 +107,7 @@ class BpeSpec extends SparkTestBase {
     val corpus = freqs.toSeq.flatMap { case (w, f) => Seq.fill(f.toInt)(w) }
     val df = corpus.zipWithIndex.map { case (w, i) => (i.toLong, w) }.toDF("id", "text")
     val vocab = Bpe.wordFreqs(df, "text")
-    val merges = Bpe.learnMergesFromVocab(vocab, 30)
+    val merges = Bpe.learnMergesFromVocabBatched(vocab, 30).merges
     val seg = Bpe.segmentTable(vocab, merges)
     val table = seg.as[(String, Seq[String])].collect().toMap
     // concatenating subwords (minus the EOW mark) reproduces the word
@@ -115,8 +125,8 @@ class BpeSpec extends SparkTestBase {
 
   test("learning is partition-order invariant") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001").limit(200)
-    val a = Bpe.learnMerges(docs, "text", 10)
-    val b = Bpe.learnMerges(docs.repartition(17), "text", 10)
+    val a = learn(docs, 10)
+    val b = learn(docs.repartition(17), 10)
     assert(a == b)
   }
 
@@ -239,12 +249,11 @@ class BpeSpec extends SparkTestBase {
       .toDF("id", "text")
     val vocab = Bpe.byteWordFreqs(df, "text").cache()
     val merges = Bpe.learnByteMergesFromVocabBatched(vocab, 16).merges
-    val seg = Bpe.segmentTableBytes(vocab, merges)
     // id assignment: bytes are their own ids, merges follow by rank
     val ids = Bpe.byteVocab(merges)
     assert(ids("a") == 'a'.toInt && ids("Ġ") == ' '.toInt)
     merges.foreach(m => assert(ids(m.left + m.right) == 256 + m.rank))
-    val toks = Bpe.tokenizeBytesToIds(df, "id", "text", seg, merges)
+    val toks = Bpe.tokenizeBytesToIds(df, "id", "text", merges)
     // total: the byte-level alphabet means NO token can miss the vocab
     assert(toks.filter(col("token_id") === -1).count() == 0)
     assert(toks.agg(max("token_id")).head.getInt(0) < 256 + merges.size)
@@ -255,11 +264,11 @@ class BpeSpec extends SparkTestBase {
       assert(back(i.toLong) == t, s"doc $i: '${back(i.toLong)}'")
     }
     // tokenCountsBytes (no token materialization) == the materialized
-    // path's counts — incl. an UNSEEN word falling back to byte count
+    // token stream's counts — incl. an UNSEEN word
     val withAlien = df.unionByName(Seq((99L, "привет novelword")).toDF("id", "text"))
-    val fast = Bpe.tokenCountsBytes(withAlien, "id", "text", seg)
+    val fast = Bpe.tokenCountsBytes(withAlien, "id", "text", merges)
       .as[(Long, Long)].collect().toMap
-    val slow = Bpe.tokenizeBytes(withAlien, "id", "text", seg)
+    val slow = Bpe.tokenizeBytesToIds(withAlien, "id", "text", merges)
       .groupBy("id").agg(count(lit(1)).as("n"))
       .as[(Long, Long)].collect().toMap
     assert(fast == slow, s"fast $fast slow $slow")
@@ -279,48 +288,53 @@ class BpeSpec extends SparkTestBase {
     val vocab = Bpe.byteWordFreqs(df, "text").cache()
     val merges = Bpe.learnByteMergesFromVocabBatched(vocab, 16).merges
     val seg = Bpe.segmentTableBytes(vocab, merges)
-    val ref = Bpe.tokenizeBytesToIds(df, "id", "text", seg, merges)
-    val fused = Bpe.tokenizeBytesToIdsFused(df, "id", "text", merges)
-    assert(ref.unionByName(fused).distinct().count() == ref.distinct().count())
-    assert(ref.count() == fused.count())
-    val refC = Bpe.tokenCountsBytes(df, "id", "text", seg)
+    val ref = BpeOracle.tokenizeBytesToIds(df, "id", "text", seg, Bpe.byteVocab(merges))
+    val fused = Bpe.tokenizeBytesToIds(df, "id", "text", merges)
+    assert(ref.count() > 0 && sameRows(ref, fused))
+    val refC = BpeOracle.tokenCountsBytes(df, "id", "text", seg)
       .as[(Long, Long)].collect().toMap
-    val fusedC = Bpe.tokenCountsBytesFused(df, "id", "text", merges)
+    val fusedC = Bpe.tokenCountsBytes(df, "id", "text", merges)
       .as[(Long, Long)].collect().toMap
     assert(refC == fusedC)
   }
 
-  test("fused kernels on OUT-OF-VOCAB words: documented divergence, invariant laws hold") {
-    // vocab learned from a TRAIN corpus, kernels applied to a DIFFERENT
-    // corpus whose words are absent from the segment table — the case
-    // the join path handles with a raw-byte fallback and the kernels
-    // with merges (the documented divergence in BpeExpressions)
+  test("OOV words: kernels == oracle over the corpus's own segment table; round-trip holds") {
+    // merges learned from a TRAIN corpus, applied to a DIFFERENT corpus
+    // whose words are absent from the train vocabulary: the kernels
+    // apply the merges to every word, so they equal the join oracle run
+    // over a segment table of the tokenized corpus's OWN words
     val train = byteCorpus.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("id", "text")
     val vocab = Bpe.byteWordFreqs(train, "text").cache()
     val merges = Bpe.learnByteMergesFromVocabBatched(vocab, 16).merges
-    val seg = Bpe.segmentTableBytes(vocab, merges)
+    val ids = Bpe.byteVocab(merges)
     val oov = Seq((1L, "the cat catcatcat zzqx catnap"),
       (2L, "привет lowersat"), (3L, "the cat sat"))
       .toDF("id", "text")
-    val ref = Bpe.tokenizeBytesToIds(oov, "id", "text", seg, merges)
-    val fused = Bpe.tokenizeBytesToIdsFused(oov, "id", "text", merges)
-    // the divergence is REAL here: at least one OOV word segments
-    // differently (fewer tokens under merges than raw bytes)
-    val refN = ref.count(); val fusedN = fused.count()
-    assert(fusedN < refN, s"expected kernel merges to fire on OOV words ($fusedN vs $refN)")
-    // law 1: both streams detokenize to the identical original text
-    val backRef = Bpe.detokenizeIds(ref, "id", merges).as[(Long, String)].collect().toMap
-    val backFused = Bpe.detokenizeIds(fused, "id", merges).as[(Long, String)].collect().toMap
-    assert(backRef == backFused)
-    assert(backFused(1L) == "the cat catcatcat zzqx catnap")
-    // law 2: the fused COUNT kernel equals the fused token stream's
-    // per-doc counts (the pairing writeTokenBin's docCounts relies on)
-    val fusedC = Bpe.tokenCountsBytesFused(oov, "id", "text", merges)
+    // the case is real: OOV words on which merges fire
+    val trainWords = vocab.select("word").as[String].collect().toSet
+    val oovWords = Bpe.byteWordFreqs(oov, "text").select("word").as[String]
+      .collect().filterNot(trainWords)
+    assert(oovWords.contains("Ġcatnap"), oovWords.toSeq)
+    val kernel = Bpe.tokenizeBytesToIds(oov, "id", "text", merges)
+    val trainSeg = Bpe.segmentTableBytes(vocab, merges)
+    assert(kernel.count() < BpeOracle.tokenizeBytesToIds(oov, "id", "text", trainSeg, ids).count(),
+      "merges must fire on OOV words the train segment table lacks")
+    // law 1: ids and counts equal the oracle over the corpus's own words
+    val ownSeg = Bpe.segmentTableBytes(Bpe.byteWordFreqs(oov, "text"), merges)
+    assert(sameRows(kernel, BpeOracle.tokenizeBytesToIds(oov, "id", "text", ownSeg, ids)))
+    val counts = Bpe.tokenCountsBytes(oov, "id", "text", merges)
       .as[(Long, Long)].collect().toMap
-    val fromToks = fused.groupBy("id").agg(count(lit(1)).as("n"))
+    assert(counts == BpeOracle.tokenCountsBytes(oov, "id", "text", ownSeg)
+      .as[(Long, Long)].collect().toMap)
+    // law 2: the ids detokenize to the original text
+    val back = Bpe.detokenizeIds(kernel, "id", merges).as[(Long, String)].collect().toMap
+    assert(back == oov.as[(Long, String)].collect().toMap)
+    // law 3: the COUNT kernel equals the token stream's per-doc counts
+    // (the pairing writeTokenBin's docCounts relies on)
+    val fromToks = kernel.groupBy("id").agg(count(lit(1)).as("n"))
       .as[(Long, Long)].collect().toMap
-    assert(fusedC == fromToks)
+    assert(counts == fromToks)
   }
 
   test("specials fused kernel == join path row-exact in-vocab; laws hold on the x31d OOV shape") {
@@ -341,29 +355,29 @@ class BpeSpec extends SparkTestBase {
     val wrapped = docs.select(col("id"),
       concat(lit("<|bos|>"), col("text"), lit("<|sep|><|eot|>"),
         col("text"), lit("<|se|>")).as("text"))
-    val ref = Bpe.tokenizeBytesToIdsWithSpecials(
+    val ref = BpeOracle.tokenizeBytesToIdsWithSpecials(
       wrapped, "id", "text", seg, ids, specials)
-    val fused = Bpe.tokenizeBytesToIdsWithSpecialsFused(
+    val fused = Bpe.tokenizeBytesToIdsWithSpecials(
       wrapped, "id", "text", merges, ids, specials)
-    assert(ref.unionByName(fused).distinct().count() == ref.distinct().count())
-    assert(ref.count() == fused.count())
+    assert(ref.count() > 0 && sameRows(ref, fused))
     // OOV shape (the x31d gate): a substr cut makes the tail word of
-    // the prefix piece OOV → token streams may diverge, but the
-    // declared-output laws hold: detok byte-exact and special counts equal
+    // the prefix piece OOV. The kernel equals the oracle over the cut
+    // pieces' own words, detokenizes byte-exactly, and keeps every
+    // special atomic
     val cut = docs.select(col("id"),
       concat(lit("<|bos|>"), col("text"), lit("<|sep|>"),
         substring(col("text"), 1, 10), lit("<|eot|>")).as("text"))
-    val refC = Bpe.tokenizeBytesToIdsWithSpecials(cut, "id", "text", seg, ids, specials)
-    val fusedC = Bpe.tokenizeBytesToIdsWithSpecialsFused(cut, "id", "text", merges, ids, specials)
-    val backRef = Bpe.detokenizeIdsWithSpecials(refC, "id", ids, specials)
-      .as[(Long, String)].collect().toMap
+    val pieceWords = Bpe.byteWordFreqs(docs.select(col("text"))
+      .union(docs.select(substring(col("text"), 1, 10).as("text"))), "text")
+    val ownSeg = Bpe.segmentTableBytes(pieceWords, merges)
+    val fusedC = Bpe.tokenizeBytesToIdsWithSpecials(cut, "id", "text", merges, ids, specials)
+    assert(sameRows(fusedC,
+      BpeOracle.tokenizeBytesToIdsWithSpecials(cut, "id", "text", ownSeg, ids, specials)))
     val backFused = Bpe.detokenizeIdsWithSpecials(fusedC, "id", ids, specials)
       .as[(Long, String)].collect().toMap
-    assert(backRef == backFused)
-    def nSpec(df: org.apache.spark.sql.DataFrame) =
-      df.filter(col("token_id") >= 500000).groupBy("id")
-        .agg(count(lit(1)).as("n")).as[(Long, Long)].collect().toMap
-    assert(nSpec(refC) == nSpec(fusedC))
-    assert(nSpec(fusedC).values.forall(_ == 3L))
+    assert(backFused == cut.as[(Long, String)].collect().toMap)
+    val nSpec = fusedC.filter(col("token_id") >= 500000).groupBy("id")
+      .agg(count(lit(1)).as("n")).as[(Long, Long)].collect().toMap
+    assert(nSpec.size == backFused.size && nSpec.values.forall(_ == 3L))
   }
 }

@@ -168,12 +168,12 @@ class EngineSpec extends SparkTestBase {
       ev(10, failed = true), // throttled
       ev(50, failed = true), // throttled
       ev(59, failed = false), // recovery
-    ).toDS()
-    val alerts = AlertThrottle.throttleBatch(events).collect()
+    )
+    val (alerts, _) = AlertThrottle.replay(events, Map.empty)
     assert(alerts.length == 1 && alerts(0).transition == "enter-failure")
 
-    val events2 = Seq(ev(0, true), ev(30, false), ev(45, true), ev(61, true)).toDS()
-    val alerts2 = AlertThrottle.throttleBatch(events2).orderBy("at").collect()
+    val events2 = Seq(ev(0, true), ev(30, false), ev(45, true), ev(61, true))
+    val (alerts2, _) = AlertThrottle.replay(events2, Map.empty)
     // 00:45 fail is within 60min of the 00:00 alert → suppressed even
     // after recovery (throttle clock is per-alert, like last_alerted_at).
     // 01:01 fires — and it is the FIRST DELIVERED alert of the episode
@@ -184,8 +184,8 @@ class EngineSpec extends SparkTestBase {
 
     // the continuation label still applies within one DELIVERED episode:
     // no recovery between the alerts → 'still-failing'
-    val events3 = Seq(ev(0, true), ev(45, true), ev(61, true)).toDS()
-    val alerts3 = AlertThrottle.throttleBatch(events3).orderBy("at").collect()
+    val events3 = Seq(ev(0, true), ev(45, true), ev(61, true))
+    val (alerts3, _) = AlertThrottle.replay(events3, Map.empty)
     assert(alerts3.length == 2)
     assert(alerts3(1).transition == "still-failing")
   }
@@ -198,9 +198,9 @@ class EngineSpec extends SparkTestBase {
         RunEvent(1L, new Timestamp(1700000000000L + i * 60000L * (1 + rnd.nextInt(3))),
           rnd.nextBoolean(), timeout)
       }
-      val alerts = AlertThrottle.throttleBatch(evs.toDS()).collect().sortBy(_.at.getTime)
+      val (alerts, _) = AlertThrottle.replay(evs, Map.empty)
       alerts.sliding(2).foreach {
-        case Array(a, b) =>
+        case Seq(a, b) =>
           assert(b.at.getTime - a.at.getTime >= timeout * 60000L,
             s"alerts ${a.at} and ${b.at} within $timeout min")
         case _ =>
@@ -264,20 +264,33 @@ class EngineSpec extends SparkTestBase {
       "recovered job failing again is a fresh entry, not 'still-failing'")
   }
 
-  test("ST5 stream == batch on the same events") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    def ev(min: Int, failed: Boolean) =
-      RunEvent(9L, Timestamp.valueOf(f"2024-01-01 ${min / 60}%02d:${min % 60}%02d:00"), failed, 30)
-    val evs = Seq(ev(0, true), ev(10, true), ev(31, true), ev(40, false), ev(70, true))
-    val ms = MemoryStream[RunEvent]
-    ms.addData(evs)
-    val q = AlertThrottle.throttleStream(ms.toDS()).writeStream
-      .format("memory").queryName("alerts_out").outputMode("append").start()
-    q.processAllAvailable(); q.stop()
-    val streamed = spark.table("alerts_out").as[AlertThrottle.Alert]
-      .collect().sortBy(_.at.getTime)
-    val batch = AlertThrottle.throttleBatch(evs.toDS()).collect().sortBy(_.at.getTime)
-    assert(streamed.toSeq == batch.toSeq)
+  test("ST5 property: two-batch replay with carried state == one replay (200 seeded cases)") {
+    // the cross-batch contract of every monitor path: the scheduler and
+    // the streaming runner replay each tick or micro-batch over the
+    // state the previous one saved
+    val rnd = new scala.util.Random(11)
+    def key(a: AlertThrottle.Alert) = (a.at.getTime, a.jobId, a.transition)
+    (1 to 200).foreach { c =>
+      val jobs = 1 + rnd.nextInt(4)
+      var t = 1700000000000L
+      val evs = (0 until 40).map { _ =>
+        t += 60000L * rnd.nextInt(4) // equal timestamps included
+        RunEvent(1L + rnd.nextInt(jobs), new Timestamp(t), rnd.nextInt(3) > 0,
+          1 + rnd.nextInt(30))
+      }
+      // carried state: job 1 alerted ten minutes before the first event,
+      // and a job with no events in this sequence
+      val init = if (rnd.nextBoolean()) Map.empty[Long, AlertThrottle.ThrottleState]
+        else Map(
+          1L -> AlertThrottle.ThrottleState(JobStatus.Failed, 1700000000000L - 600000L),
+          99L -> AlertThrottle.ThrottleState(AlertThrottle.FailedUnalerted, Long.MinValue))
+      val split = rnd.nextInt(evs.length + 1)
+      val (whole, wholeSt) = AlertThrottle.replay(evs, init)
+      val (first, mid) = AlertThrottle.replay(evs.take(split), init)
+      val (second, endSt) = AlertThrottle.replay(evs.drop(split), mid)
+      assert((first ++ second).map(key).sorted == whole.map(key).sorted,
+        s"case $c, split $split: alerts differ")
+      assert(endSt == wholeSt, s"case $c, split $split: final state differs")
+    }
   }
 }

@@ -76,8 +76,10 @@ class IngestSpec extends SparkTestBase {
     scan.foreach { s =>
       assert(s.partitionFilters.exists(_.references.exists(_.name == "date")),
         s"no date partition filter:\n$s")
+      // the window's UTC day plus one boundary day on each side: the
+      // writer's zone may put a row of the window on either neighbour
       val parts = s.relation.location.listFiles(s.partitionFilters, s.dataFilters).size
-      assert(parts <= 2, s"one-day clip listed $parts day partitions")
+      assert(parts <= 3, s"one-day clip listed $parts day partitions")
     }
 
     // and the monitor path over the rollup agrees with the raw-event path

@@ -51,17 +51,16 @@ class ModelStoreSpec extends SparkTestBase {
     assert(loadedMerges == merges)
     assert(loadedVocab == Bpe.byteVocab(merges))
     // re-tokenize through the FILE's id mapping: byte-identical ids
-    val seg = Bpe.segmentTableBytes(vocab, merges)
     def idsOf(toks: org.apache.spark.sql.DataFrame) =
       toks.select("id", "pos", "subpos", "token_id")
         .as[(Long, Int, Int, Int)].collect().sorted.toSeq
-    val native = idsOf(Bpe.tokenizeBytesToIds(hostile, "id", "text", seg, merges))
-    val imported = idsOf(Bpe.tokenizeBytesToIds(hostile, "id", "text", seg,
-      loadedVocab))
+    val native = idsOf(Bpe.tokenizeBytesToIds(hostile, "id", "text", merges))
+    val imported = idsOf(Bpe.tokenizeBytesToIds(hostile, "id", "text",
+      loadedMerges, loadedVocab))
     assert(native == imported && native.nonEmpty)
     // and the imported mapping detokenizes back to the exact corpus
     val back = Bpe.detokenizeIds(
-        Bpe.tokenizeBytesToIds(hostile, "id", "text", seg, loadedVocab),
+        Bpe.tokenizeBytesToIds(hostile, "id", "text", loadedMerges, loadedVocab),
         "id", loadedVocab)
       .as[(Long, String)].collect().toMap
     hostile.as[(Long, String)].collect().foreach { case (i, t) =>
@@ -101,12 +100,11 @@ class ModelStoreSpec extends SparkTestBase {
     assert(loadedMerges == merges, "ranks must not shift")
     assert(loadedVocab == Bpe.byteVocab(merges))
     // and the imported artifact tokenizes the corpus identically
-    val seg = Bpe.segmentTableBytes(vocab, merges)
-    def idsOf(v: Map[String, Int]) =
-      Bpe.tokenizeBytesToIds(corpus, "id", "text", seg, v)
+    def idsOf(m: Seq[Bpe.Merge], v: Map[String, Int]) =
+      Bpe.tokenizeBytesToIds(corpus, "id", "text", m, v)
         .select("id", "pos", "subpos", "token_id")
         .as[(Long, Int, Int, Int)].collect().sorted.toSeq
-    assert(idsOf(loadedVocab) == idsOf(Bpe.byteVocab(merges)))
+    assert(idsOf(loadedMerges, loadedVocab) == idsOf(merges, Bpe.byteVocab(merges)))
   }
 
   test("HuggingFace tokenizer.json interchange: round-trip exact, ids tokenize identically, agrees with the GPT-2 pair") {
@@ -127,12 +125,11 @@ class ModelStoreSpec extends SparkTestBase {
     val (g2Merges, g2Vocab) = ModelStore.importGpt2(spark, p2)
     assert(hfMerges == g2Merges && hfVocab == g2Vocab)
     // imported ids tokenize byte-identically
-    val seg = Bpe.segmentTableBytes(vocab, merges)
-    def idsOf(v: Map[String, Int]) =
-      Bpe.tokenizeBytesToIds(hostile, "id", "text", seg, v)
+    def idsOf(m: Seq[Bpe.Merge], v: Map[String, Int]) =
+      Bpe.tokenizeBytesToIds(hostile, "id", "text", m, v)
         .select("id", "pos", "subpos", "token_id")
         .as[(Long, Int, Int, Int)].collect().sorted.toSeq
-    assert(idsOf(hfVocab) == idsOf(Bpe.byteVocab(merges)))
+    assert(idsOf(hfMerges, hfVocab) == idsOf(merges, Bpe.byteVocab(merges)))
     // the array-form merges some published files use parse too
     val arr = new String(Files.readAllBytes(java.nio.file.Paths.get(p)), "UTF-8")
       .replaceAll("\"([^\" ]+) ([^\" ]+)\"(,?)", "[\"$1\",\"$2\"]$3")
@@ -165,9 +162,8 @@ class ModelStoreSpec extends SparkTestBase {
     val (m2, v2, s2) = ModelStore.importHuggingFaceFull(spark, p)
     assert(m2 == merges && v2 == ids && s2 == specials)
     // tokenize: each occurrence is ONE atomic token with the file's id
-    val seg = Bpe.segmentTableBytes(vocab, merges)
     val toks = Bpe.tokenizeBytesToIdsWithSpecials(
-      corpus, "id", "text", seg, v2, s2)
+      corpus, "id", "text", m2, v2, s2)
     val perDoc = toks.select("id", "token_id").as[(Long, Int)].collect()
       .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toSeq }
     assert(perDoc(0L).count(_ == 50256) == 1)
@@ -211,9 +207,8 @@ class ModelStoreSpec extends SparkTestBase {
     val df = docs.toDF("id", "text")
     val vocab = Bpe.byteWordFreqs(df, "text").cache()
     val merges = Bpe.learnByteMergesFromVocabBatched(vocab, 10).merges
-    val seg = Bpe.segmentTableBytes(vocab, merges)
     val ids = Bpe.byteVocab(merges)
-    val toks = Bpe.tokenizeBytesToIdsWithSpecials(df, "id", "text", seg,
+    val toks = Bpe.tokenizeBytesToIdsWithSpecials(df, "id", "text", merges,
       ids, specials)
     // no vocab misses anywhere in the fuzz corpus
     assert(toks.filter(col("token_id") === -1).isEmpty)
@@ -271,8 +266,9 @@ class ModelStoreSpec extends SparkTestBase {
     // identical predictions through the scorer
     val probe = Seq((1L, "the dog and the fox"), (2L, "der hund und der fuchs"))
       .toDF("id", "text")
-    def preds(m: LangId.Model) = LangId.predict(probe, m, "id", "text")
-      .select("id", "lang").as[(Long, String)].collect().toSet
+    def preds(m: LangId.Model) =
+      probe.select(col("id"), LangId.langIdCol(col("text"), m).as("lang"))
+        .as[(Long, String)].collect().toSet
     assert(preds(loaded) == preds(model))
   }
 

@@ -210,8 +210,7 @@ class PackingSpec extends SparkTestBase {
       .limit(40)
     val vocab = graft.ext.Bpe.byteWordFreqs(docs, "text").cache()
     val merges = graft.ext.Bpe.learnByteMergesFromVocabBatched(vocab, 12).merges
-    val seg = graft.ext.Bpe.segmentTableBytes(vocab, merges)
-    val toks = graft.ext.Bpe.tokenizeBytesToIds(docs, "doc_id", "text", seg, merges)
+    val toks = graft.ext.Bpe.tokenizeBytesToIds(docs, "doc_id", "text", merges)
       .cache()
     val counts = toks.groupBy("doc_id").agg(count(lit(1)).as("ntok"))
     val budget = 128L

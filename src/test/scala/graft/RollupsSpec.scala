@@ -34,8 +34,9 @@ class RollupsSpec extends SparkTestBase {
     // partition filters on `date` appear in the scan's PartitionFilters
     assert(plan.contains("PartitionFilters") && plan.contains("date"),
       s"date partition filter missing:\n$plan")
-    // and the listing the scan actually plans over spans ≤ 2 day dirs
-    // (Jan 10 + the boundary dir the inclusive to_date(until) admits)
+    // and the listing the scan actually plans over spans ≤ 3 day dirs:
+    // Jan 10 plus one boundary day on each side, where a writer in
+    // another zone may have put the window's rows
     df.collect()
     def scans(p: org.apache.spark.sql.execution.SparkPlan)
         : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = {
@@ -50,7 +51,7 @@ class RollupsSpec extends SparkTestBase {
     assert(scan.nonEmpty)
     scan.foreach { sc =>
       val parts = sc.relation.location.listFiles(sc.partitionFilters, sc.dataFilters).size
-      assert(parts <= 2, s"one-day clip listed $parts day partitions")
+      assert(parts <= 3, s"one-day clip listed $parts day partitions")
     }
   }
 

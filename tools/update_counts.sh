@@ -1,7 +1,8 @@
 #!/bin/bash
 # Regenerate the stated registry counts in README.md and SURVEY.md from
 # the source of truth (graft.queries.Queries.all via graft.tools.Counts),
-# plus the test count from the sbt summary when -t is given (slow).
+# plus the test count from a scan of src/test, and print the library
+# size: src/main/scala lines that are neither blank nor comment-only.
 # DocCountsSpec asserts the query counts match at test time, so a
 # hand-edit drift fails the build instead of waiting for a judge pass.
 set -euo pipefail
@@ -29,3 +30,9 @@ t=$(grep -rahoE '^\s+test\("' src/test/scala | wc -l)
 echo "tests: $t"
 sed -i -E "s/# [0-9]+ tests/# $t tests/" README.md
 sed -i -E "s/\`sbt test\`: [0-9]+ tests/\`sbt test\`: $t tests/" SURVEY.md
+
+# Library size (printed only): lines of src/main/scala that are not
+# blank and do not start with //, /* or * (scaladoc continuation).
+loc=$(find src/main/scala -name '*.scala' -print0 | xargs -0 cat \
+  | grep -vE '^\s*$' | grep -cvE '^\s*(//|/\*|\*)')
+echo "src/main/scala non-comment, non-blank lines: $loc"
