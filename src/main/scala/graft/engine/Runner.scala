@@ -1,16 +1,16 @@
 package graft.engine
 
 import java.sql.Timestamp
-import java.util.concurrent.Executors
+import java.util.concurrent.{Executors, FutureTask}
 
-import scala.util.Try
+import scala.util.{Success, Try}
 
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.EngineSession
 
 import graft.model.{JobStatus, MonitorSpec, Verdict}
-import graft.store.MetricSource
+import graft.store.{MetricSource, SharedRoot}
 
 /** Monitor run orchestration — E1 (scheduled run) and E2 (interactive
   * test) from SURVEY §3, minus the Rails host.
@@ -18,27 +18,34 @@ import graft.store.MetricSource
   * Pure-plan vs side-effect separation mirrors the reference's
   * `--no-alerts` split (reference Rakefile:4-7): [[evaluate]] is a pure
   * function of (source, spec, now) usable for backtests and UI tests;
-  * [[persistRun]] appends the `job_data` / `job_errors` twins.
+  * [[persistRuns]] appends the `job_data` / `job_errors` twins.
   * Verdict collect() is bounded by series count — never data volume.
   *
-  * E1 runs ONE scan of the store per run: [[runOnce]] derives the
-  * verdicts AND the chart payload from a single aggregation
+  * E1 runs ONE scan of the store per run: a run derives the verdicts
+  * AND the chart payload from a single aggregation
   * ([[Planner.planWithPoints]]); the payload/error writes read only
   * driver-local rows. The hot path takes a [[MetricSource]] so the
   * window bounds reach the storage scan (PushedFilters), not a
   * post-conversion filter.
   *
-  * E1 ([[runOnce]], [[runBatch]] and the [[persistRun]] they make) runs
-  * INTERPRETED when its window is at most [[InterpretedMaxMinutes]]
-  * long, in an engine session derived from the caller's
-  * ([[org.apache.spark.sql.graft.EngineSession]]: per call, a copy of
-  * the caller's session with codegen off). A run's window bounds and
-  * `window_end` are literals that Spark inlines into generated code, so
-  * under codegen every run compiles new classes (~19 per run on the
-  * `monitor_loop` benchmark, ~20 ms each); interpreted, it compiles
-  * none and pays more per row instead. A longer window runs codegen'd
-  * in the caller's session, as [[evaluate]], the planner, the backtest,
-  * the API and the streaming runner always do.
+  * A scheduled run has two halves: compute (plan, collect, chart) and
+  * persist. Persisting is a GROUP COMMIT: the runs of one call
+  * ([[runOnce]]: one run; [[runBatch]]: a tick's cohort) write their
+  * rows in one `job_data` append and at most one `job_errors` append
+  * ([[persistRuns]]), and a run returns only once its group has
+  * committed. A failed group write fails every run of the group.
+  *
+  * E1's compute runs INTERPRETED when its window is at most
+  * [[InterpretedMaxMinutes]] long, in an engine session derived from
+  * the caller's ([[org.apache.spark.sql.graft.EngineSession]]: per
+  * call, a copy of the caller's session with codegen off); the group
+  * write always runs there. A run's window bounds and `window_end` are
+  * literals that Spark inlines into generated code, so under codegen
+  * every run compiles new classes (~19 per run on the `monitor_loop`
+  * benchmark, ~20 ms each); interpreted, it compiles none and pays more
+  * per row instead. A longer window computes codegen'd in the caller's
+  * session, as [[evaluate]], the planner, the backtest, the API and the
+  * streaming runner always do.
   */
 object Runner {
 
@@ -100,46 +107,72 @@ object Runner {
     else if (verdicts.forall(_.passed)) JobStatus.Success
     else JobStatus.Failed
 
-  /** E1 persistence: append one `job_data` row (JSON chart payload —
-    * reference db/schema.rb:29-36) and, on failure, `job_errors` rows
-    * (db/schema.rb:38-48). Both land in the standard partitioned layout
-    * (`…/job_id=N/…`), but each run writes DIRECTLY into its own job's
-    * partition directory rather than `partitionBy` at the table root:
-    * the Hadoop committer stages under `<root>/_temporary/0/`, so two
-    * jobs appending to the same root concurrently delete each other's
-    * staging — writing per-job roots makes concurrent monitor runs
-    * (different jobs; same-job overlap is scheduler-suppressed)
-    * commit-safe with no driver lock. The chart rows are driver-local
-    * (already collected by the run's single scan), so neither write
-    * touches the store. */
-  def persistRun(spark: SparkSession, spec: MonitorSpec, verdicts: Seq[Verdict],
-      chart: Seq[ChartSeries], jobDataPath: String, jobErrorsPath: String): Unit = {
-    import spark.implicits._
-    val status = jobStatus(verdicts)
-    // explicit timestamp type: on the empty-verdicts (error) path the
-    // literal is null and an untyped lit(null) would be unwritable VOID
-    val windowEnd = lit(verdicts.headOption.map(_.windowEnd).orNull)
-      .cast(org.apache.spark.sql.types.TimestampType)
-    // one row holding the whole chart: the projection folds into a local
-    // table scan, so the write is the run's only job (no exchange)
-    val run = Seq(Tuple1(chart)).toDF("chart").select(
-      windowEnd.as("window_end"),
-      lit(status).as("status"),
-      to_json(col("chart")).as("data"))
-    run.write.mode(SaveMode.Append).parquet(s"$jobDataPath/job_id=${spec.id}")
+  /** One computed run, not yet persisted: its spec, its verdicts and
+    * its chart payload. */
+  final case class Run(spec: MonitorSpec, verdicts: Seq[Verdict], chart: Seq[ChartSeries])
 
-    if (status != JobStatus.Success) {
-      verdicts.filterNot(_.passed).toDF()
-        .select(col("windowEnd").as("at"), col("message"), lit(status).as("status"))
-        .write.mode(SaveMode.Append).parquet(s"$jobErrorsPath/job_id=${spec.id}")
+  /** E1 persistence, one group commit for `runs`: ONE `job_data` append
+    * with a row per run (the JSON chart payload — reference
+    * db/schema.rb:29-36) and, when any run has failing verdicts, ONE
+    * `job_errors` append with a row per failing verdict
+    * (db/schema.rb:38-48). Each is `partitionBy("job_id")` at its table
+    * root, so the layout is `<root>/job_id=N/part-*.parquet` with
+    * columns `window_end, status, data` and `at, message, status`.
+    *
+    * Appends to one root go through [[graft.store.SharedRoot.append]],
+    * which serializes them per root: concurrent appends to a root would
+    * delete each other's `_temporary/0/` staging. So concurrent groups
+    * (a cohort tick and a single-job tick, or two `runOnce` calls)
+    * commit safely, one after the other. The `job_errors` append runs on
+    * a new thread, which inherits the caller's Spark local properties
+    * (the FAIR pool name), alongside the `job_data` append; the call
+    * returns when both have committed and throws if either failed. The
+    * rows are driver-local (already collected by the runs' scans), so
+    * neither write touches the store.
+    *
+    * The two appends are neither ordered nor atomic together, and a
+    * failure belongs to the whole group:
+    *  - when the `job_data` append fails and the `job_errors` one
+    *    commits, `job_errors` keeps rows of runs whose `job_data` rows
+    *    never landed (and that the caller reports as failed);
+    *  - when either append fails, the call throws for every run of the
+    *    group, including runs whose rows a partly committed append had
+    *    already moved in. A write fault tied to one run (say an
+    *    unwritable `<root>/job_id=N`) therefore fails its neighbours
+    *    too, on every group it joins. */
+  def persistRuns(spark: SparkSession, runs: Seq[Run], jobDataPath: String,
+      jobErrorsPath: String): Unit =
+    if (runs.nonEmpty) {
+      import spark.implicits._
+      val errors = for {
+        r <- runs
+        v <- r.verdicts if !v.passed
+      } yield (r.spec.id, v.windowEnd, v.message, jobStatus(r.verdicts))
+      val errorsAppend = Option.when(errors.nonEmpty) {
+        val task = new FutureTask[Unit](() => EngineSession.withActive(spark)(
+          SharedRoot.append(errors.toDF("job_id", "at", "message", "status"), jobErrorsPath,
+            "job_id")))
+        new Thread(task).start()
+        task
+      }
+      // one row per run holding its whole chart: the projection folds
+      // into a local table scan, so the write is one job (no exchange)
+      val data = Try(SharedRoot.append(runs
+        .map(r => (r.spec.id, r.verdicts.headOption.map(_.windowEnd).orNull,
+          jobStatus(r.verdicts), r.chart))
+        .toDF("job_id", "window_end", "status", "chart")
+        .select(col("job_id"), col("window_end"), col("status"), to_json(col("chart")).as("data")),
+        jobDataPath, "job_id"))
+      errorsAppend.foreach(_.get())
+      data.get
     }
-  }
 
   /** E1: evaluate + persist + (throttled) alert rows. Returns verdicts.
     * Alert dispatch is a side-effecting sink fed by the returned rows —
     * deliberately OUT of the query plan (SURVEY §2.1 S7). A window up
     * to [[InterpretedMaxMinutes]] runs in an engine session derived from
-    * `spark` for this call. */
+    * `spark` for this call. The run is a group of one: it returns after
+    * its rows have committed. */
   def runOnce(spark: SparkSession, source: MetricSource, spec: MonitorSpec,
       now: Timestamp, jobDataPath: String, jobErrorsPath: String): Seq[Verdict] =
     runIn(spark, EngineSession.derive(spark), source, spec, now, jobDataPath, jobErrorsPath)
@@ -149,18 +182,25 @@ object Runner {
     runOnce(spark, MetricSource.ofFrame(store), spec, now, jobDataPath, jobErrorsPath)
 
   /** [[runOnce]] with an engine session the caller derived from `spark`
-    * (the scheduler shares one with the tick's throttle cycle). The run
-    * takes the session its window calls for ([[sessionFor]]); its plan
-    * moves there before the collect, and the whole run, the persist
-    * included, has that session as its active one. */
+    * (the scheduler shares one with the tick's throttle cycle). */
   private[engine] def runIn(spark: SparkSession, engine: SparkSession, source: MetricSource,
       spec: MonitorSpec, now: Timestamp, jobDataPath: String,
       jobErrorsPath: String): Seq[Verdict] = {
+    val run = compute(spark, engine, source, spec, now)
+    EngineSession.withActive(engine)(persistRuns(engine, Seq(run), jobDataPath, jobErrorsPath))
+    run.verdicts
+  }
+
+  /** The compute half of a scheduled run: plan, collect and chart. The
+    * run takes the session its window calls for ([[sessionFor]]); its
+    * plan moves there before the collect, and the collect has that
+    * session as its active one. */
+  private def compute(spark: SparkSession, engine: SparkSession, source: MetricSource,
+      spec: MonitorSpec, now: Timestamp): Run = {
     val session = sessionFor(spark, engine, spec.minutes)
     EngineSession.withActive(session) {
       val df = EngineSession.adopt(session, Planner.planWithPoints(session, source, spec, now))
       val rows = df.collect().toSeq
-      val verdicts = toVerdicts(spec, df.columns, rows)
       // Merge chart points per metric across targets (a metric matched by
       // two targets charts once), sorted by ts for a deterministic payload.
       val chart = rows
@@ -173,31 +213,36 @@ object Runner {
         .groupBy(_._1).toSeq.sortBy(_._1)
         .map { case (m, grps) =>
           ChartSeries(m, grps.flatMap(_._2).sortBy(_.ts.getTime)) }
-      persistRun(session, spec, verdicts, chart, jobDataPath, jobErrorsPath)
-      verdicts
+      Run(spec, toVerdicts(spec, df.columns, rows), chart)
     }
   }
 
   /** E1 batched (the thousands-of-monitors cost model): K due jobs that
-    * fire on the same tick share ONE scan of the store. The union of
-    * their windows is scanned once, persisted and filled by one job;
-    * each job's [[runOnce]] then clips its own (narrower) window from the
-    * cached slice — a filter over in-memory columnar batches, not a
-    * second storage scan. The K runs (plan, collect, [[persistRun]]) go
-    * to `min(parallelism, K)` threads created here, so each inherits the
-    * calling thread's Spark local properties (the FAIR pool name); each
-    * persists under its own `job_id=N` root, so concurrent commits are
-    * safe. Results are keyed by spec id; a run that throws is a
-    * `Failure` for its spec alone. Verdicts are identical to K
-    * independent [[runOnce]] calls, at any parallelism (SchedulerSpec
-    * proves verdict equality and the single source scan).
+    * fire on the same tick share ONE scan of the store and ONE group
+    * commit. The union of their windows is scanned once, persisted and
+    * filled by one job; each job's compute then clips its own
+    * (narrower) window from the cached slice — a filter over in-memory
+    * columnar batches, not a second storage scan. The K computes (plan,
+    * collect, chart) go to `min(parallelism, K)` threads created here,
+    * so each inherits the calling thread's Spark local properties (the
+    * FAIR pool name). When all K have returned, the runs that computed
+    * are persisted as one group ([[persistRuns]]): one `job_data`
+    * append, and the `job_errors` append alongside it on a thread
+    * started from the calling thread. Results are keyed by spec id, and
+    * returned only after the group commit: a run whose compute throws
+    * is a `Failure` for its spec alone; a group write that throws is a
+    * `Failure` for every run of the group, even when the fault lies in
+    * one run's rows ([[persistRuns]] lists what such a failure leaves
+    * on disk). Verdicts are identical to K independent
+    * [[runOnce]] calls, at any parallelism (SchedulerSpec proves
+    * verdict equality and the single source scan).
     *
-    * One engine session, derived here, serves the slice and the K runs,
-    * each by its window ([[sessionFor]]): the scan moves into the
-    * session the union window calls for before `persist()`, so the
-    * cache build and fill run there too, and each run moves its plan
-    * over the slice into the session its own window calls for (the
-    * cache is shared between them).
+    * One engine session, derived here, serves the slice, the K runs,
+    * each by its window ([[sessionFor]]), and the group write: the scan
+    * moves into the session the union window calls for before
+    * `persist()`, so the cache build and fill run there too, and each
+    * run moves its plan over the slice into the session its own window
+    * calls for (the cache is shared between them).
     *
     * The cached slice is window-bounded (the whole point of monitor
     * windows: KB-to-MB per job even at 100 TB of history), so pinning it
@@ -227,12 +272,15 @@ object Runner {
       EngineSession.withActive(home)(clipped.foreachPartition((_: Iterator[Row]) => ()))
       val slice = MetricSource.ofFrame(clipped)
       val pool = Executors.newFixedThreadPool(math.min(parallelism, specs.size))
-      try
-        specs.map { spec =>
-          spec.id -> pool.submit(() =>
-            Try(runIn(spark, engine, slice, spec, now, jobDataPath, jobErrorsPath)))
-        }.map { case (id, run) => id -> run.get }.toMap
-      finally pool.shutdown()
+      try {
+        val computed = specs.map { spec =>
+          spec.id -> pool.submit(() => Try(compute(spark, engine, slice, spec, now)))
+        }.map { case (id, run) => id -> run.get }
+        val committed = Try(EngineSession.withActive(engine)(persistRuns(engine,
+          computed.collect { case (_, Success(run)) => run }, jobDataPath, jobErrorsPath)))
+        computed.map { case (id, run) =>
+          id -> run.flatMap(r => committed.map(_ => r.verdicts)) }.toMap
+      } finally pool.shutdown()
     } finally clipped.unpersist()
   }
 

@@ -224,8 +224,9 @@ object Scheduler {
 
   /** Production wiring: due jobs run [[Runner.runOnce]] against the
     * windowed metric source (bounds → PushedFilters) and persist the
-    * job_data / job_errors twins; each tick's runs share one engine
-    * session, the scheduler's current one. */
+    * job_data / job_errors twins, one group commit per tick (a cohort's
+    * runs together, a single job's run alone); each tick's runs share
+    * one engine session, the scheduler's current one. */
   def forSource(spark: SparkSession, source: MetricSource,
       jobDataPath: String, jobErrorsPath: String,
       parallelism: Int = 4): Scheduler = {
@@ -245,10 +246,22 @@ object Scheduler {
     * deliver. Throttle and delivery run through [[graft.state
     * .AlertThrottle.cycle]], the one cycle the streaming runner also
     * uses, over one state table, so a job alerted by either path stays
-    * throttled on both. A cohort tick runs ONE cycle for all its events,
-    * after every run, in spec order: one state-table read and overwrite
-    * per tick, not one per spec. A run that throws is `Error` and stays
-    * out of the cycle, on both paths; its cohort neighbours still page.
+    * throttled on both.
+    *
+    * A tick's runs persist as one group ([[Runner.persistRuns]]: one
+    * `job_data` append, at most one `job_errors` append), and a run
+    * counts as done only once its group has committed: its status, then
+    * the throttle cycle, then its page. A cohort tick runs ONE cycle for
+    * all its events, after the group commit, in spec order: one state
+    * publish per tick, not one per spec, and no state read while the
+    * table is the one the previous cycle published. A run that throws,
+    * or whose group write fails, is `Error` and stays out of the cycle,
+    * on both paths; a cohort neighbour whose own run computed still
+    * pages once the group has committed. A failed group write reaches
+    * every run of the group, so a write fault tied to one run's rows
+    * keeps its failing neighbours from paging on every tick it fires
+    * with them, and may leave `job_errors` rows for runs reported as
+    * `Error` ([[Runner.persistRuns]]).
     *
     * Each tick (a cohort's batch, or one job's run) runs its cycle, and
     * every monitor whose window is at most [[Runner.InterpretedMaxMinutes]]

@@ -2,7 +2,7 @@ package graft.state
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.model.MonitorSpec
 import graft.state.AlertThrottle.Alert
@@ -133,20 +133,14 @@ object AlertDispatcher {
     }
   }
 
-  private val persistLock = new Object
-
   /** Append delivery records to the parquet alerts table, one file tree
-    * per channel (bounded driver-local rows: alerts × keys).
-    * Serialized JVM-wide: concurrent appends through one table root
-    * share the committer's `_temporary/0/` staging and can delete each
-    * other's files mid-commit (same race fixed in Runner.persistRun);
-    * delivery batches are tiny, so a lock is cheaper than per-channel
-    * write fan-out. */
+    * per channel (bounded driver-local rows: alerts × keys), through
+    * [[graft.store.SharedRoot.append]]: appends to the table's root are
+    * serialized per root, so the cycles of every monitor path share it
+    * safely. */
   def persist(spark: SparkSession, deliveries: Seq[Delivery], path: String): Unit = {
     import spark.implicits._
-    if (deliveries.nonEmpty) persistLock.synchronized {
-      deliveries.toDF().write.mode(SaveMode.Append).partitionBy("channel").parquet(path)
-    }
+    if (deliveries.nonEmpty) graft.store.SharedRoot.append(deliveries.toDF(), path, "channel")
   }
 
   /** Read-back for the E3 surface / audits. */

@@ -100,6 +100,13 @@ object AlertThrottle {
     * one path would need a storage-level lease. */
   private val stateTableLock = new Object
 
+  /** Per state path, the state the last [[cycle]] over it published
+    * and the [[graft.store.VersionedTable.Stamp]] of that publish.
+    * Guarded by [[stateTableLock]]. */
+  private val lastPublished =
+    scala.collection.mutable.Map.empty[String, (graft.store.VersionedTable.Stamp,
+      Map[Long, ThrottleState])]
+
   /** The one throttle-and-deliver cycle of every monitor path (the
     * scheduler and the streaming runner), under [[stateTableLock]]:
     * load the state table, [[replay]] `events` over it, hand the fired
@@ -109,6 +116,15 @@ object AlertThrottle {
     * state. Every fired alert is dispatched: with no `sinks` the
     * dispatcher's stderr log channel delivers it, so a page is never
     * dropped without a trace.
+    *
+    * The load is a Spark job only when the table changed since this
+    * JVM's last cycle over `statePath`: the cycle keeps the state it
+    * last published, with that publish's stamp, and reuses it while
+    * [[graft.store.VersionedTable.stamp]] (filesystem calls) still
+    * names the same publish. A save made outside the cycle, or a
+    * directory deleted and re-created, changes the stamp and is read
+    * from disk. The kept state is replaced only after a publish
+    * succeeds.
     *
     * Delivery is AT-LEAST-ONCE. The state is published only after
     * dispatch and the delivery-audit append, so a cycle that fails in
@@ -121,22 +137,32 @@ object AlertThrottle {
       specOf: Long => Option[MonitorSpec], sinks: Seq[AlertSink],
       deliveryPath: Option[String], record: Seq[Alert] => Unit = _ => ()): Unit =
     if (events.nonEmpty) stateTableLock.synchronized {
-      val (alerts, newState) = replay(events, loadStateTable(spark, statePath))
+      val onDisk = graft.store.VersionedTable.stamp(spark, statePath)
+      val prior = lastPublished.get(statePath)
+        .collect { case (stamp, st) if onDisk.contains(stamp) => st }
+        .getOrElse(loadStateTable(spark, statePath))
+      val (alerts, newState) = replay(events, prior)
       if (alerts.nonEmpty) {
         record(alerts)
         val deliveries = AlertDispatcher.dispatch(alerts, specOf, sinks)
         deliveryPath.foreach(AlertDispatcher.persist(spark, deliveries, _))
       }
-      saveStateTable(spark, statePath, newState)
+      val root = saveStateTable(spark, statePath, newState)
+      graft.store.VersionedTable.stamp(spark, statePath).filter(_.root == root) match {
+        case Some(stamp) => lastPublished(statePath) = stamp -> newState
+        case None => lastPublished -= statePath
+      }
     }
 
   /** Parquet-backed throttle-state table (job_id → status + last-alerted
     * ms — both, so a post-recovery alert is labeled 'enter-failure'
     * across restarts). Bounded by monitor count — metadata scale. Shared
     * by the streaming runner and the scheduler so a job alerted by one
-    * path stays throttled on the other. Read and written by [[cycle]],
-    * versioned through [[graft.store.VersionedTable]]: a failed or
-    * interrupted save leaves the previous version loadable. */
+    * path stays throttled on the other. Written by [[cycle]] and read
+    * by it when the table changed since its last publish, versioned
+    * through [[graft.store.VersionedTable]]: a failed or interrupted
+    * save leaves the previous version loadable. This load always reads
+    * the disk. */
   def loadStateTable(spark: SparkSession,
       path: String): Map[Long, ThrottleState] =
     // only a MISSING (never published) table reads as empty; an IO or
@@ -151,8 +177,9 @@ object AlertThrottle {
   private val StateSchema = new StructType()
     .add("job_id", LongType).add("status", StringType).add("last_alerted_ms", LongType)
 
+  /** Publish `st` as the table's new version; returns its root. */
   def saveStateTable(spark: SparkSession, path: String,
-      st: Map[Long, ThrottleState]): Unit = {
+      st: Map[Long, ThrottleState]): String = {
     import spark.implicits._
     val df = st.toSeq.map { case (j, s) => (j, s.status, s.lastAlertedAtMillis) }
       .toDF("job_id", "status", "last_alerted_ms")

@@ -67,9 +67,9 @@ object VersionedTable {
     * older versions); it is applied to the new root and to the
     * previously published one. If `write` throws, the pointer is not
     * touched and the exception propagates. Publishers of one `dir`
-    * must not run concurrently. */
+    * must not run concurrently. Returns the published root. */
   def publish(spark: SparkSession, dir: String,
-      keep: String => Set[Long] = _ => Set.empty)(write: String => Unit): Unit = {
+      keep: String => Set[Long] = _ => Set.empty)(write: String => Unit): String = {
     val base = new Path(dir)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // read BEFORE publishing: the sweep keeps what readers resolve now
@@ -85,6 +85,32 @@ object VersionedTable {
     val kept = (Set(next) ++ prev) ++ keep(root) ++
       prev.toSet.flatMap((p: Long) => keep(s"$dir/v=$p"))
     existing.filterNot(kept).foreach(v => fs.delete(new Path(base, s"v=$v"), true))
+    root
+  }
+
+  /** One publish of a table: the root `_current` names and the pointer
+    * file's modification time. A directory deleted and re-created
+    * numbers its versions from `v=0` again, so a root alone can name
+    * two different publishes; the rewritten pointer's modification time
+    * tells them apart. (Its length would not: the pointer always holds
+    * `v=N`, so the length follows from the root.) */
+  final case class Stamp(root: String, pointerModifiedMs: Long)
+
+  /** The [[Stamp]] of the version readers of `dir` resolve now, from
+    * filesystem calls only (no Spark job); None when no pointer names a
+    * version, or when the pointer changed while it was being read. */
+  def stamp(spark: SparkSession, dir: String): Option[Stamp] = {
+    val base = new Path(dir)
+    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val cur = new Path(base, Pointer)
+    def status =
+      try Some(fs.getFileStatus(cur).getModificationTime)
+      catch { case _: java.io.FileNotFoundException => None }
+    for {
+      before <- status
+      v <- published(fs, base)
+      after <- status if after == before
+    } yield Stamp(s"$dir/v=$v", after)
   }
 
   /** Versions present on disk, published or not. */

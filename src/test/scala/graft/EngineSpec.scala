@@ -148,13 +148,14 @@ class EngineSpec extends SparkTestBase {
         pt("2024-01-15 11:03:00", 1e-300))))
     // a full chart, a null-only series and the empty (error-path) chart
     Seq(chart, Seq(ChartSeries("m", Seq(pt("2024-01-15 11:00:00", null)))), Nil).foreach { c =>
-      // the oracle: the aggregate persistRun used to plan, over one
-      // partition so collect_list keeps the chart's order
+      // the oracle: the aggregate the run's persist used to plan, over
+      // one partition so collect_list keeps the chart's order
       val oracle = (if (c.isEmpty) spark.emptyDataset[ChartSeries] else c.toDS()).toDF()
         .coalesce(1).agg(to_json(collect_list(struct(col("metric"), col("points")))))
         .head().getString(0)
       val tmp = Files.createTempDirectory("graft-chart-bytes").toString
-      Runner.persistRun(spark, spec("mean > 0"), Nil, c, s"$tmp/job_data", s"$tmp/job_errors")
+      Runner.persistRuns(spark, Seq(Runner.Run(spec("mean > 0"), Nil, c)), s"$tmp/job_data",
+        s"$tmp/job_errors")
       val data = spark.read.parquet(s"$tmp/job_data").head().getAs[String]("data")
       assert(data == oracle)
     }

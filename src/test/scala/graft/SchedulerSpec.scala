@@ -325,8 +325,9 @@ class SchedulerSpec extends SparkTestBase {
         Thread.sleep(20)
       val tick = starts.asScala.toSeq.dropWhile(_._1 != "before-tick").drop(1)
         .takeWhile(_._1 != "after-tick")
-      // at least the cache fill and one job_data write per run
-      assert(tick.size >= 4, tick.toString)
+      // at least the cache fill, a collect per run and the group's
+      // job_data write
+      assert(tick.size >= 5, tick.toString)
       assert(tick.forall(_._2 == "monitors"), tick.toString)
     } finally sc.removeSparkListener(listener)
     sch.shutdown()
