@@ -4,10 +4,18 @@ import org.apache.spark.sql.SparkSession
 
 /** The one local SparkSession factory (Bench, Verify and the test
   * suites): UTC session time zone, UI off, shuffle partitions equal to
-  * the core count, and a 4096-class codegen cache. */
+  * the core count, a 4096-class codegen cache, and local files created
+  * without a subprocess.
+  *
+  * Hadoop's stock `file:` FileSystem forks a `chmod` for every file and
+  * directory it creates, and its `FileContext` (the streaming checkpoint
+  * log) a `readlink` per rename as well; the context's Hadoop conf names
+  * [[graft.store.NioLocalFileSystem]] for both APIs instead. The
+  * `file:` cache is off so the key holds even when something in the JVM
+  * asked for `file:` before this session existed. */
 object Session {
-  def local(cores: Int): SparkSession =
-    SparkSession.builder()
+  def local(cores: Int): SparkSession = {
+    val b = SparkSession.builder()
       .master(s"local[$cores]")
       .appName("graft")
       .config("spark.sql.shuffle.partitions", cores.toString)
@@ -19,5 +27,8 @@ object Session {
       // ~30% of suite wall time (measured 36.9 s → 25.6 s back-to-back).
       // Static conf: must be set before the session exists.
       .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
+      .config("spark.hadoop.fs.file.impl.disable.cache", "true")
+    graft.store.NioLocalFileSystem.Conf.foreach { case (k, v) => b.config(s"spark.hadoop.$k", v) }
+    b.getOrCreate()
+  }
 }

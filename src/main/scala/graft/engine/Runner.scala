@@ -43,9 +43,11 @@ import graft.store.{MetricSource, SharedRoot}
   * literals that Spark inlines into generated code, so under codegen
   * every run compiles new classes (~19 per run on the `monitor_loop`
   * benchmark, ~20 ms each); interpreted, it compiles none and pays more
-  * per row instead. A longer window computes codegen'd in the caller's
-  * session, as [[evaluate]], the planner, the backtest, the API and the
-  * streaming runner always do.
+  * per row instead. Such a window is also read as one partition
+  * ([[windowScan]]), so the run plans no exchange and is one job of one
+  * task. A longer window computes codegen'd and multi-partition in the
+  * caller's session, as [[evaluate]], the planner, the backtest, the API
+  * and the streaming runner always do.
   */
 object Runner {
 
@@ -55,8 +57,10 @@ object Runner {
   final case class ChartSeries(metric: String, points: Seq[ChartPoint])
 
   /** The longest window, in minutes, that a scheduled run evaluates
-    * interpreted. Measured on 4 local cores, one run (plan, collect,
-    * persist) at a new `now`, interpreted against codegen'd, median of
+    * interpreted, and reads as one partition ([[windowScan]]: at most
+    * six hours of minutely rows fit one task). Measured on 4 local
+    * cores, one run (plan, collect, persist) at a new `now`,
+    * interpreted against codegen'd, median of
     * three, over five target forms: at up to ~1.2 k rows per run from
     * the rollup store every form took 0.67-0.82 of its codegen'd time,
     * and at ~1.7 k raw events 0.85-1.02. The forms cross over between
@@ -71,6 +75,26 @@ object Runner {
     * otherwise the caller's `spark` (codegen'd). */
   private def sessionFor(spark: SparkSession, engine: SparkSession, minutes: Long) =
     if (minutes <= InterpretedMaxMinutes) engine else spark
+
+  /** `scan`, a window of `minutes`, as a scheduled query reads it: an
+    * engine window ([[sessionFor]]) as ONE partition, a longer one as
+    * it is. An engine window is KB-sized (at most six hours of
+    * minutely rows), so one task is enough to read it, and since
+    * `coalesce(1)` moves no data the
+    * plan keeps `SinglePartition` through filters, projections and a
+    * union of such scans: the aggregations, windows and joins above it
+    * need no exchange, and a run is one job of one task. The scan's own
+    * filters stay below the coalesce, so the window bounds still reach
+    * `PushedFilters`. */
+  private def windowScan(minutes: Long, scan: DataFrame): DataFrame =
+    if (minutes <= InterpretedMaxMinutes) scan.coalesce(1) else scan
+
+  /** A run's plan over [[windowScan]]s: for an engine window, its full
+    * outer joins restated as one partition
+    * ([[EngineSession.onePartitionJoins]]), so no operator above them
+    * plans an exchange either. */
+  private def windowPlan(minutes: Long, plan: DataFrame): DataFrame =
+    if (minutes <= InterpretedMaxMinutes) EngineSession.onePartitionJoins(plan) else plan
 
   /** E2 / pure evaluation: verdict rows only, no side effects. */
   def evaluate(spark: SparkSession, source: MetricSource, spec: MonitorSpec,
@@ -192,14 +216,17 @@ object Runner {
   }
 
   /** The compute half of a scheduled run: plan, collect and chart. The
-    * run takes the session its window calls for ([[sessionFor]]); its
-    * plan moves there before the collect, and the collect has that
-    * session as its active one. */
+    * run takes the session its window calls for ([[sessionFor]]) and
+    * reads its window as [[windowScan]] does; its plan moves to that
+    * session before the collect, and the collect has that session as
+    * its active one. */
   private def compute(spark: SparkSession, engine: SparkSession, source: MetricSource,
       spec: MonitorSpec, now: Timestamp): Run = {
     val session = sessionFor(spark, engine, spec.minutes)
+    val window: MetricSource = (from, until) => windowScan(spec.minutes, source.scan(from, until))
     EngineSession.withActive(session) {
-      val df = EngineSession.adopt(session, Planner.planWithPoints(session, source, spec, now))
+      val df = EngineSession.adopt(session,
+        windowPlan(spec.minutes, Planner.planWithPoints(session, window, spec, now)))
       val rows = df.collect().toSeq
       // Merge chart points per metric across targets (a metric matched by
       // two targets charts once), sorted by ts for a deterministic payload.
@@ -240,7 +267,8 @@ object Runner {
     * One engine session, derived here, serves the slice, the K runs,
     * each by its window ([[sessionFor]]), and the group write: the scan
     * moves into the session the union window calls for before
-    * `persist()`, so the cache build and fill run there too, and each
+    * `persist()`, so the cache build and fill run there too (an engine
+    * window caches as one partition, [[windowScan]]), and each
     * run moves its plan over the slice into the session its own window
     * calls for (the cache is shared between them).
     *
@@ -263,9 +291,10 @@ object Runner {
       (until.getTime - sp.minutes * 60000L, until.getTime)
     }
     val (from, until) = (bounds.map(_._1).min, bounds.map(_._2).max)
-    val home = sessionFor(spark, engine, (until - from) / 60000L)
+    val minutes = (until - from) / 60000L
+    val home = sessionFor(spark, engine, minutes)
     val clipped = EngineSession.adopt(home,
-      source.scan(new Timestamp(from), new Timestamp(until))).persist()
+      windowScan(minutes, source.scan(new Timestamp(from), new Timestamp(until)))).persist()
     try {
       // fill the cache once, before the fan-out: otherwise each
       // concurrent run would materialize the slice itself

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Accumulated CDX capture index as a BUCKETED, urlkey-SORTED catalog
   * store — the serving-side complement of the per-batch cdx sidecars
@@ -106,12 +107,31 @@ object CdxStore {
     }
 
   /** The exclusive upper bound of a SURT prefix's key range: the
-    * prefix with its final char incremented — every key that STARTS
-    * WITH the prefix (and nothing else) falls in [prefix, end). */
+    * prefix with its final CODE POINT incremented — every key that
+    * STARTS WITH the prefix (and nothing else) falls in [prefix, end).
+    * Spark orders strings by their UTF-8 bytes, which is code-point
+    * order, so the increment skips the surrogate block (U+D7FF is
+    * followed by U+E000) and carries past U+10FFFF. A UTF-16 `char`
+    * increment would turn U+D7FF into a lone surrogate and U+FFFF into
+    * U+0000, an end below the prefix. */
   private[graft] def siteRangeEnd(prefix: String): String = {
     require(prefix.nonEmpty, "empty site prefix")
-    prefix.init + (prefix.last + 1).toChar
+    val last = prefix.codePointBefore(prefix.length)
+    val init = prefix.substring(0, prefix.length - Character.charCount(last))
+    if (last == Character.MAX_CODE_POINT) {
+      require(init.nonEmpty, "a prefix of U+10FFFF only has no upper bound")
+      siteRangeEnd(init)
+    } else {
+      val next = if (last + 1 == Character.MIN_SURROGATE) Character.MAX_SURROGATE + 1 else last + 1
+      init + new String(Character.toChars(next))
+    }
   }
+
+  /** cluster.idx key order: Spark's own (UTF-8 bytes, [[UTF8String]]),
+    * which computed the blocks' `k_min`/`k_max`. Java's `String` order
+    * is UTF-16 order and differs past the BMP: U+1F600 sorts before
+    * U+FFFD as a `String` but after it in Spark. */
+  private def utf8(s: String): UTF8String = UTF8String.fromString(s)
 
   /** Every stored capture of one site, as a RANGE predicate over the
     * SURT keyspace — `urlkey >= 'com,example)' AND urlkey <
@@ -274,7 +294,7 @@ object CdxStore {
       .select("file", "k_min", "k_max", "n_rows")
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2),
         r.getLong(3)))
-      .sortBy(_._2)
+      .sortWith((a, b) => utf8(a._2).compareTo(utf8(b._2)) < 0)
     if (prevIdx.isEmpty) return exportRangeLayout(spark, table, dir, blocks)
     // affected block ids: assign every delta key DISTRIBUTEDLY by the
     // lookup rule (last k_min ≤ key, keys below the first block extend
@@ -403,20 +423,20 @@ object CdxStore {
     * in-process, index metadata only, and every block scan still reads
     * the landed files. Saves a Spark read+collect job pair per probe. */
   private val clusterIdxMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Array[(String, String, String)]]()
+    String, Array[(String, UTF8String, UTF8String)]]()
   private def clusterIdxAt(spark: SparkSession,
-      root: String): Array[(String, String, String)] =
+      root: String): Array[(String, UTF8String, UTF8String)] =
     clusterIdxMemo.computeIfAbsent(root, _ =>
       spark.read.parquet(s"$root/cluster.idx")
         .select("file", "k_min", "k_max")
-        .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
-        .sortBy(_._2))
+        .collect().map(r => (r.getString(0), utf8(r.getString(1)), utf8(r.getString(2))))
+        .sortWith((a, b) => a._2.compareTo(b._2) < 0))
 
   private def selectedBlocksAt(spark: SparkSession, root: String,
       sitePrefix: String): Seq[String] = {
-    val end = siteRangeEnd(sitePrefix)
+    val (lo, end) = (utf8(sitePrefix), utf8(siteRangeEnd(sitePrefix)))
     clusterIdxAt(spark, root)
-      .collect { case (f, kmin, kmax) if kmax >= sitePrefix && kmin < end => f }
+      .collect { case (f, kmin, kmax) if kmax.compareTo(lo) >= 0 && kmin.compareTo(end) < 0 => f }
       .toSeq.sorted
   }
 
@@ -471,15 +491,16 @@ object CdxStore {
       keys: Seq[String]): Seq[String] = {
     val idx = clusterIdxAt(spark, root) // sorted by k_min (memo contract)
     val out = scala.collection.mutable.LinkedHashSet.empty[String]
-    keys.foreach { k =>
+    keys.foreach { key =>
+      val k = utf8(key)
       // last block with k_min <= k: with sorted disjoint ranges it is
       // the only candidate; membership confirmed against its k_max
       var lo = 0; var hi = idx.length - 1; var best = -1
       while (lo <= hi) {
         val m = (lo + hi) >>> 1
-        if (idx(m)._2 <= k) { best = m; lo = m + 1 } else hi = m - 1
+        if (idx(m)._2.compareTo(k) <= 0) { best = m; lo = m + 1 } else hi = m - 1
       }
-      if (best >= 0 && k <= idx(best)._3) out += idx(best)._1
+      if (best >= 0 && k.compareTo(idx(best)._3) <= 0) out += idx(best)._1
     }
     out.toSeq.sorted
   }

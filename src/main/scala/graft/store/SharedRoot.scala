@@ -4,6 +4,7 @@ import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.graft.EngineSession
 
 /** The one append path for parquet tables that several writers share
   * by root: `job_data`, `job_errors` and the delivery-audit table.
@@ -24,7 +25,7 @@ object SharedRoot {
     * `partitionBy` (`<root>/<col>=<value>/part-*.parquet`). */
   def append(df: DataFrame, root: String, partitionBy: String*): Unit = {
     val path = new Path(root)
-    val key = path.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val key = path.getFileSystem(EngineSession.hadoopConf(df.sparkSession))
       .makeQualified(path).toString
     locks.computeIfAbsent(key, _ => new Object).synchronized {
       df.write.mode(SaveMode.Append).partitionBy(partitionBy: _*).parquet(root)

@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.EngineSession
 import org.apache.spark.sql.types.StructType
 
 import graft.ext.AtomicSink
@@ -42,7 +43,7 @@ object VersionedTable {
     * unpublished `v=N` partials, or an empty directory). */
   def current(spark: SparkSession, dir: String): Option[String] = {
     val base = new Path(dir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = base.getFileSystem(EngineSession.hadoopConf(spark))
     published(fs, base).map(v => s"$dir/v=$v").orElse {
       val flat = fs.exists(base) && fs.listStatus(base).exists { st =>
         val n = st.getPath.getName
@@ -71,7 +72,7 @@ object VersionedTable {
   def publish(spark: SparkSession, dir: String,
       keep: String => Set[Long] = _ => Set.empty)(write: String => Unit): String = {
     val base = new Path(dir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = base.getFileSystem(EngineSession.hadoopConf(spark))
     // read BEFORE publishing: the sweep keeps what readers resolve now
     val prev = published(fs, base)
     val existing = versions(fs, base)
@@ -101,7 +102,7 @@ object VersionedTable {
     * version, or when the pointer changed while it was being read. */
   def stamp(spark: SparkSession, dir: String): Option[Stamp] = {
     val base = new Path(dir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = base.getFileSystem(EngineSession.hadoopConf(spark))
     val cur = new Path(base, Pointer)
     def status =
       try Some(fs.getFileStatus(cur).getModificationTime)

@@ -1,6 +1,9 @@
 package org.apache.spark.sql.graft
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{classic, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.FullOuter
+import org.apache.spark.sql.catalyst.plans.logical.{Join, Repartition}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** The interpreted session the scheduled monitor path runs in.
@@ -29,16 +32,29 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * [[ColumnBridge]]. */
 object EngineSession {
 
-  /** Codegen off, and the engine's tasks in the executor's default
-    * artifact session. With Spark's default (isolation on) every session
-    * gets an executor class loader of its own, and compiled classes are
-    * cached per class loader: the few classes that have no interpreted
-    * form (the cached-batch column accessor, the aggregation row joiner)
-    * would then recompile on every tick. */
+  /** Codegen off, the engine's tasks in the executor's default
+    * artifact session, and local files created without a subprocess.
+    *
+    * With Spark's default (isolation on) every session gets an executor
+    * class loader of its own, and compiled classes are cached per class
+    * loader: the few classes that have no interpreted form (the
+    * cached-batch column accessor, the aggregation row joiner) would
+    * then recompile on every tick.
+    *
+    * A tick creates ~50 local files and directories (`job_data`,
+    * `job_errors`, the throttle state, the delivery audit, their `.crc`
+    * files and `_temporary` staging), and Hadoop's stock `file:`
+    * FileSystem forks a `chmod` for each. The engine's Hadoop conf names
+    * [[graft.store.NioLocalFileSystem]] instead, with the `file:` cache
+    * off for this session: Hadoop caches one `file:` instance per JVM,
+    * so without it the key would reach only a JVM whose first `file:`
+    * lookup carried it. So the scheduled path forks nothing, whatever
+    * session the caller built. */
   private val Settings = Seq(
     "spark.sql.codegen.wholeStage" -> "false",
     "spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
-    "spark.sql.artifact.isolation.enabled" -> "false")
+    "spark.sql.artifact.isolation.enabled" -> "false") ++
+    _root_.graft.store.NioLocalFileSystem.Conf :+ ("fs.file.impl.disable.cache" -> "true")
 
   /** A copy of `spark` that evaluates every expression interpreted: a
     * new session over the same shared state (cache, catalog, context)
@@ -93,6 +109,25 @@ object EngineSession {
     if (df.sparkSession eq engine) df
     else classic.Dataset.ofRows(engine.asInstanceOf[classic.SparkSession],
       df.queryExecution.analyzed)
+
+  /** The Hadoop conf `spark`'s own reads and writes use: the context's
+    * conf plus the session's SQL confs (for an engine session, the
+    * `file:` FileSystem of [[Settings]]). Driver-side FileSystem calls
+    * take it, so they create files as the session's writes do. */
+  def hadoopConf(spark: SparkSession): Configuration =
+    spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
+
+  /** `df` with a `coalesce(1)` above each full outer join. Over inputs
+    * of one partition such a join is one partition too, but Spark
+    * reports its output partitioning as unknown, so an aggregation above
+    * it (a monitor's reductions over `divideSeries`, `asPercent`, ...)
+    * would plan a shuffle. The coalesce moves no data; it restates the
+    * partitioning. For plans whose scans are all one partition. */
+  def onePartitionJoins(df: DataFrame): DataFrame =
+    classic.Dataset.ofRows(df.sparkSession.asInstanceOf[classic.SparkSession],
+      df.queryExecution.analyzed.transformUp {
+        case j: Join if j.joinType == FullOuter => Repartition(1, shuffle = false, j)
+      })
 
   /** Run `body` with `engine` as the thread's active session, so the
     * encoders and projections built on the driver take its settings. */

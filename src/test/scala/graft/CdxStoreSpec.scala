@@ -66,6 +66,45 @@ class CdxStoreSpec extends SparkTestBase {
     graft.store.Bucketing.dropWithLocation(spark, t)
   }
 
+  test("site ranges and cluster.idx lookups follow Spark's UTF-8 key order past the BMP") {
+    val t = "graft_cdxutf8_" + Integer.toHexString(
+      java.util.UUID.randomUUID().hashCode())
+    graft.store.Bucketing.dropWithLocation(spark, t)
+    // path marks around the UTF-16/UTF-8 order seams: U+D7FF (last
+    // before the surrogates), U+E000, U+FFFD, U+FFFF, U+1F600 and
+    // U+10FFFF (the last code point); as Java Strings U+1F600 and
+    // U+10FFFF sort BEFORE U+E000, in Spark after U+FFFF
+    val marks = Seq("\uD7FF", "\uE000", "\uFFFD", "\uFFFF", "\uD83D\uDE00", "\uDBFF\uDFFF")
+    val keys = for (m <- marks; i <- 0 until 5) yield s"com,u)/$m$i"
+    CdxStore.append(keys.zipWithIndex.map { case (k, i) =>
+      (k, s"https://u.com/$i", "2026-08-14T00:00:00Z", "response", "application/http",
+        100L + i, "/arc/part-u.warc.gz", i.toLong)
+    }.toDF("urlkey", "target_uri", "warc_date", "warc_type", "content_type",
+      "content_length", "path", "idx"), t, buckets = 2)
+    val prefixes = "com,u)/" +: marks.map(m => s"com,u)/$m")
+    def want(p: String) = keys.filter(_.startsWith(p)).sorted
+    def keysOf(df: org.apache.spark.sql.DataFrame) =
+      df.select("urlkey").as[String].collect().toSeq.sorted
+    prefixes.foreach(p => assert(keysOf(CdxStore.capturesForSite(spark, t, p)) == want(p), p))
+    // one block straddles every seam; four split the marks between them
+    Seq(1, 4).foreach { blocks =>
+      val dir = Files.createTempDirectory("graft-cdx-utf8").toString
+      CdxStore.exportRangeLayout(spark, t, dir, blocks)
+      prefixes.foreach(p =>
+        assert(keysOf(CdxStore.capturesForSiteIndexed(spark, dir, p)) == want(p), s"$blocks: $p"))
+      val fileOf = spark.read.parquet(s"${CdxStore.currentRoot(spark, dir)}/blocks")
+        .select(col("urlkey"), input_file_name()).as[(String, String)].collect().toMap
+      keys.foreach(k =>
+        assert(CdxStore.blocksForKeys(spark, dir, Seq(k)) == Seq(fileOf(k)), s"$blocks: $k"))
+    }
+    // the end bound is the next code point; U+10FFFF carries
+    assert(CdxStore.siteRangeEnd("a\uD7FF") == "a\uE000")
+    assert(CdxStore.siteRangeEnd("a\uFFFF") == "a\uD800\uDC00")
+    assert(CdxStore.siteRangeEnd("a\uD83D\uDE00") == "a\uD83D\uDE01")
+    assert(CdxStore.siteRangeEnd("ab\uDBFF\uDFFF") == "ac")
+    graft.store.Bucketing.dropWithLocation(spark, t)
+  }
+
   test("cluster.idx secondary index: a site lookup touches ONLY its own blocks (IO-asserted), results == the bucketed store's range query") {
     val t = "graft_cdxzip_" + Integer.toHexString(
       java.util.UUID.randomUUID().hashCode())

@@ -9,7 +9,10 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{Row, SparkSession}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions.{col, lit, to_json, to_timestamp}
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -129,21 +132,69 @@ class EngineSessionSpec extends SparkTestBase {
 
   private def t(s: String): Instant = Timestamp.valueOf(s).toInstant
 
+  /** The shuffle exchanges a physical plan holds: inside adaptive
+    * plans, subqueries and the plans of the cached relations it scans. */
+  private object Exchanges extends AdaptiveSparkPlanHelper {
+    def apply(plan: SparkPlan): Int = collectWithSubqueries(plan) {
+      case _: ShuffleExchangeLike => 1
+      case s: InMemoryTableScanExec => apply(s.relation.cachedPlan)
+    }.sum
+  }
+
+  /** (action, ran in the caller's session, shuffle exchanges) of every
+    * query `body` runs on `spark` or an engine session derived from it,
+    * once `actions` of them arrived (listener delivery is async). */
+  private def planned(actions: Int)(body: => Unit): Seq[(String, Boolean, Int)] = {
+    val seen = new ConcurrentLinkedQueue[(String, Boolean, Int)]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.add((funcName, qe.sparkSession eq spark, Exchanges(qe.executedPlan)))
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (seen.size < actions && System.nanoTime() < deadline) Thread.sleep(20)
+      seen.asScala.toSeq
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("the interpreted engine path equals the codegen path on every target form") {
     val expr = "count > 20 && (max > 5 || median < 50 || p90 > 1 || last > 0 || " +
       "first > 0 || min < 1 || stddev > 0)"
     val specs = forms.grouped(5).zipWithIndex.map { case (ts, i) => monitor(i + 1, ts, expr) }
       .toSeq
     val tmp = Files.createTempDirectory("graft-engine-parity").toString
-    val engine = Runner.runBatch(spark, source, specs, until, s"$tmp/job_data",
-      s"$tmp/job_errors", parallelism = 2)
-    val data = spark.read.parquet(s"$tmp/job_data").select("job_id", "data").collect()
-      .map(r => r.getAs[Number]("job_id").longValue -> r.getString(1)).toMap
-    assert(data.size == specs.size)
+    def jobData(root: String) = spark.read.parquet(s"$root/job_data").select("job_id", "data")
+      .collect().map(r => r.getAs[Number]("job_id").longValue -> r.getString(1)).toMap
+    // a cohort tick (the slice fill, a collect per run, the group write),
+    // then each monitor as a per-job tick (a collect and a write each)
+    var engine: Map[Long, scala.util.Try[Seq[Verdict]]] = Map.empty
+    val cohortPlans = planned(specs.size + 2) {
+      engine = Runner.runBatch(spark, source, specs, until, s"$tmp/job_data",
+        s"$tmp/job_errors", parallelism = 2)
+    }
+    val single = s"$tmp/single"
+    var perJob: Map[Long, Seq[Verdict]] = Map.empty
+    val perJobPlans = planned(2 * specs.size) {
+      perJob = specs.map(sp => sp.id -> Runner.runOnce(spark, source, sp, until,
+        s"$single/job_data", s"$single/job_errors")).toMap
+    }
+    // every query of both ticks ran in the engine session without a
+    // shuffle: each window is read as one partition
+    Seq(cohortPlans, perJobPlans).foreach { plans =>
+      assert(plans.count(_._1 == "collect") == specs.size, plans)
+      assert(plans.forall(!_._2), plans)
+      assert(plans.forall(_._3 == 0), plans.filter(_._3 > 0))
+    }
+    val (data, singleData) = (jobData(tmp), jobData(single))
+    assert(data.size == specs.size && singleData == data)
     specs.foreach { sp =>
       val oracle = Runner.evaluate(spark, source, sp, until)
       assert(oracle.nonEmpty, s"${sp.targets} evaluates to no series")
       assert(canon(engine(sp.id).get) == canon(oracle), s"verdicts differ: ${sp.targets}")
+      assert(canon(perJob(sp.id)) == canon(oracle), s"per-job verdicts differ: ${sp.targets}")
       assert(data(sp.id) == chartJson(sp, until), s"job_data differs: ${sp.targets}")
     }
     // the NaN and the nulls reached the persisted charts
@@ -244,37 +295,26 @@ class EngineSessionSpec extends SparkTestBase {
       .copy(minutes = Runner.InterpretedMaxMinutes + 60)
     val oracle = Seq(short, wide).map(sp => sp.id -> canon(Runner.evaluate(spark, source, sp, until)))
       .toMap
-    // (action, ran in the caller's session) of every collect and fill
-    val seen = new ConcurrentLinkedQueue[(String, Boolean)]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        if (funcName == "collect" || funcName == "foreachPartition")
-          seen.add(funcName -> (qe.sparkSession eq spark))
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    /** The actions `body` ran, once its `collects` collects arrived. */
-    def actions(collects: Int)(body: => Unit): Seq[(String, Boolean)] = {
-      seen.clear()
-      body
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (seen.asScala.count(_._1 == "collect") < collects && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      seen.asScala.toSeq.sortBy(_.toString)
-    }
-    spark.listenerManager.register(listener)
-    try {
-      assert(actions(1)(assert(canon(Runner.runOnce(spark, source, wide, until, jd, je)) ==
-        oracle(wide.id))) == Seq("collect" -> true))
-      assert(actions(1)(assert(canon(Runner.runOnce(spark, source, short, until, jd, je)) ==
-        oracle(short.id))) == Seq("collect" -> false))
-      // a cohort: the union window is wide, so the slice is built in the
-      // caller's session; each run still takes its own window's session
-      var batch: Map[Long, scala.util.Try[Seq[Verdict]]] = Map.empty
-      assert(actions(2) {
-        batch = Runner.runBatch(spark, source, Seq(short, wide), until, jd, je, parallelism = 2)
-      } == Seq("collect" -> false, "collect" -> true, "foreachPartition" -> true))
-      assert(batch.map { case (id, vs) => id -> canon(vs.get) } == oracle)
-    } finally spark.listenerManager.unregister(listener)
+    /** (action, ran in the caller's session, planned a shuffle) of the
+      * collects and fills `body` ran: a wide window keeps the caller's
+      * multi-partition plan, with the exchange its reduction needs. */
+    def actions(queries: Int)(body: => Unit): Seq[(String, Boolean, Boolean)] =
+      planned(queries)(body).collect {
+        case (f, caller, n) if f == "collect" || f == "foreachPartition" => (f, caller, n > 0)
+      }.sortBy(_.toString)
+    // each runOnce: a collect and a job_data write
+    assert(actions(2)(assert(canon(Runner.runOnce(spark, source, wide, until, jd, je)) ==
+      oracle(wide.id))) == Seq(("collect", true, true)))
+    assert(actions(2)(assert(canon(Runner.runOnce(spark, source, short, until, jd, je)) ==
+      oracle(short.id))) == Seq(("collect", false, false)))
+    // a cohort: the union window is wide, so the slice is built in the
+    // caller's session; each run still takes its own window's session
+    var batch: Map[Long, scala.util.Try[Seq[Verdict]]] = Map.empty
+    assert(actions(4) {
+      batch = Runner.runBatch(spark, source, Seq(short, wide), until, jd, je, parallelism = 2)
+    } == Seq(("collect", false, false), ("collect", true, true),
+      ("foreachPartition", true, false)))
+    assert(batch.map { case (id, vs) => id -> canon(vs.get) } == oracle)
   }
 
   test("a listener registered after the scheduler is built sees the engine's collects; a conf change gets a new engine") {
