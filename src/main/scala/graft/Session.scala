@@ -10,9 +10,10 @@ import org.apache.spark.sql.SparkSession
   * Hadoop's stock `file:` FileSystem forks a `chmod` for every file and
   * directory it creates, and its `FileContext` (the streaming checkpoint
   * log) a `readlink` per rename as well; the context's Hadoop conf names
-  * [[graft.store.NioLocalFileSystem]] for both APIs instead. The
-  * `file:` cache is off so the key holds even when something in the JVM
-  * asked for `file:` before this session existed. */
+  * [[graft.store.NioLocalFileSystem]] for both APIs instead
+  * ([[graft.store.NioLocalFileSystem.Conf]], which also turns the `file:`
+  * cache off, so the key holds even when something in the JVM asked for
+  * `file:` before this session existed). */
 object Session {
   def local(cores: Int): SparkSession = {
     val b = SparkSession.builder()
@@ -27,7 +28,6 @@ object Session {
       // ~30% of suite wall time (measured 36.9 s → 25.6 s back-to-back).
       // Static conf: must be set before the session exists.
       .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.hadoop.fs.file.impl.disable.cache", "true")
     graft.store.NioLocalFileSystem.Conf.foreach { case (k, v) => b.config(s"spark.hadoop.$k", v) }
     b.getOrCreate()
   }

@@ -43,11 +43,12 @@ import graft.store.{MetricSource, SharedRoot}
   * literals that Spark inlines into generated code, so under codegen
   * every run compiles new classes (~19 per run on the `monitor_loop`
   * benchmark, ~20 ms each); interpreted, it compiles none and pays more
-  * per row instead. Such a window is also read as one partition
-  * ([[windowScan]]), so the run plans no exchange and is one job of one
-  * task. A longer window computes codegen'd and multi-partition in the
-  * caller's session, as [[evaluate]], the planner, the backtest, the API
-  * and the streaming runner always do.
+  * per row instead. Such a window is also read as one partition when
+  * it is known to be small ([[onePartition]]), so the run plans no
+  * exchange and is one job of one task. A longer window computes
+  * codegen'd and multi-partition in the caller's session, as
+  * [[evaluate]], the planner, the backtest, the API and the streaming
+  * runner always do.
   */
 object Runner {
 
@@ -57,11 +58,10 @@ object Runner {
   final case class ChartSeries(metric: String, points: Seq[ChartPoint])
 
   /** The longest window, in minutes, that a scheduled run evaluates
-    * interpreted, and reads as one partition ([[windowScan]]: at most
-    * six hours of minutely rows fit one task). Measured on 4 local
-    * cores, one run (plan, collect, persist) at a new `now`,
-    * interpreted against codegen'd, median of
-    * three, over five target forms: at up to ~1.2 k rows per run from
+    * interpreted, and the longest it may read as one partition
+    * ([[onePartition]]). Measured on 4 local cores, one run (plan,
+    * collect, persist) at a new `now`, interpreted against codegen'd,
+    * median of three, over five target forms: at up to ~1.2 k rows per run from
     * the rollup store every form took 0.67-0.82 of its codegen'd time,
     * and at ~1.7 k raw events 0.85-1.02. The forms cross over between
     * ~7 k rows (`movingAverage`) and over 200 k (`summarize`); at 10^5
@@ -76,25 +76,35 @@ object Runner {
   private def sessionFor(spark: SparkSession, engine: SparkSession, minutes: Long) =
     if (minutes <= InterpretedMaxMinutes) engine else spark
 
-  /** `scan`, a window of `minutes`, as a scheduled query reads it: an
-    * engine window ([[sessionFor]]) as ONE partition, a longer one as
-    * it is. An engine window is KB-sized (at most six hours of
-    * minutely rows), so one task is enough to read it, and since
-    * `coalesce(1)` moves no data the
-    * plan keeps `SinglePartition` through filters, projections and a
-    * union of such scans: the aggregations, windows and joins above it
-    * need no exchange, and a run is one job of one task. The scan's own
-    * filters stay below the coalesce, so the window bounds still reach
-    * `PushedFilters`. */
-  private def windowScan(minutes: Long, scan: DataFrame): DataFrame =
-    if (minutes <= InterpretedMaxMinutes) scan.coalesce(1) else scan
+  /** The most rows a cohort's slice ([[runBatch]]) may hold for its
+    * runs to read their windows as one partition. The cost of a window
+    * is in its rows (series x minutes), and the slice holds every series
+    * of the store for the union window, so its minutes alone do not
+    * bound it. Measured on 4 local cores, one partition (one task, no
+    * exchange) against the multi-partition plan (a task per core and the
+    * exchanges above the scan), for a run whose target matches every
+    * series of a 360-minute window: ahead by 8-19% at 1.8 k-7.2 k rows,
+    * even at 10.8 k, behind from 18 k, and 1.4x as long at 72 k and
+    * 1.8x at 180 k rows. */
+  val OnePartitionMaxRows = 10000L
 
-  /** A run's plan over [[windowScan]]s: for an engine window, its full
-    * outer joins restated as one partition
-    * ([[EngineSession.onePartitionJoins]]), so no operator above them
-    * plans an exchange either. */
-  private def windowPlan(minutes: Long, plan: DataFrame): DataFrame =
-    if (minutes <= InterpretedMaxMinutes) EngineSession.onePartitionJoins(plan) else plan
+  /** Whether a scheduled run reads its window as ONE partition: an
+    * engine window ([[sessionFor]]) whose rows are known to be few.
+    * `coalesce(1)` moves no data, so the plan keeps `SinglePartition`
+    * through filters, projections and a union of such scans: the
+    * aggregations, windows and joins above it need no exchange, and a
+    * run is one job of one task. The scan's own filters stay below the
+    * coalesce, so the window bounds still reach `PushedFilters`.
+    *
+    * `rows` is what the caller knows of the rows beneath the run: the
+    * row count of a cohort's filled slice, or None for a per-job run,
+    * whose scan has not run yet. A per-job run's metric filters push
+    * through the coalesce into the scan, so it reads only the series its
+    * targets match; it goes by its window's minutes alone, so one whose
+    * targets match thousands of series reads them all in one task, at
+    * the cost [[OnePartitionMaxRows]] lists. */
+  private def onePartition(minutes: Long, rows: Option[Long]): Boolean =
+    minutes <= InterpretedMaxMinutes && rows.forall(_ <= OnePartitionMaxRows)
 
   /** E2 / pure evaluation: verdict rows only, no side effects. */
   def evaluate(spark: SparkSession, source: MetricSource, spec: MonitorSpec,
@@ -210,23 +220,28 @@ object Runner {
   private[engine] def runIn(spark: SparkSession, engine: SparkSession, source: MetricSource,
       spec: MonitorSpec, now: Timestamp, jobDataPath: String,
       jobErrorsPath: String): Seq[Verdict] = {
-    val run = compute(spark, engine, source, spec, now)
+    val run = compute(spark, engine, source, spec, now, onePartition(spec.minutes, None))
     EngineSession.withActive(engine)(persistRuns(engine, Seq(run), jobDataPath, jobErrorsPath))
     run.verdicts
   }
 
   /** The compute half of a scheduled run: plan, collect and chart. The
-    * run takes the session its window calls for ([[sessionFor]]) and
-    * reads its window as [[windowScan]] does; its plan moves to that
-    * session before the collect, and the collect has that session as
-    * its active one. */
+    * run takes the session its window calls for ([[sessionFor]]); its
+    * plan moves to that session before the collect, and the collect has
+    * that session as its active one. With `single`, the run reads each
+    * scan of its window as one partition ([[onePartition]]) and
+    * restates its full outer joins as one partition too
+    * ([[EngineSession.onePartitionJoins]]), so no operator above them
+    * plans an exchange either. */
   private def compute(spark: SparkSession, engine: SparkSession, source: MetricSource,
-      spec: MonitorSpec, now: Timestamp): Run = {
+      spec: MonitorSpec, now: Timestamp, single: Boolean): Run = {
     val session = sessionFor(spark, engine, spec.minutes)
-    val window: MetricSource = (from, until) => windowScan(spec.minutes, source.scan(from, until))
+    val window: MetricSource =
+      if (single) (from, until) => source.scan(from, until).coalesce(1) else source
     EngineSession.withActive(session) {
+      val plan = Planner.planWithPoints(session, window, spec, now)
       val df = EngineSession.adopt(session,
-        windowPlan(spec.minutes, Planner.planWithPoints(session, window, spec, now)))
+        if (single) EngineSession.onePartitionJoins(plan) else plan)
       val rows = df.collect().toSeq
       // Merge chart points per metric across targets (a metric matched by
       // two targets charts once), sorted by ts for a deterministic payload.
@@ -267,10 +282,13 @@ object Runner {
     * One engine session, derived here, serves the slice, the K runs,
     * each by its window ([[sessionFor]]), and the group write: the scan
     * moves into the session the union window calls for before
-    * `persist()`, so the cache build and fill run there too (an engine
-    * window caches as one partition, [[windowScan]]), and each
-    * run moves its plan over the slice into the session its own window
-    * calls for (the cache is shared between them).
+    * `persist()`, so the cache build and fill run there too, a task per
+    * partition of the scan, and each run moves its plan over the slice
+    * into the session its own window calls for (the cache is shared
+    * between them). The fill leaves the slice's row count in the cache,
+    * at no job's cost, and a run over an engine window reads the slice
+    * as one partition when that count is at most
+    * [[OnePartitionMaxRows]] ([[onePartition]]).
     *
     * The cached slice is window-bounded (the whole point of monitor
     * windows: KB-to-MB per job even at 100 TB of history), so pinning it
@@ -294,16 +312,19 @@ object Runner {
     val minutes = (until - from) / 60000L
     val home = sessionFor(spark, engine, minutes)
     val clipped = EngineSession.adopt(home,
-      windowScan(minutes, source.scan(new Timestamp(from), new Timestamp(until)))).persist()
+      source.scan(new Timestamp(from), new Timestamp(until))).persist()
     try {
       // fill the cache once, before the fan-out: otherwise each
       // concurrent run would materialize the slice itself
       EngineSession.withActive(home)(clipped.foreachPartition((_: Iterator[Row]) => ()))
       val slice = MetricSource.ofFrame(clipped)
+      // a count the cache does not hold reads as too many rows
+      val rows = EngineSession.cachedRows(clipped).orElse(Some(Long.MaxValue))
       val pool = Executors.newFixedThreadPool(math.min(parallelism, specs.size))
       try {
         val computed = specs.map { spec =>
-          spec.id -> pool.submit(() => Try(compute(spark, engine, slice, spec, now)))
+          val single = onePartition(spec.minutes, rows)
+          spec.id -> pool.submit(() => Try(compute(spark, engine, slice, spec, now, single)))
         }.map { case (id, run) => id -> run.get }
         val committed = Try(EngineSession.withActive(engine)(persistRuns(engine,
           computed.collect { case (_, Success(run)) => run }, jobDataPath, jobErrorsPath)))

@@ -33,10 +33,7 @@ import org.apache.hadoop.fs.permission.FsPermission
   * existing file returns false, as on HDFS, instead of replacing it.
   * [[graft.ext.AtomicSink.commit]] is written for that rule.
   *
-  * Installed by the conf key `fs.file.impl`. Hadoop caches one `file:`
-  * instance per JVM and scheme, so a conf that names this class reaches
-  * `FileSystem.get` only with `fs.file.impl.disable.cache=true` or when
-  * it is the first conf to ask for `file:` in the JVM. */
+  * Installed by the conf keys of [[NioLocalFileSystem.Conf]]. */
 final class NioLocalFileSystem extends LocalFileSystem(new NioLocalFileSystem.Raw) {
   override def rename(src: Path, dst: Path): Boolean = !isFile(dst) && super.rename(src, dst)
 }
@@ -45,9 +42,13 @@ object NioLocalFileSystem {
 
   /** The conf keys that route `file:` paths, through both the
     * `FileSystem` API and `FileContext` (the streaming checkpoint log),
-    * to the NIO-backed classes. */
+    * to the NIO-backed classes. The `file:` cache goes off with them:
+    * Hadoop caches one `file:` instance per JVM and scheme, so without
+    * it `fs.file.impl` would reach `FileSystem.get` only in a JVM whose
+    * first `file:` lookup carried it. */
   val Conf: Seq[(String, String)] = Seq(
     "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "fs.file.impl.disable.cache" -> "true",
     "fs.AbstractFileSystem.file.impl" -> classOf[NioLocalFs].getName)
 
   private val Bits = Seq(

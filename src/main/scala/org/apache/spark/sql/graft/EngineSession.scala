@@ -8,7 +8,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
 
 /** The interpreted session the scheduled monitor path runs in.
   *
-  * A monitor run is a few tiny queries over a KB-sized window, and its
+  * A monitor run is a few small queries over a window of at most a few
+  * hours (a few thousand rows on a store of a few series), and its
   * window bounds and `window_end` are timestamp literals that Spark
   * inlines into generated Java: under code generation every run (every
   * cohort tick, every hourly monitor) compiles ~9-19 new Janino classes
@@ -45,16 +46,24 @@ object EngineSession {
     * `job_errors`, the throttle state, the delivery audit, their `.crc`
     * files and `_temporary` staging), and Hadoop's stock `file:`
     * FileSystem forks a `chmod` for each. The engine's Hadoop conf names
-    * [[graft.store.NioLocalFileSystem]] instead, with the `file:` cache
-    * off for this session: Hadoop caches one `file:` instance per JVM,
-    * so without it the key would reach only a JVM whose first `file:`
-    * lookup carried it. So the scheduled path forks nothing, whatever
-    * session the caller built. */
+    * [[graft.store.NioLocalFileSystem]] instead
+    * ([[graft.store.NioLocalFileSystem.Conf]], with the `file:` cache off
+    * for this session). So the scheduled path forks nothing, whatever
+    * session the caller built.
+    *
+    * These settings are applied after the caller's confs are copied, so
+    * they win: the scheduled path (`job_data`, `job_errors`, the
+    * throttle state, the delivery audit) always writes through
+    * `NioLocalFileSystem`, even when the caller's session names another
+    * `file:` FileSystem (`fs.file.impl` or
+    * `fs.AbstractFileSystem.file.impl`, say a `RawLocalFileSystem` that
+    * skips `.crc` files). Only the caller's own session keeps its
+    * choice. */
   private val Settings = Seq(
     "spark.sql.codegen.wholeStage" -> "false",
     "spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
     "spark.sql.artifact.isolation.enabled" -> "false") ++
-    _root_.graft.store.NioLocalFileSystem.Conf :+ ("fs.file.impl.disable.cache" -> "true")
+    _root_.graft.store.NioLocalFileSystem.Conf
 
   /** A copy of `spark` that evaluates every expression interpreted: a
     * new session over the same shared state (cache, catalog, context)
@@ -116,6 +125,17 @@ object EngineSession {
     * take it, so they create files as the session's writes do. */
   def hadoopConf(spark: SparkSession): Configuration =
     spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
+
+  /** The rows of `df`'s cached relation once a job has filled it: the
+    * cache counts them as it builds its batches, so reading the count
+    * runs no job. None while `df` is not cached or not filled. */
+  def cachedRows(df: DataFrame): Option[Long] = {
+    val ds = df.asInstanceOf[classic.Dataset[_]]
+    ds.sparkSession.sharedState.cacheManager.lookupCachedData(ds)
+      .map(_.cachedRepresentation.cacheBuilder)
+      .filter(_.isCachedColumnBuffersLoaded)
+      .map(_.rowCountStats.value.longValue)
+  }
 
   /** `df` with a `coalesce(1)` above each full outer join. Over inputs
     * of one partition such a join is one partition too, but Spark

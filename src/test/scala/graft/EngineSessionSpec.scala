@@ -317,6 +317,37 @@ class EngineSessionSpec extends SparkTestBase {
     assert(batch.map { case (id, vs) => id -> canon(vs.get) } == oracle)
   }
 
+  test("a cohort whose slice holds more than OnePartitionMaxRows rows keeps a task per core") {
+    // 80 series over three hours: 14.4 k rows in the cohort's slice
+    val start = until.getTime / 1000 - 180 * 60
+    val many = MetricSource.ofFrame(spark.range(0L, 80L * 180).select(
+      org.apache.spark.sql.functions.concat(lit("h."), (col("id") % 80).cast("string"),
+        lit(".cpu")).as("metric"),
+      (lit(start) + (col("id") / 80).cast("long") * 60).cast("timestamp").as("ts"),
+      (col("id") % 97).cast("double").as("value")))
+    val specs = Seq(
+      monitor(1, Seq("sumSeries(h.*.cpu)"), "max > 100"),
+      monitor(2, Seq("movingAverage(h.1*.cpu, 5)"), "mean > 40"),
+      monitor(3, Seq("h.3.cpu", "averageSeries(h.2*.cpu)"), "count > 0").copy(minutes = 60))
+    val tmp = Files.createTempDirectory("graft-engine-many").toString
+    var batch: Map[Long, scala.util.Try[Seq[Verdict]]] = Map.empty
+    val plans = planned(specs.size + 2) {
+      batch = Runner.runBatch(spark, many, specs, until, s"$tmp/job_data", s"$tmp/job_errors",
+        parallelism = 2)
+    }
+    // still the engine session, but the reductions over the slice shuffle
+    val collects = plans.filter(_._1 == "collect")
+    assert(collects.size == specs.size && collects.forall(!_._2), plans)
+    assert(collects.count(_._3 > 0) == specs.size, collects)
+    specs.foreach(sp => assert(canon(batch(sp.id).get) ==
+      canon(Runner.evaluate(spark, many, sp, until)), sp.targets))
+    // a per-job run goes by its window alone: its metric filter reaches
+    // the scan, and it reads the series it matches as one partition
+    val single = planned(2)(assert(canon(Runner.runOnce(spark, many, specs(0), until,
+      s"$tmp/single/job_data", s"$tmp/single/job_errors")) == canon(batch(1).get)))
+    assert(single.filter(_._1 == "collect").map(_._3) == Seq(0), single)
+  }
+
   test("a listener registered after the scheduler is built sees the engine's collects; a conf change gets a new engine") {
     val tmp = Files.createTempDirectory("graft-engine-listener").toString
     val sch = Scheduler.forSourceWithAlerts(spark, source, s"$tmp/job_data",
