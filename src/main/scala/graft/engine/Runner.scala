@@ -1,7 +1,7 @@
 package graft.engine
 
 import java.sql.Timestamp
-import java.util.concurrent.{Executors, FutureTask}
+import java.util.concurrent.Executors
 
 import scala.util.{Success, Try}
 
@@ -147,58 +147,45 @@ object Runner {
 
   /** E1 persistence, one group commit for `runs`: ONE `job_data` append
     * with a row per run (the JSON chart payload — reference
-    * db/schema.rb:29-36) and, when any run has failing verdicts, ONE
-    * `job_errors` append with a row per failing verdict
+    * db/schema.rb:29-36) and then, when any run has failing verdicts,
+    * ONE `job_errors` append with a row per failing verdict
     * (db/schema.rb:38-48). Each is `partitionBy("job_id")` at its table
     * root, so the layout is `<root>/job_id=N/part-*.parquet` with
     * columns `window_end, status, data` and `at, message, status`.
     *
-    * Appends to one root go through [[graft.store.SharedRoot.append]],
-    * which serializes them per root: concurrent appends to a root would
-    * delete each other's `_temporary/0/` staging. So concurrent groups
-    * (a cohort tick and a single-job tick, or two `runOnce` calls)
-    * commit safely, one after the other. The `job_errors` append runs on
-    * a new thread, which inherits the caller's Spark local properties
-    * (the FAIR pool name), alongside the `job_data` append; the call
-    * returns when both have committed and throws if either failed. The
-    * rows are driver-local (already collected by the runs' scans), so
-    * neither write touches the store.
+    * Both appends go through [[graft.store.SharedRoot.append]], which
+    * writes the rows from the driver (they are driver-local, already
+    * collected by the runs' scans) and runs no Spark job. Its file names
+    * are unique, so concurrent groups (a cohort tick and a single-job
+    * tick, or two `runOnce` calls) write to one root at once safely.
     *
-    * The two appends are neither ordered nor atomic together, and a
+    * `job_data` is written first and `job_errors` after it, and a
     * failure belongs to the whole group:
-    *  - when the `job_data` append fails and the `job_errors` one
-    *    commits, `job_errors` keeps rows of runs whose `job_data` rows
-    *    never landed (and that the caller reports as failed);
-    *  - when either append fails, the call throws for every run of the
-    *    group, including runs whose rows a partly committed append had
-    *    already moved in. A write fault tied to one run (say an
-    *    unwritable `<root>/job_id=N`) therefore fails its neighbours
-    *    too, on every group it joins. */
+    *  - when the `job_data` append fails, nothing of the group is
+    *    written (no `job_errors` rows without their `job_data` rows);
+    *  - when the `job_errors` append fails, the `job_data` rows stay;
+    *  - either way the call throws for every run of the group. A write
+    *    fault tied to one run (say an unwritable `<root>/job_id=N`)
+    *    therefore fails its neighbours too, on every group it joins. */
   def persistRuns(spark: SparkSession, runs: Seq[Run], jobDataPath: String,
       jobErrorsPath: String): Unit =
     if (runs.nonEmpty) {
       import spark.implicits._
-      val errors = for {
-        r <- runs
-        v <- r.verdicts if !v.passed
-      } yield (r.spec.id, v.windowEnd, v.message, jobStatus(r.verdicts))
-      val errorsAppend = Option.when(errors.nonEmpty) {
-        val task = new FutureTask[Unit](() => EngineSession.withActive(spark)(
-          SharedRoot.append(errors.toDF("job_id", "at", "message", "status"), jobErrorsPath,
-            "job_id")))
-        new Thread(task).start()
-        task
-      }
       // one row per run holding its whole chart: the projection folds
-      // into a local table scan, so the write is one job (no exchange)
-      val data = Try(SharedRoot.append(runs
+      // into a local table scan, so the rows never leave the driver
+      SharedRoot.append(runs
         .map(r => (r.spec.id, r.verdicts.headOption.map(_.windowEnd).orNull,
           jobStatus(r.verdicts), r.chart))
         .toDF("job_id", "window_end", "status", "chart")
         .select(col("job_id"), col("window_end"), col("status"), to_json(col("chart")).as("data")),
-        jobDataPath, "job_id"))
-      errorsAppend.foreach(_.get())
-      data.get
+        jobDataPath, "job_id")
+      val errors = for {
+        r <- runs
+        v <- r.verdicts if !v.passed
+      } yield (r.spec.id, v.windowEnd, v.message, jobStatus(r.verdicts))
+      if (errors.nonEmpty)
+        SharedRoot.append(errors.toDF("job_id", "at", "message", "status"), jobErrorsPath,
+          "job_id")
     }
 
   /** E1: evaluate + persist + (throttled) alert rows. Returns verdicts.
@@ -269,8 +256,7 @@ object Runner {
     * so each inherits the calling thread's Spark local properties (the
     * FAIR pool name). When all K have returned, the runs that computed
     * are persisted as one group ([[persistRuns]]): one `job_data`
-    * append, and the `job_errors` append alongside it on a thread
-    * started from the calling thread. Results are keyed by spec id, and
+    * append, then at most one `job_errors` append. Results are keyed by spec id, and
     * returned only after the group commit: a run whose compute throws
     * is a `Failure` for its spec alone; a group write that throws is a
     * `Failure` for every run of the group, even when the fault lies in
@@ -290,9 +276,14 @@ object Runner {
     * as one partition when that count is at most
     * [[OnePartitionMaxRows]] ([[onePartition]]).
     *
-    * The cached slice is window-bounded (the whole point of monitor
-    * windows: KB-to-MB per job even at 100 TB of history), so pinning it
-    * for the batch is safe. */
+    * The cached slice is window-bounded, but not by one job's series:
+    * it holds every series of the store for the union window (the scan
+    * has no metric filter), so its size is the store's series count
+    * times the union window's minutes, whatever the cohort's targets
+    * match. Pinning it for the batch is safe while that product is
+    * small; [[OnePartitionMaxRows]] is where a run stops reading it as
+    * one partition, and a store of very many series would fill a large
+    * slice on every cohort tick. */
   def runBatch(spark: SparkSession, source: MetricSource, specs: Seq[MonitorSpec],
       now: Timestamp, jobDataPath: String, jobErrorsPath: String,
       parallelism: Int = 1): Map[Long, Try[Seq[Verdict]]] =

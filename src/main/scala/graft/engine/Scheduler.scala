@@ -189,13 +189,15 @@ final class Scheduler(
     * table, db/schema.rb:62) so a restarted scheduler resumes the same
     * schedule instead of re-deriving "next after boot". Versioned
     * through [[graft.store.VersionedTable]]: a failed or interrupted
-    * save leaves the previous version loadable. */
+    * save leaves the previous version loadable. Each version is one
+    * parquet file written from the driver
+    * ([[graft.store.SharedRoot.append]]). */
   def saveState(spark: SparkSession, path: String): Unit = {
     import spark.implicits._
     val df = slots.asScala.toSeq
       .map { case (id, s) => (id, s.nextRun.map(_.toEpochMilli): Option[Long]) }
       .toDF("job_id", "next_run_millis")
-    graft.store.VersionedTable.publish(spark, path)(df.write.parquet(_))
+    graft.store.VersionedTable.publish(spark, path)(graft.store.SharedRoot.append(df, _))
   }
 
   /** Restore persisted `next_run`s onto registered jobs. A path that was

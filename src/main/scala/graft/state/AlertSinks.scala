@@ -135,9 +135,9 @@ object AlertDispatcher {
 
   /** Append delivery records to the parquet alerts table, one file tree
     * per channel (bounded driver-local rows: alerts × keys), through
-    * [[graft.store.SharedRoot.append]]: appends to the table's root are
-    * serialized per root, so the cycles of every monitor path share it
-    * safely. */
+    * [[graft.store.SharedRoot.append]]: written from the driver under
+    * unique file names, so the cycles of every monitor path share the
+    * table's root safely. */
   def persist(spark: SparkSession, deliveries: Seq[Delivery], path: String): Unit = {
     import spark.implicits._
     if (deliveries.nonEmpty) graft.store.SharedRoot.append(deliveries.toDF(), path, "channel")

@@ -117,14 +117,16 @@ object AlertThrottle {
     * dispatcher's stderr log channel delivers it, so a page is never
     * dropped without a trace.
     *
-    * The load is a Spark job only when the table changed since this
-    * JVM's last cycle over `statePath`: the cycle keeps the state it
-    * last published, with that publish's stamp, and reuses it while
+    * A cycle over a table it published itself runs no Spark job. The
+    * load is a job only when the table changed since this JVM's last
+    * cycle over `statePath`: the cycle keeps the state it last
+    * published, with that publish's stamp, and reuses it while
     * [[graft.store.VersionedTable.stamp]] (filesystem calls) still
     * names the same publish. A save made outside the cycle, or a
     * directory deleted and re-created, changes the stamp and is read
     * from disk. The kept state is replaced only after a publish
-    * succeeds.
+    * succeeds. The delivery-audit append and the state publish are
+    * written from the driver ([[graft.store.SharedRoot.append]]).
     *
     * Delivery is AT-LEAST-ONCE. The state is published only after
     * dispatch and the delivery-audit append, so a cycle that fails in
@@ -177,12 +179,14 @@ object AlertThrottle {
   private val StateSchema = new StructType()
     .add("job_id", LongType).add("status", StringType).add("last_alerted_ms", LongType)
 
-  /** Publish `st` as the table's new version; returns its root. */
+  /** Publish `st` as the table's new version, one parquet file written
+    * from the driver ([[graft.store.SharedRoot.append]], no Spark job);
+    * returns its root. */
   def saveStateTable(spark: SparkSession, path: String,
       st: Map[Long, ThrottleState]): String = {
     import spark.implicits._
     val df = st.toSeq.map { case (j, s) => (j, s.status, s.lastAlertedAtMillis) }
       .toDF("job_id", "status", "last_alerted_ms")
-    graft.store.VersionedTable.publish(spark, path)(df.coalesce(1).write.parquet(_))
+    graft.store.VersionedTable.publish(spark, path)(graft.store.SharedRoot.append(df, _))
   }
 }

@@ -14,6 +14,11 @@ import graft.ext.AtomicSink
   * range layout. (Single files commit through [[AtomicSink]], catalog
   * tables through [[Bucketing.replaceTable]].)
   *
+  * The table decides how a version is written: the two state tables
+  * write theirs from the driver as one file ([[SharedRoot.append]]),
+  * and the CDX layout with Spark jobs (`df.write`). A version is
+  * complete when the callback returns, whichever way it was written.
+  *
   * Layout: `<dir>/v=N` holds complete versions and `<dir>/_current`
   * names the published one. [[publish]] writes a complete `v=N`, then
   * swaps the pointer with [[AtomicSink.writeCommitted]] (an atomic

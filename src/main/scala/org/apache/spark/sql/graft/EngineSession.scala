@@ -1,6 +1,7 @@
 package org.apache.spark.sql.graft
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{classic, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.FullOuter
 import org.apache.spark.sql.catalyst.plans.logical.{Join, Repartition}
@@ -42,9 +43,9 @@ object EngineSession {
     * cached-batch column accessor, the aggregation row joiner) would
     * then recompile on every tick.
     *
-    * A tick creates ~50 local files and directories (`job_data`,
-    * `job_errors`, the throttle state, the delivery audit, their `.crc`
-    * files and `_temporary` staging), and Hadoop's stock `file:`
+    * A tick creates local files and directories (`job_data`,
+    * `job_errors`, the throttle state, the delivery audit and their
+    * `.crc` files), and Hadoop's stock `file:`
     * FileSystem forks a `chmod` for each. The engine's Hadoop conf names
     * [[graft.store.NioLocalFileSystem]] instead
     * ([[graft.store.NioLocalFileSystem.Conf]], with the `file:` cache off
@@ -125,6 +126,13 @@ object EngineSession {
     * take it, so they create files as the session's writes do. */
   def hadoopConf(spark: SparkSession): Configuration =
     spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
+
+  /** Refresh every cached frame that reads under `path`, as Spark's own
+    * insert does after it writes there. */
+  def recacheByPath(spark: SparkSession, path: Path, fs: FileSystem): Unit = {
+    val session = spark.asInstanceOf[classic.SparkSession]
+    session.sharedState.cacheManager.recacheByPath(session, path, fs)
+  }
 
   /** The rows of `df`'s cached relation once a job has filled it: the
     * cache counts them as it builds its batches, so reading the count

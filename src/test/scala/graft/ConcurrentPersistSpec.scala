@@ -1,11 +1,10 @@
 package graft
 import java.nio.file.Files
 import java.sql.Timestamp
-/** Regression guard for the shared-committer race: an append stages
-  * under `<root>/_temporary/0/` and deletes it on commit, so two appends
-  * to one table root at once delete each other's files. Every run
-  * appends at the `job_data` / `job_errors` root, and
-  * `store.SharedRoot.append` serializes the appends to each root. */
+/** Concurrent appends to one table root all land. Every run appends at
+  * the `job_data` / `job_errors` root; `store.SharedRoot.append` writes
+  * each file under a unique name, so appends to one root at once take
+  * no lock and lose no rows. */
 class ConcurrentPersistSpec extends SparkTestBase {
   test("concurrent runOnce for different jobs commits safely") {
     val tmp = Files.createTempDirectory("graft-conc-probe").toString

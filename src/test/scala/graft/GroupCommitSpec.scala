@@ -14,8 +14,9 @@ import graft.model.{JobStatus, MonitorSpec}
 import graft.state.AlertSinks
 
 /** A tick's runs persist as one group: one `job_data` append and at
-  * most one `job_errors` append, and a run is done (status, throttle
-  * cycle, page) only once its group has committed. */
+  * most one `job_errors` append, written from the driver, and a run is
+  * done (status, throttle cycle, page) only once its group has
+  * committed. */
 class GroupCommitSpec extends SparkTestBase {
 
   private val at = Timestamp.valueOf("2024-01-15 12:00:00")
@@ -60,7 +61,7 @@ class GroupCommitSpec extends SparkTestBase {
     sch.shutdown()
   }
 
-  test("a cohort tick writes job_data in one job and job_errors in one job") {
+  test("a cohort tick writes job_data, job_errors, the delivery audit and the state in no Spark job") {
     val tmp = Files.createTempDirectory("graft-group-jobs").toString
     val sc = spark.sparkContext
     // the plan of every SQL execution, and the execution of every job
@@ -100,8 +101,12 @@ class GroupCommitSpec extends SparkTestBase {
       }
       assert(sch.snapshot.map(_.lastStatus) == Seq(JobStatus.Success, JobStatus.Failed,
         JobStatus.Failed, JobStatus.Success, JobStatus.Failed))
-      assert(writeJobs("job_data") == 1)
-      assert(writeJobs("job_errors") == 1)
+      // the group write, the delivery append and the state publish are
+      // written from the driver: the tick's jobs are the slice's fill and
+      // one collect per run, and none of them writes
+      Seq("job_data", "job_errors", "deliveries", "alert_state").foreach(t =>
+        assert(writeJobs(t) == 0, t))
+      assert(jobs.asScala.count(_._2 != "after-tick") == 1 + 5, jobs.toString)
     } finally sc.removeSparkListener(listener)
     // every run still holds its own job_id partition, one row each
     val rows = spark.read.parquet(s"$tmp/job_data").collect()
