@@ -37,8 +37,11 @@ import org.apache.spark.sql.types.StringType
   * Spark's file listing skips) and renamed to `part-*.parquet` once
   * every file of the append is complete. A reader never lists a partial
   * file, and an append that throws deletes what it wrote, renamed files
-  * included. File names are unique, so appends to one root need no lock
-  * and may run at once, from any number of threads of one driver. */
+  * included. An append is one write job: its files carry one UUID of
+  * their own (`part-00000-<uuid>.c000.*`), as the files of one Spark
+  * write job carry the job's. Names are unique across appends, so
+  * appends to one root need no lock and may run at once, from any
+  * number of threads of one driver. */
 object SharedRoot {
 
   /** Append `df` to the parquet table at `root`, partitioned by
@@ -81,10 +84,11 @@ object SharedRoot {
       val ext = factory.getFileExtension(context)
       // (hidden, visible) for each file
       val files = ArrayBuffer.empty[(Path, Path)]
+      val jobUuid = UUID.randomUUID
       try {
         groups.foreach { case (sub, groupRows) =>
           val dir = if (sub.isEmpty) base else new Path(base, sub)
-          val name = s"part-00000-${UUID.randomUUID}.c000$ext"
+          val name = s"part-00000-$jobUuid.c000$ext"
           val hidden = new Path(dir, s".$name")
           files += hidden -> new Path(dir, name)
           val writer = factory.newInstance(hidden.toString, dataSchema, context)

@@ -61,6 +61,32 @@ class GroupCommitSpec extends SparkTestBase {
     sch.shutdown()
   }
 
+  test("a cohort tick writes job_data in one job and job_errors in one job") {
+    val tmp = Files.createTempDirectory("graft-group-one-job").toString
+    val sent = new ConcurrentLinkedQueue[String]()
+    val sch = scheduler(tmp, sent)
+    // five runs, three of them failing with job_errors rows
+    Seq(cohort(1, "count > 0"), cohort(2, "mean > 1000000"), cohort(3, "count < 0"),
+      cohort(4, "mean > 0"), cohort(5, "max < 0"))
+      .foreach(sch.register(_, at.toInstant.minusSeconds(60)))
+    sch.tick(at.toInstant); sch.awaitIdle()
+    // the write job of each file, from its name: part-<task>-<job uuid>.c<n>.<ext>
+    val JobFile = """part-\d{5}-([0-9a-f-]{36})\.c\d{3}\..*parquet""".r
+    def writeJobs(table: String) = {
+      val files = new java.io.File(s"$tmp/$table").listFiles().toSeq
+        .filter(_.getName.startsWith("job_id="))
+        .flatMap(_.listFiles().toSeq.map(_.getName)).collect { case JobFile(job) => job }
+      (files.size, files.toSet)
+    }
+    val (dataFiles, dataJobs) = writeJobs("job_data")
+    val (errorFiles, errorJobs) = writeJobs("job_errors")
+    // one file per run's job_id partition, all of them from one job
+    assert(dataFiles == 5 && dataJobs.size == 1, dataJobs)
+    assert(errorFiles == 3 && errorJobs.size == 1, errorJobs)
+    assert(dataJobs != errorJobs)
+    sch.shutdown()
+  }
+
   test("a cohort tick writes job_data, job_errors, the delivery audit and the state in no Spark job") {
     val tmp = Files.createTempDirectory("graft-group-jobs").toString
     val sc = spark.sparkContext
